@@ -153,33 +153,54 @@ def embeddings_table(out_dir: str, rng, n: int = 2_000, dim: int = 64) -> int:
     return n
 
 
-def ratings_tables(out_dir: str, seed: int) -> dict[str, int]:
+# The shape of the engine's sf0.1 ``orders``/``lineitem`` tables, as measured
+# on them: 150 000 orders with customer keys uniform over 15 000 customers
+# (10.0 orders each on average), Poisson(4) lines per order (2 764 orders
+# without lines, at most 17), part keys uniform over 20 000 parts, and
+# quantities uniform over 1..50.  That gives 599 351 ratings, 40 per
+# customer, and 13.1 M co-rating pair events.
+SF01_ORDERS, SF01_CUSTOMERS, SF01_PARTS, SF01_LINES_PER_ORDER = 150_000, 15_000, 20_000, 4.0
+ORDERKEY_OFF, CUSTKEY_OFF = 10_000_000, 1_000_000
+
+
+def ratings_tables(out_dir: str, seed: int, copies: int = 3, orders: int = 130_000,
+                   spread: int = 8) -> dict[str, int]:
     """``lineitem``/``orders`` for ``recsys_topk``: the flagship reads the
     ratings ``avg(l_quantity)`` per ``(o_custkey, l_partkey)``.
 
-    1.65 M lineitem rows, above the flagship's 1.5 M-row dispatch threshold
-    (checked against the package's constant by the workload), so its
-    relational self-join arm runs.  Users are sparse (≈2 orders of 1..7
-    lines each) over a 2 500-item catalogue with skewed popularity: the pair
-    stage emits a few million co-rating events per query, and enough item
-    pairs reach the support floor for a full top-K."""
+    ``copies`` key-shifted draws of sf0.1-shaped tables (disjoint order and
+    customer key ranges, one shared part catalogue), as in
+    ``tools/bench_flagship_scale.py``, each with ``orders`` of sf0.1's
+    150 000 orders: about 1.56 M lineitem rows, just above the flagship's
+    1.5 M-row dispatch threshold (checked against the package's constant by
+    the workload), so its relational self-join arm runs at the least input
+    that reaches it.  Each copy spreads its orders over ``spread`` times as
+    many customers as sf0.1 has, so a customer with orders rates about 7
+    items instead of 40.  Pairs within one order stay (about 1 M per copy),
+    pairs across a customer's orders shrink with the spread: at the
+    defaults the pair stage sees about 6.5 M pair events per query instead
+    of the 39 M of three plain sf0.1 copies."""
     rng = np.random.default_rng([seed, 2])
-    n_users, n_items, n_ord = 230_000, 2_500, 412_000
-    ok = np.arange(n_ord) + 10_000_000 * (seed % 7)  # shifted key range
-    od = rng.integers(0, 2404, n_ord)
-    _write(out_dir, "orders", {
-        "o_orderkey": ok,
-        "o_custkey": rng.integers(0, n_users, n_ord) + 1_000_000 * (seed % 5),
-        "o_orderstatus": pa.array(np.array(["F", "O", "P"])[rng.integers(0, 3, n_ord)]),
-        "o_totalprice": np.round(rng.uniform(1000.0, 500_000.0, n_ord), 2),
-        "o_orderdate": _ts(od),
-        "o_orderpriority": pa.array(np.array(PRIORITIES)[rng.integers(0, 5, n_ord)]),
-    })
-    li = _lineitem(rng, ok, od, n_items, 1_000)
-    pop = rng.zipf(1.3, len(li["l_orderkey"])) - 1  # skewed item popularity
-    li["l_partkey"] = (pop + rng.integers(0, n_items, len(pop)) * (pop >= n_items)) % n_items
-    _write(out_dir, "lineitem", li)
-    return {"orders": n_ord, "lineitem": len(li["l_orderkey"])}
+    order_tables, lines = [], []
+    for c in range(copies):
+        ok = np.arange(orders) + c * ORDERKEY_OFF
+        per = rng.poisson(SF01_LINES_PER_ORDER, orders)
+        n = int(per.sum())
+        order_tables.append(pa.table({
+            "o_orderkey": ok,
+            "o_custkey": rng.integers(0, SF01_CUSTOMERS * spread, orders)
+            + c * CUSTKEY_OFF,
+        }))
+        lines.append(pa.table({
+            "l_orderkey": np.repeat(ok, per),
+            "l_partkey": rng.integers(0, SF01_PARTS, n),
+            "l_quantity": rng.integers(1, 51, n).astype("float64"),
+        }))
+    os.makedirs(out_dir, exist_ok=True)
+    for name, parts in (("orders", order_tables), ("lineitem", lines)):
+        pq.write_table(pa.concat_tables(parts), os.path.join(out_dir, f"{name}.parquet"),
+                       row_group_size=256_000)
+    return {"orders": copies * orders, "lineitem": sum(t.num_rows for t in lines)}
 
 
 def _doc_texts(rng, n: int) -> list[str]:

@@ -3,7 +3,7 @@
 
 Run from the repository root:
 
-    python3 perfbench/run.py --workload recsys_topk --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload recsys_topk --seed 1 --seconds 5 --trace 0
 
 One run: generate the workload's inputs from ``--seed``, compute the
 expected results with DuckDB, start a local Spark session on every core,
@@ -43,22 +43,15 @@ WARMUP_RULE = (
     f"the one before, at most {WARMUP_MAX}"
 )
 TAIL_BEYOND = 10
-# Per-layer times that can read exactly 0 on every run of a gated workload:
-# it never enters the layer (recsys_topk streams nothing; stream_ingest runs
-# no registry query, recsys or memo build), or, for spark.gc_s, one traced
-# drain often allocates less than the young generation holds.  A time that
-# reads the same on every run is not a measurement, so these are printed but
-# left out of the result line; they carry numbers where their layer works.
-LAYER_PRINTED = (
-    "embeddings.index_build_s", "dedup.labels_build_s", "recsys.plan_s",
-    "dedup.plan_s", "text.plan_s", "caching.build_s", "query.plan_s",
-    "query.exec_s", "embeddings.probe_s", "streaming.batch_s", "spark.gc_s",
-)
-# The driver heap is fixed in size (young generation too) and touched at JVM
-# start: how much of it GC heuristics happen to touch no longer moves the
-# resident set, so peak_rss_mb moves with memory outside the heap (Python
-# driver and workers, JVM off-heap).  Heap pressure shows in spark.gc_s.
-JVM_HEAP_OPTS = "-Xms{mem} -Xmn1g -XX:+AlwaysPreTouch"
+
+
+def result_metrics(kind: str) -> set[str]:
+    """The metric names ``BENCHMARK.json`` lists under ``kind``: the result
+    line carries these; every other metric is printed only: it reads 0 on
+    every gated workload, duplicates a listed one or is too noisy to gate
+    (see DESIGN.md)."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        return {m["name"] for m in json.load(f)[kind]}
 
 
 def parse_args():
@@ -97,13 +90,8 @@ def environment(work: str) -> dict[str, str]:
         "cores": str(cores()),
         "shuffle_partitions": str(cores()),
         "driver_memory": os.environ["ENGINE_DRIVER_MEMORY"],
-        "driver_jvm": jvm_heap_opts(),
         "SPARK_LOCAL_DIRS": os.path.relpath(local, ROOT),
     }
-
-
-def jvm_heap_opts() -> str:
-    return JVM_HEAP_OPTS.format(mem=os.environ["ENGINE_DRIVER_MEMORY"])
 
 
 def start_session(work: str):
@@ -120,11 +108,40 @@ def start_session(work: str):
         .config("spark.sql.ui.retainedExecutions", keep)
         .config("spark.sql.warehouse.dir", os.path.join(work, "warehouse"))
         .config("spark.driver.extraJavaOptions",
-                f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData {jvm_heap_opts()}")
+                f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+WORK_DIRS: list[str] = []  # the run's work directory, once made
+
+
+def on_sigterm(*_) -> None:
+    """A caller's timeout: kill the driver JVM and the Python workers, wait
+    for them, remove the run's work directory and exit at once.  The main
+    thread may be waiting inside a py4j call for a job to end, and a
+    ``SystemExit`` raised there does not reliably unwind."""
+    from counters import descendants, running
+
+    started = descendants(os.getpid())
+    for pid in started:
+        try:
+            os.kill(pid, signal.SIGKILL)
+        except ProcessLookupError:
+            pass
+    deadline = time.monotonic() + 30
+    for pid in started:
+        try:
+            while os.waitpid(pid, os.WNOHANG) == (0, 0) and time.monotonic() < deadline:
+                time.sleep(0.05)
+        except ChildProcessError:  # not our child: init reaps it
+            while running(pid) and time.monotonic() < deadline:
+                time.sleep(0.05)
+    for work in WORK_DIRS:
+        shutil.rmtree(work, ignore_errors=True)
+    os._exit(143)
 
 
 def stop_session(spark) -> None:
@@ -247,26 +264,28 @@ class Runner:
         return time.monotonic() - t0, steps
 
 
-def end_to_end(ops, wall: float, setup_s: float, peak_mb: float) -> tuple[dict, dict]:
-    """The gated end-to-end metrics, and the ones only printed: the tail,
-    because at the few samples a run affords it is the maximum of a handful
-    and too noisy to gate (see DESIGN.md)."""
+def end_to_end(ops, wall: float, setup_s: float, peak_mb: float) -> dict:
+    """Every end-to-end metric.  ``queries_per_s`` is a fixed multiple of
+    ``rows_per_s`` wherever every operation reads the same input (all
+    workloads but ``interactive``), and at the few samples a run affords
+    ``latency_tail_s`` is the maximum of a handful; both are printed but not
+    gated (see DESIGN.md)."""
     good = [r for _i, _w, r in ops if r is not None]
     lat = [x for r in good for x in r.latencies]
     t, t_label = tail(lat)
     rows = sum(r.rows for r in good)
     queries = sum(r.queries for r in good)
-    gated = {
+    return {
         "setup_s": (setup_s, "s"),
         "rows_per_s": (rows / wall, "1/s"),
         "queries_per_s": (queries / wall, "1/s"),
         "latency_p50_s": (statistics.median(lat), "s"),
+        "latency_tail_s": (t, f"s, {t_label}"),
         "peak_rss_mb": (peak_mb, "MB"),
     }
-    return gated, {"latency_tail_s": (t, f"s, {t_label}")}
 
 
-def per_layer(w, rec, counters, ops, setup: dict, overhead_s: float) -> tuple[dict, dict]:
+def per_layer(w, rec, counters, ops, setup: dict, overhead_s: float) -> dict:
     """Per-layer metrics: set-up layers once per run, everything else as a
     mean per operation of the traced window.  The dedup candidate and
     verified counts come from the near-duplicate labels build, wherever in
@@ -364,21 +383,25 @@ def per_layer(w, rec, counters, ops, setup: dict, overhead_s: float) -> tuple[di
         log(f"  op {i:>3} {w.op_name(i):<24} wall {walls[i]:7.3f} s  jobs {t.jobs:4d}  "
             f"stages {t.stages:4d}  tasks {t.tasks:5d}  run {t.run_s:7.2f} s  "
             f"cpu {t.cpu_s:7.2f} s  shuffle w {t.shuffle_write_bytes / 1e6:8.1f} MB")
+        top = sorted((sid for sid in range(*roots[i].stages) if stages.get(sid, {}).get("tasks")),
+                     key=lambda sid: -stages[sid]["run_s"])[:4]
+        log("           its longest stages: " + "; ".join(
+            f"{sid}: run {stages[sid]['run_s']:.2f} s, shuffle r "
+            f"{stages[sid]['shuffle_read'] / 1e6:.1f} MB "
+            f"w {stages[sid]['shuffle_write'] / 1e6:.1f} MB"
+            for sid in top))
     ex = counters.executor_totals()
     log("executor totals over the whole run: " + ", ".join(
         f"{k}={v:.6g}" for k, v in ex.items()))
     log("self time by layer (traced window, s per operation): " + ", ".join(
         f"{layer}={self_s(layer):.3f}" for layer in
         sorted({s.layer for s in in_window})))
-    printed = {k: m.pop(k) for k in LAYER_PRINTED}
-    return m, printed
+    return m
 
 
 def main() -> int:
     args = parse_args()
-    # A SIGTERM (a caller's timeout) unwinds through the finally blocks that
-    # stop the JVM and remove the run's work directory.
-    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
+    signal.signal(signal.SIGTERM, on_sigterm)
     try:
         import recsys_mapreduce_mrjob_spark  # noqa: F401
         from tests import parity  # noqa: F401
@@ -393,6 +416,7 @@ def main() -> int:
         return 2
     work = os.path.join(ROOT, ".bench_work", f"{args.workload}-{args.seed}-{os.getpid()}")
     os.makedirs(work)
+    WORK_DIRS.append(work)
     try:
         return run(args, work)
     finally:
@@ -400,7 +424,7 @@ def main() -> int:
 
 
 def run(args, work: str) -> int:
-    from counters import RssSampler, SparkCounters
+    from counters import MemorySampler, SparkCounters
     from spans import Recorder
     from workloads import WORKLOADS
 
@@ -441,8 +465,8 @@ def run(args, work: str) -> int:
     if args.trace:
         log(f"tracing: {rec.install()} package attributes wrapped")
         rec.enabled = True
-    rss = RssSampler()
-    rss.start()
+    memory = MemorySampler(counters)
+    memory.start()
     runner = Runner(w, spark, registry, rec, counters)
     try:
         setup.update(w.setup(spark, rec))
@@ -451,15 +475,14 @@ def run(args, work: str) -> int:
         setup_s = time.monotonic() - T_START - gen_s - oracle_s
 
         rec.enabled = False
-        printed: dict = {}
         if args.trace:
             ops, traced = runner.paired_window(args.seconds)
             runner.check(ops, timed=True)
             runner.check(traced, timed=True)
             untraced_wall = sum(x for _i, x, _r in ops)
             traced_wall = sum(x for _i, x, _r in traced)
-            metrics, printed = per_layer(w, rec, counters, traced, setup,
-                                         traced_wall - untraced_wall)
+            metrics = per_layer(w, rec, counters, traced, setup,
+                                traced_wall - untraced_wall)
             log(f"tracing overhead: traced {traced_wall:.3f} s - untraced "
                 f"{untraced_wall:.3f} s = {traced_wall - untraced_wall:+.3f} s over "
                 f"{len(traced)} operation pairs "
@@ -471,24 +494,26 @@ def run(args, work: str) -> int:
                 json.dump(rec.dump(), f)
             log(f"spans: {len(rec.spans)} written to {os.path.relpath(path, ROOT)}")
         else:
-            rss.reset()
+            memory.reset()
             ops, wall = runner.window(args.seconds)
-            peak = rss.peak_mb
+            peak = memory.finish()
+            log(f"memory: {memory.outside_heap / 1e6:.1f} MB peak outside the "
+                f"driver heap + {memory.live_heap / 1e6:.1f} MB live heap")
             log(f"timed operations (s): {[round(x, 3) for _i, x, _r in ops]}")
             runner.check(ops, timed=True)
-            metrics, printed = end_to_end(ops, wall, setup_s, peak)
+            metrics = end_to_end(ops, wall, setup_s, peak)
     finally:
-        rss.stop()
+        memory.stop()
         stop_session(spark)
 
     for e in runner.errors:
         print(e, file=sys.stderr)
     fail_ratio = runner.failed / max(runner.attempted, 1)
+    listed = result_metrics("per_layer" if args.trace else "end_to_end")
     log(f"{'metric':<28}{'value':>18}  unit")
     for k, (v, u) in metrics.items():
-        log(f"{k:<28}{v:>18.6g}  {u}")
-    for k, (v, u) in printed.items():
-        log(f"{k:<28}{v:>18.6g}  {u} (printed, not in the result line)")
+        log(f"{k:<28}{v:>18.6g}  {u}" + ("" if k in listed else
+                                         " (printed, not in the result line)"))
     log(f"{'fail_ratio':<28}{fail_ratio:>18.6g}  ratio "
         f"({runner.failed} failed of {runner.attempted} attempted)")
     ok = runner.failed == 0 and runner.attempted > 0
@@ -496,7 +521,8 @@ def run(args, work: str) -> int:
         "correct": ok,
         "attempted": runner.attempted,
         "failed": runner.failed,
-        "metrics": {k: {"value": v, "unit": u} for k, (v, u) in metrics.items()},
+        "metrics": {k: {"value": v, "unit": u.split(",")[0]}
+                    for k, (v, u) in metrics.items() if k in listed},
     }), flush=True)
     return 0 if ok else 1
 
