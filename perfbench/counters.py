@@ -97,10 +97,13 @@ class SparkCounters:
         return sum(beans.get(i).getCollectionTime() for i in range(beans.size())) / 1e3
 
     def heap_usage(self) -> tuple[int, int]:
-        """(bytes in use, bytes committed) of the driver JVM's heap."""
+        """(bytes in use, bytes reserved) of the driver JVM's heap."""
         u = self._jvm.java.lang.management.ManagementFactory.getMemoryMXBean(
         ).getHeapMemoryUsage()
-        return u.getUsed(), u.getCommitted()
+        return u.getUsed(), u.getMax()
+
+    def jvm_pid(self) -> int:
+        return self._jvm.java.lang.ProcessHandle.current().pid()
 
     def live_heap_bytes(self, max_passes: int = 4) -> int:
         """Heap bytes in use once what the program dropped is freed.  Python
@@ -275,13 +278,14 @@ def _same_space(a: tuple, b: tuple) -> bool:
     return abs(a[2] - b[2]) <= 0.01 * b[2] and abs(a[3] - b[3]) <= 0.01 * b[3]
 
 
-def tree_rss_bytes(root: int) -> int:
+def tree_rss_bytes(root: int, rss=None) -> int:
     """Summed RSS of ``root`` and all its descendants: the Python driver, the
-    driver JVM it launched and the Python workers the JVM forks.  A child
-    caught between fork and exec (the JVM spawns ``chmod`` for every file it
-    writes) maps its parent's pages; it is recognised by a parent-sized
-    address space and resident set, or by a JVM parent's name (the JVM
-    starts no JVM), and not counted twice."""
+    driver JVM it launched and the Python workers the JVM forks; ``rss``
+    maps a pid to a function giving that process's RSS in its place.  A
+    child caught between fork and exec (the JVM spawns ``chmod`` for every
+    file it writes) maps its parent's pages; it is recognised by a
+    parent-sized address space and resident set, or by a JVM parent's name
+    (the JVM starts no JVM), and not counted twice."""
     table = _processes()
     total = 0
     for pid in [root, *descendants(root, table)]:
@@ -290,23 +294,68 @@ def tree_rss_bytes(root: int) -> int:
         if pid != root and parent is not None and (
                 _same_space(me, parent) or me[1] == parent[1] == "java"):
             continue
-        total += me[3]
-    return total * os.sysconf("SC_PAGE_SIZE")
+        total += rss[pid]() if rss and pid in rss else me[3] * os.sysconf("SC_PAGE_SIZE")
+    return total
+
+
+_MAPPING = re.compile(r"([0-9a-f]+)-([0-9a-f]+) ")
+_SMAPS_RSS = re.compile(r"^([0-9a-f]+)-[0-9a-f]+ .*\n(?:.*\n)*?Rss: +(\d+) kB", re.M)
+
+
+def heap_range(pid: int, reserved: int) -> tuple[int, int]:
+    """The address range of a JVM's heap: the run of adjacent mappings in
+    ``/proc/<pid>/maps`` that spans exactly the heap's reserved size (the
+    heap is reserved in one piece at start and split into committed and
+    uncommitted mappings as it grows and shrinks)."""
+    spans = []
+    with open(f"/proc/{pid}/maps") as f:
+        for line in f:
+            lo, hi = _MAPPING.match(line).groups()
+            spans.append((int(lo, 16), int(hi, 16)))
+    for i, (lo, _hi) in enumerate(spans):
+        for j in range(i, len(spans)):
+            if j > i and spans[j][0] != spans[j - 1][1]:
+                break
+            if spans[j][1] - lo == reserved:
+                return lo, spans[j][1]
+            if spans[j][1] - lo > reserved:
+                break
+    raise RuntimeError(f"no run of mappings of pid {pid} spans the "
+                       f"{reserved} reserved heap bytes")
+
+
+def rss_outside(pid: int, lo: int, hi: int) -> int:
+    """Resident bytes of ``pid`` outside the address range ``[lo, hi)``,
+    summed over the mappings of ``/proc/<pid>/smaps``."""
+    with open(f"/proc/{pid}/smaps") as f:
+        text = f.read()
+    total = 0
+    for start, kb in _SMAPS_RSS.findall(text):
+        if not lo <= int(start, 16) < hi:
+            total += int(kb)
+    return total * 1024
 
 
 class MemorySampler:
     """The memory a run holds: the peak, over samples every ``interval_s``,
     of the summed RSS of :func:`tree_rss_bytes` outside the driver JVM's
-    heap (the heap's resident pages approximated by its committed bytes),
+    heap (every resident page of the JVM outside the heap's address range),
     plus the JVM's live heap (:meth:`SparkCounters.live_heap_bytes`), read
     once the window has ended (:meth:`finish`).  How far the collector lets
     a heap fill with garbage between collections is its own policy and moved
     a sampled peak by a quarter between runs; the live heap moves with what
-    the program keeps there (cached relations, broadcasts, memos)."""
+    the program keeps there (cached relations, broadcasts, memos).  The
+    heap's committed bytes are no stand-in for its resident pages: G1
+    lowers them when it shrinks the heap and releases the pages later, from
+    another thread, and RSS less committed bytes read up to 700 MB high
+    in between."""
 
     def __init__(self, spark_counters, interval_s: float = 0.5):
         self._counters = spark_counters
         self._interval = interval_s
+        jvm = spark_counters.jvm_pid()
+        lo, hi = heap_range(jvm, spark_counters.heap_usage()[1])
+        self._rss = {jvm: lambda: rss_outside(jvm, lo, hi)}
         self._stop = threading.Event()
         self._lock = threading.Lock()
         self._peak = 0
@@ -314,11 +363,7 @@ class MemorySampler:
         self._thread = threading.Thread(target=self._loop, name="memory", daemon=True)
 
     def sample(self) -> int:
-        # The larger of two reads around the RSS scan: a heap that grew in
-        # between is not counted as memory outside it.
-        before = self._counters.heap_usage()[1]
-        rss = tree_rss_bytes(os.getpid())
-        return max(rss - max(before, self._counters.heap_usage()[1]), 0)
+        return tree_rss_bytes(os.getpid(), self._rss)
 
     def _loop(self) -> None:
         while not self._stop.wait(self._interval):

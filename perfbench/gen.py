@@ -247,7 +247,7 @@ def documents_table(out_dir: str, seed: int) -> int:
 
 
 def stream_chunks(
-    src_dir: str, table_dir: str, seed: int, n: int = 5_000, n_chunks: int = 4,
+    src_dir: str, table_dir: str, seed: int, n: int = 5_000, n_chunks: int = 2,
     dup_share: float = 0.10,
 ) -> dict[str, int]:
     """Chunk files for ``stream_ingest`` plus the same rows as one

@@ -3,12 +3,12 @@
 
 Run from the repository root:
 
-    python3 perfbench/run.py --workload recsys_topk --seed 1 --seconds 5 --trace 0
+    python3 perfbench/run.py --workload recsys_topk --seed 1 --seconds 10 --trace 0
 
 One run: generate the workload's inputs from ``--seed``, compute the
 expected results with DuckDB, start a local Spark session on every core,
 run the one-time builds and warm up until operations stop getting faster,
-then run operations in a closed loop (one client) for ``--seconds`` seconds
+then run operations in a closed loop (one client) for about ``--seconds``
 and check every output against its expected result.  The last line of
 standard output is one JSON object; with ``--trace 0`` it carries the
 end-to-end metrics, with ``--trace 1`` the per-layer metrics of a traced
@@ -174,6 +174,16 @@ def tail(samples: list[float]) -> tuple[float, str]:
     return xs[k - 1], f"p{100 * k / n:.1f} (n={n}, {TAIL_BEYOND} samples beyond)"
 
 
+def another(elapsed: float, last: float | None, seconds: float) -> bool:
+    """Whether a window of ``seconds`` starts another operation after
+    ``elapsed`` seconds, the last one having taken ``last``: always a first
+    one, then another while the window would end nearer to ``seconds`` with
+    it than without it.  A window that instead ran until ``seconds`` had
+    passed would run on for up to a whole operation: two 7 s flagship
+    queries in a 10 s window, where the run's time budget affords one."""
+    return last is None or elapsed + last / 2 < seconds
+
+
 class Runner:
     def __init__(self, w, spark, registry, rec, counters):
         self.w, self.spark, self.registry, self.rec = w, spark, registry, rec
@@ -208,10 +218,11 @@ class Runner:
             timer.cancel()
 
     def window(self, seconds: float):
-        """Timed operations, one after another, for ``seconds`` of wall."""
+        """Timed operations, one after another, for about ``seconds`` of
+        wall: see :func:`another`."""
         out = []
         t0 = time.monotonic()
-        while time.monotonic() - t0 < seconds:
+        while another(time.monotonic() - t0, out[-1][1] if out else None, seconds):
             out.append((len(out), *self.one(len(out))))
         return out, time.monotonic() - t0
 
@@ -221,12 +232,15 @@ class Runner:
         speed and any gain from a repeat hit both sides alike."""
         untraced, traced = [], []
         t0 = time.monotonic()
-        while time.monotonic() - t0 < seconds:
+        last = None
+        while another(time.monotonic() - t0, last, seconds):
+            t = time.monotonic()
             i = len(traced)
             for side in (untraced, traced) if i % 2 == 0 else (traced, untraced):
                 self.rec.enabled = side is traced
                 side.append((i, *self.one(i)))
             self.rec.enabled = False
+            last = time.monotonic() - t
         return untraced, traced
 
     def check(self, ops, timed: bool) -> None:
@@ -265,19 +279,20 @@ class Runner:
 
 
 def end_to_end(ops, wall: float, setup_s: float, peak_mb: float) -> dict:
-    """Every end-to-end metric.  ``queries_per_s`` is a fixed multiple of
-    ``rows_per_s`` wherever every operation reads the same input (all
-    workloads but ``interactive``), and at the few samples a run affords
-    ``latency_tail_s`` is the maximum of a handful; both are printed but not
-    gated (see DESIGN.md)."""
-    good = [r for _i, _w, r in ops if r is not None]
-    lat = [x for r in good for x in r.latencies]
+    """Every end-to-end metric.  ``rows_per_s`` is the median over the
+    window's operations of input rows over operation wall, so one operation
+    slowed by a burst of other load on the machine does not move it.
+    ``queries_per_s`` is a fixed multiple of ``rows_per_s`` wherever every
+    operation reads the same input (all workloads but ``interactive``), and
+    at the few samples a run affords ``latency_tail_s`` is the maximum of a
+    handful; both are printed but not gated (see DESIGN.md)."""
+    good = [(w, r) for _i, w, r in ops if r is not None]
+    lat = [x for _w, r in good for x in r.latencies]
     t, t_label = tail(lat)
-    rows = sum(r.rows for r in good)
-    queries = sum(r.queries for r in good)
+    queries = sum(r.queries for _w, r in good)
     return {
         "setup_s": (setup_s, "s"),
-        "rows_per_s": (rows / wall, "1/s"),
+        "rows_per_s": (statistics.median(r.rows / w for w, r in good), "1/s"),
         "queries_per_s": (queries / wall, "1/s"),
         "latency_p50_s": (statistics.median(lat), "s"),
         "latency_tail_s": (t, f"s, {t_label}"),
@@ -500,6 +515,8 @@ def run(args, work: str) -> int:
             log(f"memory: {memory.outside_heap / 1e6:.1f} MB peak outside the "
                 f"driver heap + {memory.live_heap / 1e6:.1f} MB live heap")
             log(f"timed operations (s): {[round(x, 3) for _i, x, _r in ops]}")
+            log("latency samples (s): "
+                f"{[round(x, 3) for _i, _x, r in ops if r for x in r.latencies]}")
             runner.check(ops, timed=True)
             metrics = end_to_end(ops, wall, setup_s, peak)
     finally:
