@@ -1632,12 +1632,13 @@ def q_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # freshness gate read stale on a coin flip).  Below the footer-probed
     # bound the hint pins the semantically small side — the df-capped
     # occurrence keys — so pos_sh never shuffles and dropped shingles die
-    # map-side; above it the hint is withheld (the capped key set is
-    # corpus-scale there) and the planner picks the shuffle strategy.
+    # map-side; above it, or when the footer is unreadable and the size
+    # unknown, the hint is withheld (the capped key set may be
+    # corpus-scale) and the planner picks the shuffle strategy.
     from ..sources.readers import parquet_num_rows
 
-    _nd = parquet_num_rows(sf_dir, "documents") or 0
-    if _nd <= _SPAN_OCC_BROADCAST_MAX_DOCS:
+    _nd = parquet_num_rows(sf_dir, "documents")
+    if _nd is not None and _nd <= _SPAN_OCC_BROADCAST_MAX_DOCS:
         occ_keys = F.broadcast(occ_keys)
     kept = pos_sh.join(occ_keys, "hs")
     grouped = kept.groupBy("hs").agg(

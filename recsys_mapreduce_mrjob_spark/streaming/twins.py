@@ -270,6 +270,29 @@ def _version_of(name: str) -> int | None:
     return int(m.group(1)) if m else None
 
 
+def _complete_versions(
+    path: str, below: int | None = None
+) -> list[tuple[int, str]]:
+    """``(id, dir)`` of every COMPLETE (``_SUCCESS`` present) ``v{id}``
+    under ``path``, ascending by id — optionally only ids strictly
+    ``below`` a batch id (the replay guard: a crashed batch's partial or
+    uncommitted version must not feed its own replay).  ``[]`` when
+    ``path`` does not exist."""
+    import os
+
+    try:
+        names = os.listdir(path)
+    except OSError:
+        return []
+    return sorted(
+        (v, vdir)
+        for d in names
+        if (v := _version_of(d)) is not None
+        and (below is None or v < below)
+        and os.path.exists(os.path.join(vdir := os.path.join(path, d), "_SUCCESS"))
+    )
+
+
 def _claim_bucket_layout(state_dir: str, key: str, n_buckets: int) -> None:
     """Pin (key column, bucket count) in ``{state_dir}/_bucket_layout``
     on first write; fail fast on any later writer that disagrees.
@@ -322,19 +345,8 @@ def bucket_latest_paths(
     import os
 
     latest: dict[int, tuple[int, str]] = {}
-    try:
-        names = os.listdir(state_dir)
-    except OSError:
-        return {}
-    versions = sorted(
-        v for v in (_version_of(d) for d in names) if v is not None
-    )
-    for v in versions:  # ascending: later versions overwrite dict slots
-        if below is not None and v >= below:
-            continue
-        vdir = os.path.join(state_dir, f"v{v}")
-        if not os.path.exists(os.path.join(vdir, "_SUCCESS")):
-            continue
+    # Ascending: later versions overwrite dict slots.
+    for v, vdir in _complete_versions(state_dir, below):
         subs = [d for d in os.listdir(vdir) if d.startswith("bkt=")]
         if not subs:
             if buckets is None or -1 in buckets:
@@ -371,6 +383,152 @@ def read_bucketed_state(spark: SparkSession, state_dir: str) -> DataFrame | None
     return spark.read.parquet(*paths)
 
 
+def _drain(
+    spark: SparkSession,
+    schema: str,
+    src_dir: str,
+    state_dir: str,
+    upsert,
+    on_batch,
+) -> None:
+    """The ONE ``foreachBatch`` driver of the ingestion twins: each
+    parquet file in ``src_dir`` is one micro-batch
+    (``maxFilesPerTrigger=1``), ``upsert(batch_df, batch_id)`` folds it
+    into ``state_dir``, the checkpoint lives in
+    ``{state_dir}/_checkpoint``, and the ``availableNow`` trigger
+    returns once every file present at start is committed.
+
+    ``on_batch(batch_id)``, when given, runs before ``upsert`` for every
+    batch, empty ones included — the crash-injection/observation hook
+    of the resume tests: raising from it kills the stream BEFORE the
+    batch's state commits, exactly the mid-stream failure a restart
+    must recover from."""
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        if on_batch is not None:
+            on_batch(batch_id)
+        upsert(batch_df, batch_id)
+
+    (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+        .writeStream.foreachBatch(run)
+        .option("checkpointLocation", f"{state_dir}/_checkpoint")
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _read_buckets(
+    spark: SparkSession,
+    state_dir: str,
+    batch_id: int,
+    touched: set[int],
+    schema: str | None = None,
+) -> DataFrame | None:
+    """The state of the ``touched`` buckets as a batch's fold must see
+    it: each bucket's newest complete version strictly below
+    ``batch_id`` (layout contract: :func:`_bucketed_fold`).  With no
+    such version, None — or an empty frame of ``schema`` when given.
+
+    The one write-path fail-fast: a state dir holding ANY complete
+    pre-bucketing version (no ``bkt=`` subdirs) raises, whatever its
+    id.  Skipping it would fold from empty state and commit a corrupted
+    version before any reader noticed (code-review r10); and a version
+    at or above ``batch_id`` — out of the replay guard's sight — would
+    be silently overwritten."""
+    if -1 in bucket_latest_paths(state_dir, buckets={-1}):
+        raise ValueError(
+            f"{state_dir} holds a pre-bucketing full-layout version — run "
+            "migrate_state_to_bucketed into a fresh dir first"
+        )
+    paths = bucket_latest_paths(state_dir, below=batch_id, buckets=touched)
+    if paths:
+        return spark.read.parquet(*sorted(paths.values()))
+    return None if schema is None else spark.createDataFrame([], schema)
+
+
+def _write_buckets(
+    state: DataFrame,
+    state_dir: str,
+    batch_id: int,
+    key: str,
+    n_buckets: int,
+    touched,
+) -> None:
+    """Write ``state`` — the new rows of exactly the ``touched``
+    buckets — as version ``{state_dir}/v{batch_id}``, one
+    ``bkt={pmod(xxhash64(key), n_buckets)}`` subdir per bucket.
+    Repartitioning ON the bucket key first lands each bucket in ~one
+    file: without it every write task emits a file per touched bucket
+    (tasks × buckets small files — measured 8× the whole-batch wall at
+    the bench rung), and the next read of the bucket opens them all.
+    The overwrite makes a replayed batch's rewrite idempotent."""
+    state.withColumn("bkt", _bucket_expr(F.col(key), n_buckets)).repartition(
+        len(touched), "bkt"
+    ).write.mode("overwrite").partitionBy("bkt").parquet(
+        f"{state_dir}/v{batch_id}"
+    )
+
+
+def _bucketed_fold(
+    batch: DataFrame,
+    state_dir: str,
+    batch_id: int,
+    key: str,
+    n_buckets: int,
+    fold,
+) -> None:
+    """Fold one micro-batch's partial ``batch`` (already reduced to one
+    row per ``key``) into the bucketed state: persist it, collect the
+    buckets its keys hash into, read those buckets' state, ``fold`` the
+    union of state and partial, and rewrite only the touched buckets.
+    An empty batch writes nothing.  ``fold`` must be associative and
+    commutative over rows of the state schema — the partial is a fold
+    of the raw batch and the result a fold of both.
+
+    The state-layout contract every bucketed twin in this module
+    shares:
+
+    - **Buckets.**  A key lives in bucket ``pmod(xxhash64(key), B)``
+      (:func:`_bucket_expr`); ``(key, B)`` is pinned in
+      ``{state_dir}/_bucket_layout`` on first write
+      (:func:`_claim_bucket_layout`) so a resume configured with another
+      ``B`` fails fast instead of splitting keys across buckets.
+    - **Versions.**  ``{state_dir}/v{batch_id}/bkt={b}`` holds bucket
+      ``b`` as of batch ``batch_id`` and is written only when the batch
+      touched ``b``; a version is complete iff Spark's ``_SUCCESS``
+      marker exists.  The current state is each bucket's newest complete
+      version (:func:`bucket_latest_paths`, :func:`read_bucketed_state`),
+      so per-batch work is O(touched buckets), not O(|state|)
+      (tools/bench_state_ingest.py; ``n_buckets=1`` reproduces the old
+      full-rewrite shape), and older versions are never overwritten
+      while being read.
+    - **Replay guard.**  A batch reads versions strictly below its own
+      id (:func:`_read_buckets`), so a crashed batch's complete but
+      uncommitted version never feeds its replay, and the replay's
+      overwrite is idempotent per bucket (:func:`_write_buckets`).
+    - **Reserved ``v-1``.**  Batch ids start at 0, so ``v-1`` is the one
+      version no stream can replay-overwrite: it holds migrated state
+      (:func:`migrate_state_to_bucketed`) that batch 0 folds from.
+    - **No pre-bucketing state.**  A version with no ``bkt=`` subdirs
+      holds the WHOLE state; readers accept a pure old-layout dir, but
+      writers refuse it (:func:`_read_buckets`)."""
+    part = batch.withColumn("bkt", _bucket_expr(F.col(key), n_buckets)).persist()
+    try:
+        touched = {r["bkt"] for r in part.select("bkt").distinct().collect()}
+        if not touched:
+            return  # empty batch: every bucket keeps its version
+        new = part.drop("bkt")
+        old = _read_buckets(part.sparkSession, state_dir, batch_id, touched)
+        merged = fold(new if old is None else old.unionByName(new))
+        _write_buckets(merged, state_dir, batch_id, key, n_buckets, touched)
+    finally:
+        part.unpersist()
+
+
 def incremental_item_stats(
     spark: SparkSession,
     ratings_dir: str,
@@ -379,36 +537,18 @@ def incremental_item_stats(
     n_buckets: int = _STATE_BUCKETS,
 ) -> None:
     """Incremental maintenance via ``foreachBatch``: a ratings stream
-    merges per-item (n, rating_sum) into parquet state, bucketed by
-    ``pmod(xxhash64(item_id), B)`` and versioned per micro-batch AND
-    bucket — ``{state_dir}/v{batch_id}/bkt={b}`` holds bucket ``b``'s
-    state as of batch ``batch_id``, written ONLY when the batch touched
-    that bucket.
-
-    Per-batch work is O(touched buckets), not O(|state|) (round 10,
-    VERDICT r9 "what's missing" #1): the upsert reads the latest
-    complete version of just the buckets the batch's keys hash into,
-    folds the batch partials in, and rewrites only those buckets into
-    the new version dir (one ``partitionBy("bkt")`` job).  Buckets the
-    batch never touched keep their older version — the reader
-    (:func:`read_bucketed_state`) resolves per-bucket latest, so the
-    assembled state is identical to the old full-rewrite layout
-    bit-for-bit.  At a billion-key dimension with B in the thousands, a
-    small batch rewrites |batch keys| buckets of state instead of the
-    whole table (measured flat while state grows:
-    tools/bench_state_ingest.py; ``n_buckets=1`` reproduces the old
-    full-rewrite shape for the A/B).
+    merges per-item (n, rating_sum) into parquet state bucketed by
+    ``item_id`` (layout, replay guard and per-bucket cost:
+    :func:`_bucketed_fold`).  ``maxFilesPerTrigger=1`` makes each source
+    file one micro-batch, so the test exercises a real multi-batch
+    accumulation.
 
     The merge is pure relational algebra — old bucket state ∪ batch
     partial agg → re-aggregate — valid because the statistics are
     additive (the same property the reference's sufficient-stats trick
     exploits, R6).  Previous versions are never overwritten while being
     read (poor-man's snapshot isolation; a table format with atomic
-    commits replaces this at production scale), and a REPLAYED batch
-    merges from versions strictly below its own id, so the crash-replay
-    overwrite is idempotent per bucket.  ``maxFilesPerTrigger=1`` makes
-    each source file one micro-batch, so the test exercises a real
-    multi-batch accumulation.
+    commits replaces this at production scale).
 
     Round 6: the running sum is carried as ``DECIMAL(38,6)`` — ratings
     are exact multiples of 1e-6 (``round(avg, 6)`` at derivation), so
@@ -418,86 +558,34 @@ def incremental_item_stats(
     oracle grade the incremental execution (double sums would drift by
     addition order).
 
-    ``on_batch(batch_id)`` (round 7), called at the top of each
-    ``foreachBatch`` invocation, is the crash-injection/observation hook
-    for the checkpoint-resume test: raising from it kills the stream
-    BEFORE the batch's state version commits, exactly the mid-stream
-    failure a restart must recover from.
+    ``on_batch(batch_id)`` is the crash-injection/observation hook
+    (:func:`_drain`).
     """
-    stream = (
-        spark.readStream.schema("user_id long, item_id long, rating double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(ratings_dir)
-    )
+
+    def merge(base: DataFrame) -> DataFrame:
+        return base.groupBy("item_id").agg(
+            F.sum("n").alias("n"),
+            F.sum("rating_sum").cast("decimal(38,6)").alias("rating_sum"),
+        )
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        if on_batch is not None:
-            on_batch(batch_id)
-        s = batch_df.sparkSession
-        batch_agg = (
-            batch_df.groupBy("item_id")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("rating").cast("decimal(20,6)"))
-                .cast("decimal(38,6)")
-                .alias("rating_sum"),
-            )
-            .withColumn("bkt", _bucket_expr(F.col("item_id"), n_buckets))
-        ).persist()
-        try:
-            touched = {
-                r["bkt"] for r in batch_agg.select("bkt").distinct().collect()
-            }
-            if not touched:
-                return  # empty batch: every bucket keeps its version
-            # -1 included so a pre-bucketing FULL-layout version fails
-            # fast HERE (the mixed-layout ValueError) instead of being
-            # silently skipped by the bucket filter — merging from empty
-            # state would commit a corrupted version before any reader
-            # noticed (code-review r10).
-            prev_paths = bucket_latest_paths(
-                state_dir, below=batch_id, buckets=touched | {-1}
-            )
-            if -1 in prev_paths:
-                raise ValueError(
-                    f"incremental_item_stats: {state_dir} holds a "
-                    "pre-bucketing full-layout version — run "
-                    "migrate_state_to_bucketed into a fresh dir first"
-                )
-            base = batch_agg.drop("bkt")
-            if prev_paths:
-                base = s.read.parquet(*sorted(prev_paths.values())).unionByName(
-                    base
-                )
-            merged = (
-                base.groupBy("item_id")
-                .agg(
-                    F.sum("n").alias("n"),
-                    F.sum("rating_sum")
-                    .cast("decimal(38,6)")
-                    .alias("rating_sum"),
-                )
-                .withColumn("bkt", _bucket_expr(F.col("item_id"), n_buckets))
-            )
-            # Repartition ON the bucket key before the partitioned write:
-            # without it every write task emits a file per touched bucket
-            # (tasks × buckets small files — measured 8× the whole-batch
-            # wall at the bench rung); with it each bucket lands in ~one
-            # file and the next read of that bucket opens ~one file.
-            merged.repartition(len(touched), "bkt").write.mode(
-                "overwrite"
-            ).partitionBy("bkt").parquet(f"{state_dir}/v{batch_id}")
-        finally:
-            batch_agg.unpersist()
+        partial = batch_df.groupBy("item_id").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("rating").cast("decimal(20,6)"))
+            .cast("decimal(38,6)")
+            .alias("rating_sum"),
+        )
+        _bucketed_fold(partial, state_dir, batch_id, "item_id", n_buckets, merge)
 
     _claim_bucket_layout(state_dir, "item_id", n_buckets)
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", f"{state_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        spark,
+        "user_id long, item_id long, rating double",
+        ratings_dir,
+        state_dir,
+        upsert,
+        on_batch,
     )
-    q.awaitTermination()
 
 
 def prune_state_versions(state_dir: str, keep: int = 2) -> list[int]:
@@ -597,12 +685,9 @@ def migrate_state_to_bucketed(
     place").
 
     Reads the newest COMPLETE old-layout version and rewrites it into
-    ``{new_dir}/v-1/bkt={pmod(xxhash64(key), B)}``.  The RESERVED id -1
-    is what makes the migrated state consumable by a RESUMED ingest: a
-    fresh stream's batch ids restart at 0 and every fold merges from
-    versions strictly below its own id, so batch 0 sees ``v-1`` (and
-    can never replay-overwrite it — the IVF compaction's ``batch=-1``
-    discipline applied to folding state).  The new dir must not exist;
+    the RESERVED version ``{new_dir}/v-1``, which batch 0 of a resumed
+    ingest folds from and no replay can overwrite (layout contract:
+    :func:`_bucketed_fold`).  The new dir must not exist;
     the old dir is never touched, so a failed migration is re-runnable
     and readers of the old layout keep working until the cutover.
     """
@@ -614,29 +699,21 @@ def migrate_state_to_bucketed(
             "migrate into a FRESH directory (a partial previous attempt "
             "must be deleted, not merged into)"
         )
-    complete: list[tuple[int, str]] = []
-    for d in os.listdir(old_dir):
-        v = _version_of(d)
-        vdir = os.path.join(old_dir, d)
-        if v is None or not os.path.exists(os.path.join(vdir, "_SUCCESS")):
-            continue
+    complete = _complete_versions(old_dir)
+    for v, vdir in complete:
         if any(s.startswith("bkt=") for s in os.listdir(vdir)):
             raise ValueError(
                 f"migrate_state_to_bucketed: {old_dir} already holds "
                 f"bucketed version v{v} — this helper only migrates the "
                 "pure pre-bucketing layout"
             )
-        complete.append((v, vdir))
     if not complete:
         raise ValueError(
             f"migrate_state_to_bucketed: no complete version in {old_dir}"
         )
-    _, latest = max(complete)
-    state = spark.read.parquet(latest).withColumn(
-        "bkt", _bucket_expr(F.col(key), n_buckets)
-    )
-    state.repartition(n_buckets, "bkt").write.partitionBy("bkt").parquet(
-        f"{new_dir}/v-1"
+    _, latest = complete[-1]
+    _write_buckets(
+        spark.read.parquet(latest), new_dir, -1, key, n_buckets, range(n_buckets)
     )
     # Pin the layout so a resumed ingest configured with a different
     # bucket count (or key) fails fast instead of splitting keys across
@@ -1075,33 +1152,22 @@ def incremental_doc_dedup(
     is O(batch + touched state buckets), never a full-corpus re-scan
     (the third consumer of the round-10 bucketed-state layout, after
     the item-stats and SCD2 folds — the layout is a primitive, not a
-    one-off).
+    one-off; contract: :func:`_bucketed_fold`).
 
     State rows are ``(content_hash, doc_id, lang, source)`` — one row
     per distinct md5(text), carrying the keeper (minimum doc_id) row's
-    metadata — bucketed by ``pmod(xxhash64(content_hash), B)`` and
-    versioned per micro-batch (``{state_dir}/v{batch_id}/bkt={b}``,
-    written only for buckets the batch touched).  The fold is a
-    per-hash MIN over ``struct(doc_id, lang, source)``: associative,
-    commutative, and IDEMPOTENT, so the end state is bit-identical to
-    the one-shot batch keep-first for ANY chunking of the corpus (the
-    split-invariance pytest pins it) and a crash-replayed batch merges
-    to the same rows (versions strictly below the batch id feed the
-    replay, as in :func:`incremental_item_stats`).
+    metadata — bucketed by ``content_hash``.  The fold is a per-hash MIN
+    over ``struct(doc_id, lang, source)``: associative, commutative, and
+    IDEMPOTENT, so the end state is bit-identical to the one-shot batch
+    keep-first for ANY chunking of the corpus (the split-invariance
+    pytest pins it) and a crash-replayed batch merges to the same rows.
 
     The graded result is the state itself: keepers join back to the
     corpus by (hash, doc_id), so the batch SQL oracle — keep the
     min-doc_id row per md5(text) — grades the streaming execution
     exactly.  ``on_batch(batch_id)`` is the crash-injection hook shared
-    with the other two folds.
+    with the other folds (:func:`_drain`).
     """
-    stream = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
 
     def keep_first(hashed: DataFrame) -> DataFrame:
         """min(struct(doc_id, lang, source)) per content_hash, unpacked —
@@ -1120,61 +1186,30 @@ def incremental_doc_dedup(
                 F.col("first.lang").alias("lang"),
                 F.col("first.source").alias("source"),
             )
-            .withColumn("bkt", _bucket_expr(F.col("content_hash"), n_buckets))
         )
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        if on_batch is not None:
-            on_batch(batch_id)
-        s = batch_df.sparkSession
-        batch_first = keep_first(
+        partial = keep_first(
             batch_df.select(
                 F.md5(F.col("text").cast("binary")).alias("content_hash"),
                 "doc_id",
                 "lang",
                 "source",
             )
-        ).persist()
-        try:
-            touched = {
-                r["bkt"] for r in batch_first.select("bkt").distinct().collect()
-            }
-            if not touched:
-                return  # empty batch: every bucket keeps its version
-            # -1 included for the same write-path fail-fast as the other
-            # two folds (a skipped full-layout version would silently
-            # fold from empty state).
-            prev_paths = bucket_latest_paths(
-                state_dir, below=batch_id, buckets=touched | {-1}
-            )
-            if -1 in prev_paths:
-                raise ValueError(
-                    f"incremental_doc_dedup: {state_dir} holds a "
-                    "pre-bucketing full-layout version — run "
-                    "migrate_state_to_bucketed into a fresh dir first"
-                )
-            base = batch_first.drop("bkt")
-            if prev_paths:
-                base = s.read.parquet(*sorted(prev_paths.values())).unionByName(
-                    base
-                )
-            merged = keep_first(base)
-            # One file per touched bucket, not tasks × buckets (see
-            # incremental_item_stats).
-            merged.repartition(len(touched), "bkt").write.mode(
-                "overwrite"
-            ).partitionBy("bkt").parquet(f"{state_dir}/v{batch_id}")
-        finally:
-            batch_first.unpersist()
+        )
+        _bucketed_fold(
+            partial, state_dir, batch_id, "content_hash", n_buckets, keep_first
+        )
 
     _claim_bucket_layout(state_dir, "content_hash", n_buckets)
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", f"{state_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        spark,
+        "doc_id long, text string, lang string, source string",
+        src_dir,
+        state_dir,
+        upsert,
+        on_batch,
     )
-    q.awaitTermination()
 
 
 def incremental_ivf_index(
@@ -1209,22 +1244,15 @@ def incremental_ivf_index(
     ``operators.embeddings.centroid_rows``) is pinned at stream start —
     assignments must be against a FIXED artifact or committed cells
     would go stale mid-stream.  ``on_batch(batch_id)`` is the
-    crash-injection hook, as in :func:`incremental_item_stats`.
+    crash-injection hook (:func:`_drain`).
     Returns the index table path.
     """
     from ..functions.vectors import l2_norm
     from ..operators.embeddings import assign_cells
 
     index_path = f"{state_dir}/index"
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<float>, label int")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        if on_batch is not None:
-            on_batch(batch_id)
         s = batch_df.sparkSession
         cents_n = F.broadcast(
             s.createDataFrame(
@@ -1235,13 +1263,14 @@ def incremental_ivf_index(
             "cid"
         ).parquet(f"{index_path}/batch={batch_id}")
 
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", f"{state_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        spark,
+        "vec_id long, embedding array<float>, label int",
+        src_dir,
+        state_dir,
+        upsert,
+        on_batch,
     )
-    q.awaitTermination()
     return index_path
 
 
@@ -1413,33 +1442,18 @@ def incremental_scd2(
     batch rewrites ``v{batch_id}`` from the same input); a lakehouse
     MERGE replaces the version directory at production scale.
 
-    Bucketed like :func:`incremental_item_stats` (round 10): state is
-    partitioned by ``pmod(xxhash64(user_id), B)`` and each batch reads +
-    rewrites ONLY the buckets its users hash into
-    (``{state_dir}/v{batch_id}/bkt={b}``) — a user's whole SCD2 history
-    lives in one bucket, so the fold's prev_open/prev_closed inputs for
-    the batch's users are complete, users in untouched buckets keep
-    their older version, and :func:`read_bucketed_state` assembles the
-    identical dimension.  Per-batch work is O(touched buckets), not
-    O(|dimension|); an empty batch writes nothing at all.
+    Bucketed by ``user_id`` (round 10; contract: :func:`_bucketed_fold`)
+    — a user's whole SCD2 history lives in one bucket, so the fold's
+    prev_open/prev_closed inputs for the batch's users are complete and
+    users in untouched buckets keep their older version.  Per-batch work
+    is O(touched buckets), not O(|dimension|); an empty batch writes
+    nothing at all.
 
-    ``on_batch(batch_id)`` is the crash-injection hook, as in
-    :func:`incremental_item_stats`.
+    ``on_batch(batch_id)`` is the crash-injection hook (:func:`_drain`).
     """
     from pyspark.sql import Window
 
-    stream = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        if on_batch is not None:
-            on_batch(batch_id)
         s = batch_df.sparkSession
         ev = batch_df.where(F.col("user_id").isNotNull())
         touched = {
@@ -1452,20 +1466,13 @@ def incremental_scd2(
         }
         if not touched:
             return  # empty batch: every bucket keeps its version
-        # -1 included for the same write-path fail-fast as
-        # incremental_item_stats (a skipped full-layout version would
-        # silently fold from empty state).
-        prev_paths = bucket_latest_paths(
-            state_dir, below=batch_id, buckets=touched | {-1}
-        )
-        if -1 in prev_paths:
-            raise ValueError(
-                f"incremental_scd2: {state_dir} holds a pre-bucketing "
-                "full-layout version — run migrate_state_to_bucketed "
-                "into a fresh dir first"
-            )
-        prev = (
-            s.read.parquet(*sorted(prev_paths.values())) if prev_paths else None
+        prev = _read_buckets(
+            s,
+            state_dir,
+            batch_id,
+            touched,
+            "user_id long, run_id long, status string, from_ts timestamp, "
+            "n_events long, valid_to_ts timestamp",
         )
         w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
         marked = ev.select(
@@ -1493,26 +1500,14 @@ def incremental_scd2(
             .groupBy("user_id", "brun", F.col("event_type").alias("status"))
             .agg(F.min("ts").alias("from_ts"), F.count(F.lit(1)).alias("n_events"))
         )
-        if prev is not None:
-            prev_open = prev.where(F.col("valid_to_ts").isNull()).select(
-                "user_id",
-                F.col("run_id").alias("open_run_id"),
-                F.col("status").alias("open_status"),
-                F.col("from_ts").alias("open_from"),
-                F.col("n_events").alias("open_n"),
-            )
-            prev_closed = prev.where(F.col("valid_to_ts").isNotNull())
-        else:
-            prev_open = s.createDataFrame(
-                [],
-                "user_id long, open_run_id long, open_status string, "
-                "open_from timestamp, open_n long",
-            )
-            prev_closed = s.createDataFrame(
-                [],
-                "user_id long, run_id long, status string, from_ts timestamp, "
-                "n_events long, valid_to_ts timestamp",
-            )
+        prev_open = prev.where(F.col("valid_to_ts").isNull()).select(
+            "user_id",
+            F.col("run_id").alias("open_run_id"),
+            F.col("status").alias("open_status"),
+            F.col("from_ts").alias("open_from"),
+            F.col("n_events").alias("open_n"),
+        )
+        prev_closed = prev.where(F.col("valid_to_ts").isNotNull())
         firsts = bruns.where(F.col("brun") == 1).select(
             "user_id",
             F.col("status").alias("first_status"),
@@ -1579,23 +1574,18 @@ def incremental_scd2(
             .unionByName(untouched_open)
             .unionByName(new_rows.select(*prev_closed.columns))
         )
-        # Repartition on bkt before the partitioned write — one file per
-        # touched bucket, not (tasks × buckets) small files (see
-        # incremental_item_stats).
-        merged.withColumn(
-            "bkt", _bucket_expr(F.col("user_id"), n_buckets)
-        ).repartition(len(touched), "bkt").write.mode("overwrite").partitionBy(
-            "bkt"
-        ).parquet(f"{state_dir}/v{batch_id}")
+        _write_buckets(merged, state_dir, batch_id, "user_id", n_buckets, touched)
 
     _claim_bucket_layout(state_dir, "user_id", n_buckets)
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", f"{state_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        spark,
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string",
+        src_dir,
+        state_dir,
+        upsert,
+        on_batch,
     )
-    q.awaitTermination()
 
 
 def band_state_reader(
@@ -1726,9 +1716,9 @@ def incremental_neardup(
     - ``docs/``: (doc_id, lang, source, sh_set, n_sh, dropped) — one row
       per seen doc, where ``dropped`` MUTATES (a later smaller-id
       near-dup flips it), so this relation keeps the bucket-versioned
-      merge layout (``pmod(xxhash64(doc_id), B)``); its per-batch file
-      count is bounded by batch size + candidate endpoints (≤ ~150
-      buckets), not by corpus size.
+      merge layout keyed by ``doc_id`` (:func:`_bucketed_fold`); its
+      per-batch file count is bounded by batch size + candidate
+      endpoints (≤ ~150 buckets), not by corpus size.
 
     The per-batch fold (pure DataFrame algebra):
       1. batch docs → portable MinHash signatures + band rows (the SAME
@@ -1753,11 +1743,11 @@ def incremental_neardup(
 
     ALL seen docs' signatures stay in state — the batch semantics needs
     dropped docs to keep killing later arrivals (in the batch oracle a
-    dropped doc still appears as doc_a of other pairs).  Replay safety:
-    versions strictly below the batch id feed the fold, so a crashed
-    batch's partial writes never feed their own retry; both state dirs
-    rewrite their ``v{batch_id}`` idempotently.  ``on_batch(batch_id)``
-    is the shared crash-injection hook.
+    dropped doc still appears as doc_a of other pairs).  Replay safety
+    as everywhere in this module: both state dirs read versions below
+    the batch id and rewrite their ``v{batch_id}`` idempotently.
+    ``on_batch(batch_id)`` is the shared crash-injection hook
+    (:func:`_drain`).
 
     At 100 TB the probe's full scan of the band table does NOT survive —
     the production path is periodic COMPACTION of the per-batch appends
@@ -1780,17 +1770,7 @@ def incremental_neardup(
     bands_dir = f"{state_dir}/bands"
     docs_dir = f"{state_dir}/docs"
 
-    stream = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        if on_batch is not None:
-            on_batch(batch_id)
         s = batch_df.sparkSession
         sig = portable_minhash_sig(batch_df.select("doc_id", "text")).persist()
         # Every batch doc gets a docs-state row — docs too short to
@@ -1847,24 +1827,14 @@ def incremental_neardup(
                     .distinct()
                     .collect()
                 }
-                doc_paths = bucket_latest_paths(
-                    docs_dir, below=batch_id, buckets=touched_doc | {-1}
-                )
-                if -1 in doc_paths:
-                    raise ValueError(
-                        f"incremental_neardup: {docs_dir} holds a "
-                        "pre-bucketing full-layout version — run "
-                        "migrate_state_to_bucketed into a fresh dir first"
-                    )
-                if doc_paths:
-                    docs_old = s.read.parquet(*sorted(doc_paths.values()))
-                else:
-                    docs_old = s.createDataFrame(
-                        [],
-                        "doc_id long, lang string, source string, "
-                        "sh_set array<long>, n_sh int, dropped boolean",
-                    )
-                docs_old = docs_old.persist()
+                docs_old = _read_buckets(
+                    s,
+                    docs_dir,
+                    batch_id,
+                    touched_doc,
+                    "doc_id long, lang string, source string, "
+                    "sh_set array<long>, n_sh int, dropped boolean",
+                ).persist()
                 try:
                     sets = docs_new.select(
                         "doc_id", "sh_set", "n_sh"
@@ -1907,12 +1877,14 @@ def incremental_neardup(
                                 | F.coalesce("dp", F.lit(False))
                             ).alias("dropped"),
                         )
-                        merged_docs = old_flagged.unionByName(new_flagged)
-                        merged_docs.withColumn(
-                            "bkt", _bucket_expr(F.col("doc_id"), n_buckets)
-                        ).repartition(len(touched_doc), "bkt").write.mode(
-                            "overwrite"
-                        ).partitionBy("bkt").parquet(f"{docs_dir}/v{batch_id}")
+                        _write_buckets(
+                            old_flagged.unionByName(new_flagged),
+                            docs_dir,
+                            batch_id,
+                            "doc_id",
+                            n_buckets,
+                            touched_doc,
+                        )
                         # Append-only band version: ONLY this batch's
                         # rows, one file, sorted by bsig (row-group
                         # stats + future compaction merge — see
@@ -1934,13 +1906,14 @@ def incremental_neardup(
             bands_new.unpersist()
 
     _claim_bucket_layout(docs_dir, "doc_id", n_buckets)
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", f"{state_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        spark,
+        "doc_id long, text string, lang string, source string",
+        src_dir,
+        state_dir,
+        upsert,
+        on_batch,
     )
-    q.awaitTermination()
 
 
 def band_state_paths(
@@ -1955,26 +1928,10 @@ def band_state_paths(
     bsig-bucketed (``bkt=`` subdirs) and mixing its partitioned layout
     into one multi-path read with plain files would fail partition
     discovery — callers read its touched buckets individually."""
-    import os
-
-    try:
-        names = os.listdir(bands_dir)
-    except OSError:
-        return [], None
-    plain = []
-    compacted = None
-    for d in names:
-        v = _version_of(d)
-        if v is None:
-            continue
-        vdir = os.path.join(bands_dir, d)
-        if not os.path.exists(os.path.join(vdir, "_SUCCESS")):
-            continue
-        if v == -1:
-            compacted = vdir
-        elif below is None or v < below:
-            plain.append(vdir)
-    return sorted(plain), compacted
+    versions = _complete_versions(bands_dir)
+    plain = [p for v, p in versions if v >= 0 and (below is None or v < below)]
+    compacted = next((p for v, p in versions if v == -1), None)
+    return plain, compacted
 
 
 def _compacted_band_buckets(compacted_dir: str) -> int:
@@ -2180,9 +2137,10 @@ def incremental_curation(
     order, and the chained batch oracle grades the streaming execution
     exactly (the split-invariance pytest pins it).
 
-    Replay safety as everywhere in this module: reads take versions
-    strictly below the batch id; every per-batch write (two appends,
-    two touched-bucket merges) rewrites ``v{batch_id}`` idempotently.
+    Replay safety as everywhere in this module (:func:`_bucketed_fold`):
+    reads take versions strictly below the batch id; every per-batch
+    write (two appends, two touched-bucket merges) rewrites
+    ``v{batch_id}`` idempotently.
     """
     from ..functions.textfns import lang_id, quality_score, token_count
     from ..operators.dedup import (
@@ -2196,14 +2154,6 @@ def incremental_curation(
     pairs_dir = f"{state_dir}/pairs"
     sets_dir = f"{state_dir}/shsets"
     kept_dir = f"{state_dir}/kept"
-
-    stream = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
 
     def keep_min(gated: DataFrame) -> DataFrame:
         """min(struct(doc_id, lang_pred, quality, n_tokens)) per
@@ -2226,12 +2176,9 @@ def incremental_curation(
                 F.col("first.quality").alias("quality"),
                 F.col("first.n_tokens").alias("n_tokens"),
             )
-            .withColumn("bkt", _bucket_expr(F.col("content_hash"), n_buckets))
         )
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        if on_batch is not None:
-            on_batch(batch_id)
         s = batch_df.sparkSession
         batch = batch_df.select("doc_id", "text").persist()
         sig = portable_minhash_sig(batch).persist()
@@ -2255,40 +2202,22 @@ def incremental_curation(
                 )
                 old_need = cand_ids.join(new_ids, "doc_id", "left_anti")
                 sets_new = sig.select("doc_id", "sh_set", "n_sh")
+                bkt = _bucket_expr(F.col("doc_id"), n_buckets)
                 write_bkts = {
                     r["bkt"]
-                    for r in sets_new.select(
-                        _bucket_expr(F.col("doc_id"), n_buckets).alias("bkt")
-                    )
-                    .distinct()
-                    .collect()
+                    for r in sets_new.select(bkt.alias("bkt")).distinct().collect()
                 }
                 read_bkts = {
                     r["bkt"]
-                    for r in old_need.select(
-                        _bucket_expr(F.col("doc_id"), n_buckets).alias("bkt")
-                    )
-                    .distinct()
-                    .collect()
+                    for r in old_need.select(bkt.alias("bkt")).distinct().collect()
                 }
-                set_paths = bucket_latest_paths(
+                sets_old = _read_buckets(
+                    s,
                     sets_dir,
-                    below=batch_id,
-                    buckets=write_bkts | read_bkts | {-1},
-                )
-                if -1 in set_paths:
-                    raise ValueError(
-                        f"incremental_curation: {sets_dir} holds a "
-                        "pre-bucketing full-layout version — run "
-                        "migrate_state_to_bucketed into a fresh dir first"
-                    )
-                if set_paths:
-                    sets_old = s.read.parquet(*sorted(set_paths.values()))
-                else:
-                    sets_old = s.createDataFrame(
-                        [], "doc_id long, sh_set array<long>, n_sh int"
-                    )
-                sets_old = sets_old.persist()
+                    batch_id,
+                    write_bkts | read_bkts,
+                    "doc_id long, sh_set array<long>, n_sh int",
+                ).persist()
                 try:
                     verify_sets = sets_new.unionByName(
                         sets_old.join(old_need, "doc_id", "left_semi")
@@ -2310,21 +2239,15 @@ def incremental_curation(
                     # are rewritten (rows are immutable — the verify-only
                     # buckets above were read, not dirtied).
                     if write_bkts:
-                        sets_keep = sets_old.withColumn(
-                            "bkt", _bucket_expr(F.col("doc_id"), n_buckets)
-                        ).where(
-                            F.col("bkt").isin([int(b) for b in write_bkts])
-                        )
-                        merged_sets = sets_keep.unionByName(
-                            sets_new.withColumn(
-                                "bkt",
-                                _bucket_expr(F.col("doc_id"), n_buckets),
-                            )
-                        )
-                        merged_sets.repartition(
-                            len(write_bkts), "bkt"
-                        ).write.mode("overwrite").partitionBy("bkt").parquet(
-                            f"{sets_dir}/v{batch_id}"
+                        _write_buckets(
+                            sets_old.where(
+                                bkt.isin([int(b) for b in write_bkts])
+                            ).unionByName(sets_new),
+                            sets_dir,
+                            batch_id,
+                            "doc_id",
+                            n_buckets,
+                            write_bkts,
                         )
                 finally:
                     sets_old.unpersist()
@@ -2332,47 +2255,26 @@ def incremental_curation(
                 cand.unpersist()
             # Gate + exact-dedup fold (independent of the pair state;
             # runs last so a crash mid-batch leaves at most idempotently
-            # rewritable versions behind).
-            gated = keep_min(
-                batch.select(
-                    "doc_id",
-                    F.md5(F.col("text").cast("binary")).alias("content_hash"),
-                    (quality_score(F.col("text")) + F.lit(0.0)).alias(
-                        "quality"
-                    ),
-                    lang_id(F.col("text")).alias("lang_pred"),
-                    token_count(F.col("text")).cast("long").alias("n_tokens"),
-                ).where(
-                    (F.col("quality") >= _CURATION_QUALITY_MIN)
-                    & (F.col("lang_pred") != "und")
-                )
-            ).persist()
-            try:
-                touched = {
-                    r["bkt"]
-                    for r in gated.select("bkt").distinct().collect()
-                }
-                if not touched:
-                    return  # no gate survivors: kept state stands
-                kept_paths = bucket_latest_paths(
-                    kept_dir, below=batch_id, buckets=touched | {-1}
-                )
-                if -1 in kept_paths:
-                    raise ValueError(
-                        f"incremental_curation: {kept_dir} holds a "
-                        "pre-bucketing full-layout version — run "
-                        "migrate_state_to_bucketed into a fresh dir first"
-                    )
-                base = gated.drop("bkt")
-                if kept_paths:
-                    base = s.read.parquet(
-                        *sorted(kept_paths.values())
-                    ).unionByName(base)
-                keep_min(base).repartition(len(touched), "bkt").write.mode(
-                    "overwrite"
-                ).partitionBy("bkt").parquet(f"{kept_dir}/v{batch_id}")
-            finally:
-                gated.unpersist()
+            # rewritable versions behind).  No gate survivors: kept
+            # state stands.
+            gated = batch.select(
+                "doc_id",
+                F.md5(F.col("text").cast("binary")).alias("content_hash"),
+                (quality_score(F.col("text")) + F.lit(0.0)).alias("quality"),
+                lang_id(F.col("text")).alias("lang_pred"),
+                token_count(F.col("text")).cast("long").alias("n_tokens"),
+            ).where(
+                (F.col("quality") >= _CURATION_QUALITY_MIN)
+                & (F.col("lang_pred") != "und")
+            )
+            _bucketed_fold(
+                keep_min(gated),
+                kept_dir,
+                batch_id,
+                "content_hash",
+                n_buckets,
+                keep_min,
+            )
         finally:
             batch.unpersist()
             sig.unpersist()
@@ -2380,13 +2282,14 @@ def incremental_curation(
 
     _claim_bucket_layout(sets_dir, "doc_id", n_buckets)
     _claim_bucket_layout(kept_dir, "content_hash", n_buckets)
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", f"{state_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        spark,
+        "doc_id long, text string, lang string, source string",
+        src_dir,
+        state_dir,
+        upsert,
+        on_batch,
     )
-    q.awaitTermination()
 
 
 def read_curated_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
@@ -2399,29 +2302,15 @@ def read_curated_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
     rule (r8 semantics).  The walk is pairs-sized (≪ corpus), every
     other relation here is state-sized; returns None when no batch ever
     committed."""
-    import os
-
     from ..operators.dedup import pair_component_labels
 
     kept = read_bucketed_state(spark, f"{state_dir}/kept")
     if kept is None:
         return None
     surv = kept.select("doc_id", "lang_pred", "quality", "n_tokens")
-    pairs_dir = f"{state_dir}/pairs"
-    versions = (
-        [
-            p
-            for d in sorted(os.listdir(pairs_dir))
-            if _version_of(d) is not None
-            # _SUCCESS gate: a crashed batch's partial version must not
-            # feed the walk (module-wide versioned-state discipline).
-            and os.path.exists(
-                os.path.join(p := os.path.join(pairs_dir, d), "_SUCCESS")
-            )
-        ]
-        if os.path.isdir(pairs_dir)
-        else []
-    )
+    # Complete versions only: a crashed batch's partial version must not
+    # feed the walk.
+    versions = [p for _, p in _complete_versions(f"{state_dir}/pairs")]
     if not versions:
         return surv
     pairs = spark.read.parquet(*versions)
@@ -2450,7 +2339,9 @@ def _semantic_pair_kernel(mode: str):
     and keeps every distinct-id pair (state ids predate batch ids —
     each old×new pair lives in exactly one state block's group);
     ``mode='diag'`` scores the batch against itself and keeps the upper
-    triangle."""
+    triangle.  Degenerate rows score no pair: a null embedding is dropped
+    before the matrix is built (it would misalign the flattened values)
+    and a zero vector normalizes to NaN, which no threshold passes."""
 
     def kernel(tbl):
         # Worker-side imports, as in the batch tile kernel.
@@ -2465,6 +2356,10 @@ def _semantic_pair_kernel(mode: str):
                 }
             )
 
+        if tbl.column("embedding").null_count:
+            tbl = tbl.filter(tbl.column("embedding").is_valid())
+            if len(tbl) == 0:
+                return empty()
         ids = tbl.column("vec_id").to_numpy()
         emb = tbl.column("embedding").combine_chunks()
         mat = (
@@ -2473,6 +2368,8 @@ def _semantic_pair_kernel(mode: str):
             .astype("float64", copy=False)
             .reshape(len(tbl), -1)
         )
+        with np.errstate(divide="ignore", invalid="ignore"):
+            mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
         if mode == "cross":
             side = tbl.column("side").to_numpy()
             mask_x = side == 1
@@ -2481,11 +2378,8 @@ def _semantic_pair_kernel(mode: str):
                 return empty()
             la, rb = mat[mask_x], mat[mask_y]
             ids_x, ids_y = ids[mask_x], ids[mask_y]
-            la /= np.linalg.norm(la, axis=1, keepdims=True)
-            rb /= np.linalg.norm(rb, axis=1, keepdims=True)
         else:
-            la = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-            rb = la
+            la = rb = mat
             ids_x = ids_y = ids
         sims = la @ rb.T
         ia, ib = np.nonzero(sims >= 0.45)
@@ -2571,14 +2465,6 @@ def incremental_semantic_dedup(
     _T = math.acos(0.45)
     _MARGIN = 1e-4
 
-    stream = (
-        spark.readStream.schema(
-            "vec_id long, embedding array<float>, label int"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-
     def _load_cents(s: SparkSession):
         """The pinned per-state quantizer: (cid, float64-normalized
         centroid vector) rows, or None before the first batch commits
@@ -2594,25 +2480,30 @@ def incremental_semantic_dedup(
         the nearest-cell assignment (array_min: smallest angle, ties to
         the smaller cid) and the batch-side hull aggregation; both sides
         computing the identical angles is what makes the screen's
-        triangle-inequality bound sound."""
+        triangle-inequality bound sound.  A zero or null embedding has
+        no angle: ``t`` is NULL (and the nearest cell the smallest
+        cid)."""
         from ..functions.vectors import dot, l2_norm
 
         nrm = l2_norm(F.col("embedding"))
         return F.array(
             *[
                 F.struct(
-                    F.acos(
-                        F.least(
-                            F.lit(1.0),
-                            F.greatest(
-                                F.lit(-1.0),
-                                dot(
-                                    F.col("embedding"),
-                                    F.array(*[F.lit(x) for x in cvec]),
-                                )
-                                / nrm,
-                            ),
-                        )
+                    F.when(
+                        nrm > 0,
+                        F.acos(
+                            F.least(
+                                F.lit(1.0),
+                                F.greatest(
+                                    F.lit(-1.0),
+                                    dot(
+                                        F.col("embedding"),
+                                        F.array(*[F.lit(x) for x in cvec]),
+                                    )
+                                    / nrm,
+                                ),
+                            )
+                        ),
                     ).alias("t"),
                     F.lit(cid).alias("cid"),
                 )
@@ -2629,30 +2520,12 @@ def incremental_semantic_dedup(
         return df.withColumn("cell", best["cid"]).withColumn("tcc", best["t"])
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        if on_batch is not None:
-            on_batch(batch_id)
         s = batch_df.sparkSession
         batch = batch_df.select("vec_id", "embedding").persist()
         try:
             if batch.count() == 0:
                 return  # empty batch: every state version stands
-            versions = (
-                [
-                    p
-                    for d in sorted(os.listdir(vecs_dir))
-                    if (v := _version_of(d)) is not None
-                    and v < batch_id
-                    # _SUCCESS gate, as everywhere: a crashed batch's
-                    # partial write must not feed its own replay.
-                    and os.path.exists(
-                        os.path.join(
-                            p := os.path.join(vecs_dir, d), "_SUCCESS"
-                        )
-                    )
-                ]
-                if os.path.isdir(vecs_dir)
-                else []
-            )
+            versions = [p for _, p in _complete_versions(vecs_dir, batch_id)]
             # -- pin the per-state quantizer on the first committing
             #    batch (replay-safe: a replayed first batch re-derives
             #    the identical rows and overwrites idempotently).  The
@@ -2663,14 +2536,17 @@ def incremental_semantic_dedup(
             if cents is None:
                 from ..functions.vectors import l2_norm as _l2n
 
+                nrm = _l2n(F.col("embedding"))
                 (
-                    batch.orderBy("vec_id")
+                    # A null embedding has a null norm; neither it nor a
+                    # zero vector has a direction to pin.
+                    batch.where(nrm > 0)
+                    .orderBy("vec_id")
                     .limit(16)
                     .select(
                         F.col("vec_id").alias("cid"),
                         F.transform(
-                            "embedding",
-                            lambda x: x.cast("double") / _l2n(F.col("embedding")),
+                            "embedding", lambda x: x.cast("double") / nrm
                         ).alias("cvec"),
                     )
                     .coalesce(1)
@@ -2698,7 +2574,11 @@ def incremental_semantic_dedup(
                 #    sorted by (cell, tcc), so the pushed range
                 #    predicate also skips whole row groups.  The hulls
                 #    are ≤16 rows — collected driver-side like the IVF
-                #    probe's literal cell list.
+                #    probe's literal cell list.  A zero or null
+                #    embedding has no angle (NULL tcc): such state rows
+                #    are kept by the IS NULL disjunct rather than
+                #    dropped by a NULL predicate, and batch rows add no
+                #    hull bound.
                 hulls = (
                     batch.select(F.explode(_cell_angles(cents)).alias("ct"))
                     .groupBy(F.col("ct.cid").alias("cell"))
@@ -2707,15 +2587,17 @@ def incremental_semantic_dedup(
                     )
                     .collect()
                 )
-                screen = None
+                screen = F.col("tcc").isNull()
                 for r in hulls:
+                    if r["lo"] is None:
+                        continue
                     c = (F.col("cell") == int(r["cell"])) & F.col(
                         "tcc"
                     ).between(
                         float(r["lo"]) - _T - _MARGIN,
                         float(r["hi"]) + _T + _MARGIN,
                     )
-                    screen = c if screen is None else screen | c
+                    screen = screen | c
                 vstate = (
                     s.read.parquet(*versions)
                     .where(screen)
@@ -2758,13 +2640,14 @@ def incremental_semantic_dedup(
         finally:
             batch.unpersist()
 
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", f"{state_dir}/_checkpoint")
-        .trigger(availableNow=True)
-        .start()
+    _drain(
+        spark,
+        "vec_id long, embedding array<float>, label int",
+        src_dir,
+        state_dir,
+        upsert,
+        on_batch,
     )
-    q.awaitTermination()
 
 
 def read_semantic_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
@@ -2774,22 +2657,9 @@ def read_semantic_state(spark: SparkSession, state_dir: str) -> DataFrame | None
     accumulated pair log, then keeper = min vec_id per cluster — the
     batch ``q_dedup_semantic`` tail verbatim, over a pairs-sized
     relation.  Returns None when no batch ever committed."""
-    import os
-
     from ..operators.dedup import pair_component_labels
 
-    pairs_dir = f"{state_dir}/pairs"
-    if not os.path.isdir(pairs_dir):
-        return None
-    versions = [
-        p
-        for d in sorted(os.listdir(pairs_dir))
-        if _version_of(d) is not None
-        # _SUCCESS gate: same versioned-state discipline as the folds.
-        and os.path.exists(
-            os.path.join(p := os.path.join(pairs_dir, d), "_SUCCESS")
-        )
-    ]
+    versions = [p for _, p in _complete_versions(f"{state_dir}/pairs")]
     if not versions:
         return None
     pairs = spark.read.parquet(*versions)
@@ -2845,13 +2715,7 @@ def compact_pair_log(spark: SparkSession, pairs_dir: str) -> str | None:
         os.rename(displaced, target)
     shutil.rmtree(staging, ignore_errors=True)
     shutil.rmtree(displaced, ignore_errors=True)
-    sources = [
-        p
-        for d in sorted(os.listdir(pairs_dir))
-        if (v := _version_of(d)) is not None
-        and v >= 0
-        and os.path.exists(os.path.join(p := os.path.join(pairs_dir, d), "_SUCCESS"))
-    ]
+    sources = [p for v, p in _complete_versions(pairs_dir) if v >= 0]
     has_target = os.path.isdir(target)
     if not sources:
         return target if has_target else None

@@ -419,3 +419,20 @@ def test_pii_redact_conservation(spark):
         assert r.chars_out == r.chars_in - r.chars_matched + added, r
         assert r.n_tokens_out == r.n_tokens_in, r
         assert sum(getattr(r, name) for name in taglen) >= 1, r
+
+
+def test_spans_withhold_broadcast_on_unknown_size(spark, monkeypatch):
+    """The occurrence-key broadcast hint is a size bet: it may only be
+    placed on a CONCRETE footer count under the bound.  When the footer
+    probe cannot say (None), the plan must carry no broadcast hint —
+    the safe shuffle plan, not the one that risks OOM."""
+    from recsys_mapreduce_mrjob_spark.sources import readers
+
+    def hint_in_plan():
+        df = registry.QUERIES["q_dedup_spans"](spark, SF01)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return "strategy=broadcast" in plan
+
+    assert hint_in_plan(), "footer-readable control lost its broadcast hint"
+    monkeypatch.setattr(readers, "parquet_num_rows", lambda *_a: None)
+    assert not hint_in_plan()

@@ -15,6 +15,7 @@ import os
 import shutil
 import tempfile
 from collections import Counter
+from datetime import datetime
 
 import pytest
 
@@ -344,3 +345,44 @@ def test_reader_handles_pure_old_layout_and_rejects_mixed(spark):
             read_bucketed_state(spark, state)
     finally:
         shutil.rmtree(base, ignore_errors=True)
+
+
+_TWIN_INPUTS = {
+    "incremental_item_stats": (
+        "user_id long, item_id long, rating double",
+        [(1, 10, 4.0)],
+    ),
+    "incremental_doc_dedup": (
+        "doc_id long, text string, lang string, source string",
+        [(1, "a b c d e", "en", "web")],
+    ),
+    "incremental_scd2": (
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string",
+        [(1, datetime(2024, 1, 1), 1, "click", 1.0, None)],
+    ),
+}
+
+
+@pytest.mark.parametrize("twin", sorted(_TWIN_INPUTS))
+def test_writers_reject_pure_old_layout(spark, twin, tmp_path):
+    """The write-path twin of the reader guard above: a fold over a
+    state dir holding a pure pre-bucketing version must fail fast
+    instead of folding from empty state — even when that version's id
+    is one the stream itself is about to write (batch 0 over ``v0``),
+    where the replay guard alone would overwrite it — and must write no
+    version of its own."""
+    from recsys_mapreduce_mrjob_spark.streaming import twins
+
+    schema, rows = _TWIN_INPUTS[twin]
+    src, state = str(tmp_path / "src"), str(tmp_path / "state")
+    # One input file: batch 0 is the only batch and carries the row.
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
+    spark.createDataFrame([(1, 10)], "k long, n long").write.parquet(f"{state}/v0")
+    with pytest.raises(Exception, match="pre-bucketing"):
+        getattr(twins, twin)(spark, src, state)
+    assert _versions(state) == [0]
+    assert not any(d.startswith("bkt=") for d in os.listdir(f"{state}/v0"))
+    assert [tuple(r) for r in spark.read.parquet(f"{state}/v0").collect()] == [
+        (1, 10)
+    ]

@@ -666,3 +666,116 @@ def test_stream_release_matches_batch_release(spark, smoke_dir):
     streamed = _multiset(registry.QUERIES["q_stream_release_exec"](spark, smoke_dir))
     batch = _multiset(registry.QUERIES["q_export_release"](spark, smoke_dir))
     assert streamed == batch and sum(batch.values()) > 0
+
+
+def _doc_feed(spark, sf_dir):
+    from recsys_mapreduce_mrjob_spark.sources.readers import load_table
+
+    return load_table(spark, sf_dir, "documents").select(
+        "doc_id", "text", "lang", "source"
+    )
+
+
+@pytest.mark.parametrize(
+    "twin,feed,key",
+    [
+        ("incremental_doc_dedup", _doc_feed, "doc_id"),
+        ("incremental_item_stats", lambda s, d: derive_ratings(s, d), "item_id"),
+    ],
+)
+def test_empty_micro_batch_is_a_no_op(spark, smoke_dir, tmp_path, twin, feed, key):
+    """A zero-row chunk file between two non-empty ones is a micro-batch
+    of its own: the drain must finish, ``on_batch`` must see it, it must
+    write no state version, and the end state must equal the drain
+    without it."""
+    from recsys_mapreduce_mrjob_spark.streaming import twins
+
+    rows = feed(spark, smoke_dir)
+    halves = [rows.where(F.col(key) % 2 == k) for k in (0, 1)]
+
+    def write_chunks(src, chunks):
+        seen: set = set()
+        for k, chunk in enumerate(chunks):
+            chunk.coalesce(1).write.mode("append").parquet(src)
+            twins._stamp_new_chunk_files(src, seen, 1_700_000_000 + k)
+        assert len(seen) == len(chunks), "every chunk must be one file"
+
+    src3, st3 = str(tmp_path / "src3"), str(tmp_path / "state3")
+    write_chunks(src3, [halves[0], rows.limit(0), halves[1]])
+    seen: list[int] = []
+    getattr(twins, twin)(spark, src3, st3, on_batch=seen.append)
+    assert seen == [0, 1, 2]
+    assert os.path.isdir(f"{st3}/v0") and os.path.isdir(f"{st3}/v2")
+    assert not os.path.exists(f"{st3}/v1"), "empty batch wrote a version"
+
+    src2, st2 = str(tmp_path / "src2"), str(tmp_path / "state2")
+    write_chunks(src2, halves)
+    getattr(twins, twin)(spark, src2, st2)
+    assert _multiset(twins.read_bucketed_state(spark, st3)) == _multiset(
+        twins.read_bucketed_state(spark, st2)
+    )
+
+
+def test_semantic_dedup_tolerates_zero_and_null_embeddings(spark, smoke_dir, tmp_path):
+    """Degenerate vectors among the first 16 ``vec_id``s — the rows the
+    first batch pins its centroids from — must not crash the drain: a
+    zero vector and a null embedding are never pinned, have no angle,
+    stay in the vector state, pair with nothing, and leave the drop list
+    equal to that of the same input without them — also when a later
+    batch holds nothing else."""
+    from recsys_mapreduce_mrjob_spark.sources.readers import load_table
+    from recsys_mapreduce_mrjob_spark.streaming.twins import (
+        _stamp_new_chunk_files,
+        _write_keyed_chunks,
+        incremental_semantic_dedup,
+        read_semantic_state,
+    )
+
+    emb = load_table(spark, smoke_dir, "embeddings")
+    dim = len(emb.first()["embedding"])
+    # Both in chunk 0 (even ids), the batch that pins the centroids.
+    zero_id, null_id = [
+        r["vec_id"]
+        for r in emb.where(F.col("vec_id") % 2 == 0)
+        .orderBy("vec_id")
+        .limit(2)
+        .collect()
+    ]
+    degenerate = emb.withColumn(
+        "embedding",
+        F.when(
+            F.col("vec_id") == zero_id,
+            F.array_repeat(F.lit(0.0).cast("float"), dim),
+        )
+        .when(F.col("vec_id") == null_id, F.lit(None))
+        .otherwise(F.col("embedding")),
+    )
+    clean = emb.where(~F.col("vec_id").isin(zero_id, null_id))
+
+    # A third batch of degenerate rows only (new ids): it bounds no hull.
+    top = emb.agg(F.max("vec_id")).first()[0]
+    tail = spark.createDataFrame(
+        [(top + 1, [0.0] * dim, 0), (top + 2, None, 0)], emb.schema
+    )
+
+    drops = []
+    for name, df in (("degenerate", degenerate), ("clean", clean)):
+        src, state = str(tmp_path / f"src_{name}"), str(tmp_path / f"st_{name}")
+        _write_keyed_chunks(df, "vec_id", src, 2)
+        if name == "degenerate":
+            before = set(os.listdir(src))
+            tail.coalesce(1).write.mode("append").parquet(src)
+            _stamp_new_chunk_files(src, before, time.time() + 60)
+        incremental_semantic_dedup(spark, src, state)
+        drops.append(_multiset(read_semantic_state(spark, state)))
+        if name == "degenerate":
+            cids = {r["cid"] for r in spark.read.parquet(f"{state}/cents").collect()}
+            assert len(cids) == 16 and not cids & {zero_id, null_id}
+            kept = spark.read.parquet(f"{state}/vecs/v0").where(
+                F.col("vec_id").isin(zero_id, null_id)
+            )
+            assert {(r["vec_id"], r["tcc"]) for r in kept.collect()} == {
+                (zero_id, None),
+                (null_id, None),
+            }
+    assert drops[0] == drops[1] and sum(drops[1].values()) > 0
