@@ -1,122 +1,43 @@
-"""Session-scoped memoization for persisted DataFrames.
+"""Epoch-scoped memoization for derived DataFrames.
 
 Operators that fan a derived relation into several lazy branches (the
-ratings matrix, the doc-shingle relation) persist it so the derivation runs
-once.  Calling ``.persist()`` on every query invocation is harmless for
-correctness — Spark's CacheManager dedups by canonicalized plan — but each
-call still builds the full lineage and leaves the persist lifecycle
-implicit (ADVICE.md round 2).  This memo keeps ONE persisted handle per
-(SparkContext, relation, sf_dir): repeated calls reuse it, and handles from
-a stopped/replaced context are dropped eagerly so a long-lived driver
-process that restarts sessions cannot accumulate stale references.
+ratings matrix, the doc-shingle relation, the curated corpus) memoize it
+so the derivation runs once and every branch shares one materialization.
 
-Unpersist-on-exit is intentionally NOT done per query: within one grading
-sweep every later query re-uses the cached relation, which is the point.
-``spark.catalog.clearCache()`` (bench.py between-query hygiene) remains
-safe — ``memo_persist`` detects that the handle's storage level dropped to
-NONE and re-registers the persist before returning it (ADVICE.md round 4:
-clearCache does NOT re-persist automatically; a cleared handle stays
-unpersisted forever unless someone calls ``.persist()`` again).
+Memo lifetime — the one rule for every handle in this module.  Handles
+live in ONE table keyed ``(applicationId, relation, sf_dir)`` and belong
+to the current ``clearCache`` epoch.  Every memo call first checks the
+epoch sentinel (:func:`_epoch_rolled`); when ``spark.catalog.clearCache()``
+has run since the last call, or the SparkContext changed, the whole table
+is dropped before the lookup.  So within one epoch ``build()`` runs once
+per key and every consumer shares its handle; after a ``clearCache`` the
+next call runs ``build()`` again from the inputs, and so does every memo
+nested inside that ``build()``.  No relation, fit or fixpoint computed
+in one epoch is served in the next — bench.py's and perfbench's contract
+that no timed run rides a predecessor's persisted relations.
+
+Rolled-over handles are dropped, not released.  ``clearCache`` already
+unpersisted every ``memo_persist`` handle.  The lazy ``localCheckpoint``
+blocks of a :func:`memo_checkpoint` handle (e.g. ``curated_docs_rdd``)
+are data-sized, and ``clearCache`` does not free them: Spark's
+ContextCleaner does, once nothing references the handle — the memo table
+no longer does after a roll, and a query built before the roll holds it
+only until that query is gone.  They are not unpersisted eagerly because
+such a query may still execute after the roll and must keep reading its
+(deterministic, identical) blocks rather than fail on a missing
+checkpoint block.  Bound: one epoch's checkpoint blocks beyond the live
+ones, per relation, until the driver JVM's next garbage collection.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
-_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def _storage_level() -> StorageLevel | None:
-    """Resolve the memo storage level from ``SPARK_GRAFT_MEMO_STORAGE``
-    (ADVICE r6: several corpus-scale shingle/signature relations can be
-    memo-persisted at once in a long grading sweep, and a memory-
-    constrained driver needs a knob rather than a code edit).  Accepted:
-    any ``StorageLevel`` constant name (``MEMORY_AND_DISK`` default,
-    ``DISK_ONLY`` for tight heaps, ...) or ``NONE``/``OFF`` to disable
-    memo persistence entirely (relations recompute per branch — slower,
-    never OOMs).  Unknown names fall back to the default rather than
-    crashing a sweep over an env typo."""
-    name = os.environ.get("SPARK_GRAFT_MEMO_STORAGE", "MEMORY_AND_DISK").upper()
-    if name in ("NONE", "OFF", "DISABLED"):
-        return None
-    return getattr(StorageLevel, name, StorageLevel.MEMORY_AND_DISK)
-
-
-def memo_persist(
-    spark: SparkSession,
-    relation: str,
-    sf_dir: str,
-    build: Callable[[], DataFrame],
-    epoch_scoped: bool = False,
-) -> DataFrame:
-    """Return the persisted DataFrame for ``relation`` at ``sf_dir``,
-    building (and persisting at the knob-selected level, default
-    MEMORY_AND_DISK) it on first use per SparkContext.
-
-    ``epoch_scoped`` (round 13): by default the handle lives for the
-    whole process — ``build()`` runs once, and a later
-    ``spark.catalog.clearCache()`` only costs a persist re-registration
-    (the DATA recomputes lazily either way; the py4j/Catalyst
-    CONSTRUCTION of a large expression tree is amortized — measured
-    ~+0.7 s/run on the LSH signature when handles were dropped per
-    epoch).  Pass ``epoch_scoped=True`` when ``build()`` consumes a
-    :func:`memo_checkpoint` relation: the checkpoint handle is
-    epoch-scoped, so a frozen lineage would reference the previous
-    epoch's checkpoint forever, resurrecting stale blocks instead of
-    recomputing from the parquet inputs — those builds must re-run per
-    epoch to re-bind to the fresh checkpoint."""
-    level = _storage_level()
-    if level is None:
-        return build()
-    app = spark.sparkContext.applicationId
-    if epoch_scoped:
-        if _epoch_rolled(spark):
-            _drop_epoch_handles()
-        key = (app, relation, sf_dir)
-        df = _CACHE_EPOCH.get(key)
-        if df is None:
-            df = build().persist(level)
-            _CACHE_EPOCH[key] = df
-        return df
-    key = (app, relation, sf_dir)
-    df = _CACHE.get(key)
-    if df is None:
-        # One live context per process (driver / pytest both): entries from
-        # any other applicationId belong to a stopped session — drop them.
-        for stale in [k for k in _CACHE if k[0] != app]:
-            del _CACHE[stale]
-        df = build().persist(level)
-        _CACHE[key] = df
-    else:
-        lvl = df.storageLevel
-        if not (lvl.useMemory or lvl.useDisk or lvl.useOffHeap):
-            # spark.catalog.clearCache() dropped the persist out from under
-            # the memo; re-register it so downstream fan-out still shares
-            # one materialization instead of silently recomputing per branch.
-            df.persist(level)
-    return df
-
-
-_CKPT: dict[tuple[str, str, str], DataFrame] = {}
-_CACHE_EPOCH: dict[tuple[str, str, str], DataFrame] = {}
+_MEMO: dict[tuple[str, str, str], DataFrame] = {}
 _EPOCH_SENTINEL: dict[str, DataFrame] = {}
-
-
-def _drop_epoch_handles() -> None:
-    """Epoch roll: drop every EPOCH-SCOPED handle (checkpoints and the
-    persists built over them) so the next call per relation rebuilds via
-    ``build()``.  Old checkpoint blocks are NOT eagerly unpersisted: a
-    query constructed before the roll may still execute afterwards, and
-    its frozen plan must keep reading the (deterministic, identical)
-    blocks rather than die on CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND; the
-    orphaned blocks are metadata-sized and freed by GC."""
-    for cache in (_CACHE_EPOCH, _CKPT):
-        for k in list(cache):
-            del cache[k]
 
 
 def _epoch_rolled(spark: SparkSession) -> bool:
@@ -125,13 +46,11 @@ def _epoch_rolled(spark: SparkSession) -> bool:
     tiny never-materialized sentinel DataFrame is kept persist-MARKED —
     clearCache drops every CacheManager registration, including marks
     that never materialized, so the sentinel's storage level falling to
-    NONE is exactly the clearCache signal ``memo_persist`` already
-    relies on."""
+    NONE is exactly the clearCache signal."""
     app = spark.sparkContext.applicationId
     sent = _EPOCH_SENTINEL.get(app)
     if sent is None:
-        for k in [k for k in _EPOCH_SENTINEL if k != app]:
-            del _EPOCH_SENTINEL[k]
+        _EPOCH_SENTINEL.clear()
         # Deliberately unmatchable bounds: CacheManager substitutes cached
         # relations into ANY plan whose canonicalized subtree matches, so
         # a plain range(1) sentinel would silently reroute every query
@@ -149,6 +68,37 @@ def _epoch_rolled(spark: SparkSession) -> bool:
     return False
 
 
+def _memo(
+    spark: SparkSession,
+    relation: str,
+    sf_dir: str,
+    build: Callable[[], DataFrame],
+    hold: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    if _epoch_rolled(spark):
+        _MEMO.clear()
+    key = (spark.sparkContext.applicationId, relation, sf_dir)
+    df = _MEMO.get(key)
+    if df is None:
+        df = hold(build())
+        _MEMO[key] = df
+    return df
+
+
+def memo_persist(
+    spark: SparkSession, relation: str, sf_dir: str, build: Callable[[], DataFrame]
+) -> DataFrame:
+    """Return this epoch's handle for ``relation`` at ``sf_dir``: on the
+    first call of the epoch, ``build()`` persisted at MEMORY_AND_DISK
+    (partitions that do not fit in executor memory spill instead of
+    failing); later calls in the epoch return the same handle.  Lifetime:
+    the module docstring."""
+    return _memo(
+        spark, relation, sf_dir, build,
+        lambda df: df.persist(StorageLevel.MEMORY_AND_DISK),
+    )
+
+
 def memo_checkpoint(
     spark: SparkSession, relation: str, sf_dir: str, build: Callable[[], DataFrame]
 ) -> DataFrame:
@@ -159,64 +109,13 @@ def memo_checkpoint(
     tree is ~0.2 M chars of plan (curation ladder + LSH + two-star
     labels) re-optimized by Catalyst and re-driven by AQE inside EVERY
     downstream query — the export capstones measured ~3.6 s of pure
-    fixed cost per row at sf0.001 with the data work ~nil.
-
-    Cache-coherence contract (NOT cross-run result caching): checkpoint
-    handles are keyed to the ``clearCache`` epoch via a persist-marked
-    sentinel (:func:`_epoch_rolled`).  ``spark.catalog.clearCache()`` —
-    the bench's between-run hygiene — rolls the epoch, every handle is
-    dropped (see :func:`_drop_epoch_handles` for why old blocks are left
-    to GC), and the next call rebuilds from the parquet inputs, exactly
-    like a cleared persist.  Within one epoch the relation materializes once and every
-    consumer shares it — the same sharing ``memo_persist`` provides,
-    minus the per-consumer planning cost.
-
-    ``SPARK_GRAFT_MEMO_STORAGE=NONE`` disables this memo too (the
-    build is returned un-checkpointed, recomputing per branch)."""
-    if _storage_level() is None:
-        return build()
-    app = spark.sparkContext.applicationId
-    key = (app, relation, sf_dir)
-    if _epoch_rolled(spark):
-        _drop_epoch_handles()
-    df = _CKPT.get(key)
-    if df is None:
-        df = build().localCheckpoint(eager=False)
-        _CKPT[key] = df
-    return df
-
-
-_PROCESS: dict[tuple[str, str, str], DataFrame] = {}
-
-
-def memo_process(
-    spark: SparkSession, relation: str, sf_dir: str, build: Callable[[], DataFrame]
-) -> DataFrame:
-    """Process-scoped memo for CONSTRUCTION-TIME fixpoint artifacts —
-    relations whose ``build()`` runs driver-side jobs eagerly (the
-    two-star component loop's ``localCheckpoint(eager=True)`` rounds,
-    the ALS fit) rather than returning a lazy plan.  The handle is NOT
-    dropped on a clearCache epoch roll: this preserves the exact
-    pre-round-13 semantics, where these artifacts lived inside frozen
-    ``memo_persist`` lineages (the two-star edge checkpoints survive
-    ``clearCache`` by construction, and re-running an iterative fit per
-    bench run would time the loop's JOB SCHEDULING, not the operator).
-    Everything derived FROM these labels stays epoch-scoped and
-    recomputes per run.  Only the eagerly-computed artifact itself is
-    per-process — the same class as the persisted IVF index and the
-    pre-materialized csv copies (documented construction/read-path
-    contracts, not query results)."""
-    if _storage_level() is None:
-        return build()
-    app = spark.sparkContext.applicationId
-    key = (app, relation, sf_dir)
-    df = _PROCESS.get(key)
-    if df is None:
-        for stale in [k for k in _PROCESS if k[0] != app]:
-            del _PROCESS[stale]
-        df = build()
-        _PROCESS[key] = df
-    return df
+    fixed cost per row at sf0.001 with the data work ~nil.  Same table
+    and lifetime as :func:`memo_persist` (module docstring, which also
+    bounds the rolled-over checkpoint blocks)."""
+    return _memo(
+        spark, relation, sf_dir, build,
+        lambda df: df.localCheckpoint(eager=False),
+    )
 
 
 def memo_unpersist(relation: str) -> int:
@@ -225,14 +124,10 @@ def memo_unpersist(relation: str) -> int:
     corpus-scale relation (e.g. the xxhash64 minhash signature once the
     portable-hash exact twin is built) won't be revisited.  Returns the
     number of handles dropped."""
-    n = 0
-    for cache in (_CACHE, _CACHE_EPOCH, _PROCESS, _CKPT):
-        keys = [k for k in cache if k[1] == relation]
-        for k in keys:
-            try:
-                cache[k].unpersist()
-            except Exception:
-                pass  # stopped context / checkpoint handle: nothing to drop
-            del cache[k]
-        n += len(keys)
-    return n
+    keys = [k for k in _MEMO if k[1] == relation]
+    for k in keys:
+        try:
+            _MEMO.pop(k).unpersist()
+        except Exception:
+            pass  # stopped context / checkpoint handle: nothing to drop
+    return len(keys)

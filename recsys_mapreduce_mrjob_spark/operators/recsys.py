@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..caching import memo_persist, memo_process
+from ..caching import memo_persist
 from ..functions import similarity as S
 from ..functions.blocking import gemm_block_count as _block_count
 from ..registry import register
@@ -729,8 +729,8 @@ def _cached_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured 20.3 s → 9.1 s at sf0.1 when cached.  MEMORY_AND_DISK (the
     default) keeps the 100 TB story sane: partitions that don't fit in
     executor memory spill instead of OOMing.  Memoized per
-    (SparkContext, sf_dir) so repeated query invocations share one
-    persisted handle instead of re-issuing persist() (caching.py).
+    (SparkContext, sf_dir) so the queries of one clearCache epoch share
+    one persisted handle (memo lifetime: caching.py).
     """
     return memo_persist(
         spark, "ratings", sf_dir, lambda: derive_ratings(spark, sf_dir)
@@ -1189,8 +1189,9 @@ def q_recommend_als(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Memoized (round 12): the iterative fit is the expensive part and
     # the audit companion below re-reads the SAME output relation —
-    # grading both must cost one factorization, not two.
-    return memo_process(spark, "als_recs", sf_dir, build)
+    # grading both must cost one factorization and one scoring pass per
+    # clearCache epoch, not two (memo lifetime: caching.py).
+    return memo_persist(spark, "als_recs", sf_dir, build)
 
 
 @register(

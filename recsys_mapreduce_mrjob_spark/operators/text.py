@@ -28,7 +28,7 @@ from ..functions.textfns import (
     token_count,
     tokens,
 )
-from ..caching import memo_checkpoint, memo_persist, memo_process
+from ..caching import memo_checkpoint, memo_persist
 from ..registry import register
 from ..sources.readers import load_table, rebalance_if_starved
 
@@ -487,13 +487,11 @@ def curated_docs(
         # so labeling the full corpus paid a corpus-sized scan + join
         # just to discard every label==id row.
         #
-        # memo_process (round 13): the two-star loop runs driver-side
-        # jobs EAGERLY at construction; pre-r13 it effectively ran once
-        # per process anyway (the loop's eager localCheckpoints survive
-        # clearCache inside the frozen memo lineage) — the process memo
-        # makes that explicit now that the surrounding memos are
-        # epoch-scoped.  The labels relation is pair-endpoints-sized.
-        labels = memo_process(
+        # The two-star loop runs driver-side jobs EAGERLY at construction,
+        # so the labels are memoized on their own (pair-endpoint-sized):
+        # the fixpoint runs once per clearCache epoch (memo lifetime:
+        # caching.py).
+        labels = memo_persist(
             spark,
             "curation_labels",
             sf_dir,
@@ -522,10 +520,9 @@ def curated_docs(
     # localCheckpoint, which collapses their lineage to a LogicalRDD
     # scan.  The checkpoint's build READS THE PERSISTED HANDLE, so the
     # curated data still materializes exactly once per clearCache epoch
-    # (each bench run recomputes from parquet — caching.memo_checkpoint)
-    # and the truncation costs one cache-read pass, not a second
-    # derivation.  Direct small consumers (the per-lang accounting)
-    # skip the extra pass.
+    # (memo lifetime: caching.py) and the truncation costs one
+    # cache-read pass, not a second derivation.  Direct small consumers
+    # (the per-lang accounting) skip the extra pass.
     curated = memo_persist(spark, "curated_docs", sf_dir, build)
     if not truncate:
         return curated
@@ -1546,7 +1543,7 @@ def q_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     score expression).
 
     Shape: the SAME memoized tf relation tfidf and keywords share (one
-    tokenize scan per session), a vocabulary-sized df aggregate, a
+    tokenize scan per memo epoch), a vocabulary-sized df aggregate, a
     1-row totals aggregate broadcast into the score projection, one
     per-doc window.  At 100 TB: one corpus exchange on doc_id (memo),
     vocabulary-and-scalar broadcasts, the same window exchange every
@@ -2063,9 +2060,7 @@ def q_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Memoized (same fan-out rationale as q_pack_shuffled): the fused
     # rank+offset scan reads its input twice (window + bucket totals).
-    hashed = memo_persist(
-        spark, "export_hashed", sf_dir, build_hashed, epoch_scoped=True
-    )
+    hashed = memo_persist(spark, "export_hashed", sf_dir, build_hashed)
     placed = two_phase_rank_offsets(
         hashed,
         bucket_col="bkt",
@@ -2196,9 +2191,7 @@ def q_export_manifest_rewritten(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return seeded_shuffle_key(cur_rw)
 
-    hashed = memo_persist(
-        spark, "export_hashed_rw", sf_dir, build_hashed, epoch_scoped=True
-    )
+    hashed = memo_persist(spark, "export_hashed_rw", sf_dir, build_hashed)
     placed = two_phase_rank_offsets(
         hashed,
         bucket_col="bkt",
@@ -2726,9 +2719,7 @@ def q_export_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Same memo rationale as q_export_manifest: the fused scan reads its
     # input twice (window + bucket totals).
-    hashed = memo_persist(
-        spark, "export_hashed_chunks", sf_dir, build_hashed, epoch_scoped=True
-    )
+    hashed = memo_persist(spark, "export_hashed_chunks", sf_dir, build_hashed)
     placed = two_phase_rank_offsets(
         hashed,
         bucket_col="bkt",
@@ -2906,9 +2897,7 @@ def release_manifest(
 
     # Same memo rationale as the other export capstones: the fused scan
     # reads its input twice (window + bucket totals).
-    hashed = memo_persist(
-        spark, memo_name, sf_dir, build_hashed, epoch_scoped=True
-    )
+    hashed = memo_persist(spark, memo_name, sf_dir, build_hashed)
     placed = two_phase_rank_offsets(
         hashed,
         bucket_col="bkt",

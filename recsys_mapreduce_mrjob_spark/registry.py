@@ -24,98 +24,40 @@ ORACLES: dict[str, str] = {}
 
 # ---------------------------------------------------------------------------
 # Grading order.  The driver grades a PREFIX of the registered names (rounds
-# 2–11: exactly the first 50), so registration order is the lever that
-# decides which operators get a driver correctness row.  Round-12 rotation
-# (VERDICT r11 "Next round" #1/#2/#3/#5): flagship first, then the seven
-# queries NEW this round (the decontamination-gated curation composite;
-# the PII-redacting rewrite; the ALS output-contract audit; the release
-# capstone composing decon + redaction into the chunk export; the
-# streaming curation capstone running the full gate ladder at
-# ingestion; the streaming semantic-dedup fold completing the ingestion
-# dedup ladder; the ingest→release composition grading the streamed
-# curated state through the release algebra), then the
-# three whose plan/oracle changed this round (the chunk export gained the
-# cid runtime guard; the contamination detector factored into the
-# prefixable _contam_ctes/_contam_hits pair; the ALS recommender is now
-# memoized so the audit shares one fit — all identity-preserving,
-# re-graded to prove it), then the ENTIRE 33-name r8-graded queue the r11
-# prefix deferred, then the 6 stalest r9-graded names.  After this round
-# no query's latest grade is older than r9.  tests/test_registry_order.py
-# pins this.
+# 2–13: exactly the first 50), so registration order is the lever that
+# decides which operators get a driver correctness row.  Rotation after
+# round 13 (VERDICT r13 #2): flagship first, then the eight queries whose
+# memo lifetime or plan the one-lifetime memo change touched (the curation
+# ladder's nested memos and two-star labels now rebuild per clearCache
+# epoch, which the four curation/export capstones read; the ALS output is
+# persisted once per epoch for the recommender and its audit; the span
+# report's island count is reused per memo handle; the embedding GEMM
+# sizes its tiles from a row count on an unreadable footer), then the six
+# round-13 rewrites not yet graded, then the stalest cohort
+# (graded r9) in its original order until the prefix is full.  Past the
+# prefix: the rest of the r9 cohort, then the r10-, r11- and r13-graded
+# cohorts, stalest first.  tests/test_registry_order.py pins this.
 # ---------------------------------------------------------------------------
 GRADING_ORDER: list[str] = [
     # -- slot 1: flagship (always first; re-graded every round) --
     "q_topk_similar_items",
-    # -- slots 2-8: NEW round 12, needing their FIRST driver row --
-    "q_corpus_curation_decon",
-    "q_text_pii_redact",
-    "q_recommend_als_audit",
-    "q_export_release",
-    "q_stream_curation_exec",
-    "q_stream_semdedup_exec",
-    "q_stream_release_exec",
-    # -- slots 9-11: plan/oracle CHANGED round 12, re-graded to prove
-    #    identity (cid runtime guard; contamination CTEs factored into
-    #    the prefixable _contam_ctes/_contam_hits pair; the ALS output
-    #    relation memoized so the audit shares one fit) --
+    # -- slots 2-9: memo lifetime or plan changed since the r13 grade --
+    "q_corpus_curation",
+    "q_export_manifest",
     "q_export_chunks",
-    "q_text_contamination",
+    "q_export_release",
     "q_recommend_als",
-    # -- slots 12-44: the ENTIRE 33-name r8-graded queue the r11 prefix
-    #    deferred (VERDICT r11 "Next round" #3; freshness floor rises
-    #    to r9) --
-    "q_histogram",
-    "q_agg_distinct",
-    "q_agg_grouping_sets",
-    "q_agg_percentiles",
-    "q_agg_rollup",
-    "q_agg_salted_twophase",
-    "q_audit_constraints",
+    "q_recommend_als_audit",
+    "q_dedup_spans",
     "q_dedup_embedding",
-    "q_events_funnel",
-    "q_events_retention",
-    "q_item_cooccurrence",
-    "q_item_rater_counts",
-    "q_item_similarity",
-    "q_join_anti",
-    "q_join_asof",
-    "q_join_broadcast",
-    "q_join_fuzzy_names",
-    "q_join_left",
-    "q_join_selfpair",
-    "q_join_semi",
-    "q_join_theta_range",
-    "q_pairwise_stats",
-    "q_pivot_events",
-    "q_ratings_matrix",
-    "q_recommend_topn",
-    "q_stateful_dedup_events",
-    "q_text_repetition",
-    "q_topk_similar_dimsum_exact",
-    "q_user_stats",
-    "q_window_lag_lead",
-    "q_window_range_frame",
-    "q_window_topk_per_group",
-    "q_window_tumbling",
-    # -- slots 45-50: the 6 stalest round-9-graded names that still fit
-    #    (the release capstone and the three streaming capstones took
-    #    four new-query slots; q_math_funcs, q_date_funcs, q_json_funcs
-    #    and q_array_funcs — next in the r9 cohort's original order —
-    #    lead the round-13 queue instead) --
-    "q_stream_ann_compact_exec",
-    "q_stream_attribution_outer_exec",
-    "q_stream_attribution_full_exec",
-    "q_agg_cube",
-    "q_scan_parquet",
-    "q_project_expr",
-    # ------------------------------------------------------------------
-    # Past the 50-slot grading prefix, stalest-first in the r9 cohort's
-    # ORIGINAL order: the remaining 40 r9-graded names lead the round-13
-    # stale queue (q_math_funcs, q_date_funcs and q_json_funcs joined
-    # q_array_funcs at its head when the three streaming capstones took
-    # their r12 slots), then the round-10-graded cohort, then the
-    # round-11-graded cohort (freshest — verified last round).
-    # ------------------------------------------------------------------
+    # -- slots 10-15: round-13 rewrites not yet graded --
+    "q_dedup_near",
+    "q_dedup_near_exact",
+    "q_export_manifest_rewritten",
+    "q_dedup_semantic",
+    "q_text_chunks",
+    "q_dedup_containment",
+    # -- slots 16-50: the 35 stalest r9-graded names, original order --
     "q_math_funcs",
     "q_date_funcs",
     "q_json_funcs",
@@ -151,6 +93,11 @@ GRADING_ORDER: list[str] = [
     "q_text_quality",
     "q_text_token_stats",
     "q_text_winnow_pairs",
+    # ------------------------------------------------------------------
+    # Past the 50-slot grading prefix, stalest cohort first, each in its
+    # original order: the rest of the r9-graded cohort, then the r10-,
+    # r11- and r13-graded cohorts (r13 freshest — the round-13 prefix).
+    # ------------------------------------------------------------------
     "q_text_wordcount",
     "q_udf_znorm_per_user",
     "q_join_bloom",
@@ -158,14 +105,11 @@ GRADING_ORDER: list[str] = [
     "q_pack_blocks",
     # -- round-10-graded cohort --
     "q_knn_batch_ivf",
-    "q_export_manifest_rewritten",
-    "q_dedup_semantic",
     "q_sample_source_cap",
     "q_graph_triangles",
     "q_stream_dedup_docs_exec",
     "q_scan_jsonl_docs",
     "q_dedup_lsh_recall",
-    "q_dedup_spans",
     "q_dedup_span_rewrite",
     "q_dedup_span_rewrite_audit",
     "q_stream_incremental_stats_exec",
@@ -175,7 +119,6 @@ GRADING_ORDER: list[str] = [
     "q_topk_similar_dimsum",
     "q_agg_approx_distinct",
     "q_dedup_components",
-    "q_dedup_near",
     "q_dedup_simhash",
     "q_kmeans_embeddings",
     "q_knn_cosine_lsh",
@@ -188,7 +131,6 @@ GRADING_ORDER: list[str] = [
     "q_text_bigrams",
     "q_knn_cosine_ivf_indexed",
     "q_sample_temperature",
-    "q_dedup_containment",
     "q_text_keywords",
     "q_events_scd2",
     "q_text_bm25",
@@ -204,12 +146,10 @@ GRADING_ORDER: list[str] = [
     "q_corr_min_q2",
     "q_corr_scalar_q17",
     "q_join_agg_q10",
-    # -- round-11-graded cohort (freshest — verified last round) --
+    # -- round-11-graded cohort --
     "q_stream_neardup_docs_exec",
     "q_corpus_curation_clf",
     "q_text_quality_classifier",
-    "q_text_chunks",
-    "q_dedup_near_exact",
     "q_text_tfidf",
     "q_pack_shuffled",
     "q_dedup_jaccard_pairs",
@@ -241,8 +181,6 @@ GRADING_ORDER: list[str] = [
     "q_scan_csv_ratings",
     "q_scan_csv_quoted",
     "q_stream_ann_index_exec",
-    "q_corpus_curation",
-    "q_export_manifest",
     "q_union_all",
     "q_cond_funcs",
     "q_join_salted_skew",
@@ -251,6 +189,51 @@ GRADING_ORDER: list[str] = [
     "q_filter_compound",
     "q_topn_orders",
     "q_window_rank",
+    # -- round-13-graded cohort (freshest — the round-13 prefix) --
+    "q_corpus_curation_decon",
+    "q_text_pii_redact",
+    "q_stream_curation_exec",
+    "q_stream_semdedup_exec",
+    "q_stream_release_exec",
+    "q_text_contamination",
+    "q_histogram",
+    "q_agg_distinct",
+    "q_agg_grouping_sets",
+    "q_agg_percentiles",
+    "q_agg_rollup",
+    "q_agg_salted_twophase",
+    "q_audit_constraints",
+    "q_events_funnel",
+    "q_events_retention",
+    "q_item_cooccurrence",
+    "q_item_rater_counts",
+    "q_item_similarity",
+    "q_join_anti",
+    "q_join_asof",
+    "q_join_broadcast",
+    "q_join_fuzzy_names",
+    "q_join_left",
+    "q_join_selfpair",
+    "q_join_semi",
+    "q_join_theta_range",
+    "q_pairwise_stats",
+    "q_pivot_events",
+    "q_ratings_matrix",
+    "q_recommend_topn",
+    "q_stateful_dedup_events",
+    "q_text_repetition",
+    "q_topk_similar_dimsum_exact",
+    "q_user_stats",
+    "q_window_lag_lead",
+    "q_window_range_frame",
+    "q_window_topk_per_group",
+    "q_window_tumbling",
+    "q_stream_ann_compact_exec",
+    "q_stream_attribution_outer_exec",
+    "q_stream_attribution_full_exec",
+    "q_agg_cube",
+    "q_scan_parquet",
+    "q_project_expr",
 ]
 
 

@@ -1,26 +1,16 @@
 """Pin the grading-order invariants (registry.GRADING_ORDER).
 
 The grading driver checks a PREFIX of the registered query names (rounds
-2-11: exactly the first 50), so registration order decides which operators
-receive a driver correctness row.  Round-12 contract (VERDICT r11 "Next
-round" #1, #2, #3, #5): the prefix first-grades the seven queries NEW this
-round (the decontamination-gated curation composite, the PII-redacting
-rewrite, the ALS output-contract audit, the release capstone composing
-decon + redaction into the chunk export, the streaming curation
-capstone running the full gate ladder at ingestion, the streaming
-semantic-dedup fold completing the ingestion dedup ladder, and the
-ingest→release composition grading the streamed curated state through
-the release algebra), then the three whose plan/oracle
-changed this round (the chunk export's cid runtime guard, the
-contamination detector factored into the prefixable
-``_contam_ctes``/``_contam_hits`` pair, the ALS recommender's memoized
-output relation — identity-preserving, the re-grade is the proof), then
-the ENTIRE 33-name r8-graded queue the r11 prefix deferred, then the 6
-stalest r9-graded names — after this round no query's latest grade is
-older than round 9.  The remaining 40 r9 names lead the post-prefix queue
-for round 13 (DEFERRED_R9 below), stalest-first in their original r9
-registration order: the deferral rule is "cohort age, then original
-order", not per-query judgment calls.
+2-13: exactly the first 50), so registration order decides which operators
+receive a driver correctness row.  The rotation after round 13 (VERDICT
+r13 #2): the prefix first re-grades the eight queries whose memo lifetime
+or plan the one-lifetime memo change touched (the curation ladder and
+the three export capstones reading it, the ALS recommender and its audit,
+the span report, the embedding GEMM's unknown-size tiling), then the six
+round-13 rewrites not yet graded, then the stalest cohort
+(graded r9) in its original registration order until the prefix is full.
+The rest of that cohort leads the post-prefix queue: the deferral rule
+is "cohort age, then original order", not per-query judgment calls.
 """
 
 from __future__ import annotations
@@ -29,80 +19,32 @@ from recsys_mapreduce_mrjob_spark import registry
 
 PREFIX = 50
 
-# New this round, needing their FIRST driver row.
-NEW_R12 = {
-    "q_corpus_curation_decon",
-    "q_text_pii_redact",
-    "q_recommend_als_audit",
-    "q_export_release",
-    "q_stream_curation_exec",
-    "q_stream_semdedup_exec",
-    "q_stream_release_exec",
-}
-
-# Plan/oracle changed this round — re-graded to prove identity.
-CHANGED_R12 = {
+# Memo lifetime or plan changed since their last grade.
+CHANGED = {
+    "q_corpus_curation",
+    "q_export_manifest",
     "q_export_chunks",
-    "q_text_contamination",
+    "q_export_release",
     "q_recommend_als",
-}
-
-# The full 33-name r8-graded queue the r11 prefix deferred (VERDICT r11
-# "Next round" #3 named it verbatim).
-STALE_R8 = {
-    "q_histogram",
-    "q_agg_distinct",
-    "q_agg_grouping_sets",
-    "q_agg_percentiles",
-    "q_agg_rollup",
-    "q_agg_salted_twophase",
-    "q_audit_constraints",
+    "q_recommend_als_audit",
+    "q_dedup_spans",
     "q_dedup_embedding",
-    "q_events_funnel",
-    "q_events_retention",
-    "q_item_cooccurrence",
-    "q_item_rater_counts",
-    "q_item_similarity",
-    "q_join_anti",
-    "q_join_asof",
-    "q_join_broadcast",
-    "q_join_fuzzy_names",
-    "q_join_left",
-    "q_join_selfpair",
-    "q_join_semi",
-    "q_join_theta_range",
-    "q_pairwise_stats",
-    "q_pivot_events",
-    "q_ratings_matrix",
-    "q_recommend_topn",
-    "q_stateful_dedup_events",
-    "q_text_repetition",
-    "q_topk_similar_dimsum_exact",
-    "q_user_stats",
-    "q_window_lag_lead",
-    "q_window_range_frame",
-    "q_window_topk_per_group",
-    "q_window_tumbling",
 }
 
-# The round-9-graded cohort members that FIT the remaining 6 slots —
-# the FIRST 6 of the r9 cohort in its original registration order (the
-# auditable stalest-first rule; no per-query picking; the release
-# capstone's and the three streaming capstones' new-query slots
-# displaced q_math_funcs, q_date_funcs, q_json_funcs and q_array_funcs
-# to round 13).
-R9_IN_PREFIX = [
-    "q_stream_ann_compact_exec",
-    "q_stream_attribution_outer_exec",
-    "q_stream_attribution_full_exec",
-    "q_agg_cube",
-    "q_scan_parquet",
-    "q_project_expr",
-]
+# Rewritten in round 13 and not yet graded.
+UNGRADED_REWRITES = {
+    "q_dedup_near",
+    "q_dedup_near_exact",
+    "q_export_manifest_rewritten",
+    "q_dedup_semantic",
+    "q_text_chunks",
+    "q_dedup_containment",
+}
 
-# The 40 r9-graded names the 50-slot prefix could not fit; they lead the
-# round-13 stale queue in the cohort's original order.
-DEFERRED_R9 = [
+# The round-9-graded cohort members that FIT the remaining 35 slots —
+# the FIRST 35 of the r9 cohort in its original registration order (the
+# auditable stalest-first rule; no per-query picking).
+R9_IN_PREFIX = [
     "q_math_funcs",
     "q_date_funcs",
     "q_json_funcs",
@@ -138,6 +80,11 @@ DEFERRED_R9 = [
     "q_text_quality",
     "q_text_token_stats",
     "q_text_winnow_pairs",
+]
+
+# The 5 r9-graded names the 50-slot prefix could not fit; they lead the
+# post-prefix queue in the cohort's original order.
+DEFERRED_R9 = [
     "q_text_wordcount",
     "q_udf_znorm_per_user",
     "q_join_bloom",
@@ -169,35 +116,26 @@ def test_flagship_is_first():
     assert _loaded_names()[0] == "q_topk_similar_items"
 
 
-def test_new_r12_lead_the_prefix():
-    """The never-graded new queries sit in slots 2-8 — graded even if
-    the driver's cutoff ever shrinks below 50."""
-    head = set(_loaded_names()[1 : 1 + len(NEW_R12)])
-    assert head == NEW_R12
+def test_changed_queries_lead_the_prefix():
+    """The queries whose memo lifetime or plan changed sit in slots 2-9 —
+    re-graded even if the driver's cutoff ever shrinks below 50: their
+    hashes are the proof the per-epoch rebuilds changed nothing graded."""
+    head = set(_loaded_names()[1 : 1 + len(CHANGED)])
+    assert head == CHANGED
 
 
-def test_changed_r12_precede_the_stale_queue():
-    """The three plan/oracle-changed queries re-grade immediately after
-    the new ones: their hashes are the proof the cid guard, the
-    contamination-helper factoring, and the ALS memoization changed
-    nothing graded."""
+def test_ungraded_rewrites_follow_the_changed_queries():
     names = _loaded_names()
-    start = 1 + len(NEW_R12)
-    assert set(names[start : start + len(CHANGED_R12)]) == CHANGED_R12
-
-
-def test_stale_r8_queue_precedes_r9_cohort():
-    names = _loaded_names()
-    start = 1 + len(NEW_R12) + len(CHANGED_R12)
-    assert set(names[start : start + len(STALE_R8)]) == STALE_R8
+    start = 1 + len(CHANGED)
+    assert set(names[start : start + len(UNGRADED_REWRITES)]) == UNGRADED_REWRITES
 
 
 def test_r9_tail_fills_the_prefix_stalest_first():
-    """The last 6 prefix slots take the r9 cohort's FIRST 6 names in
-    their original order — the deferral rule is cohort age + original
-    order, auditable from the lists alone."""
+    """The last prefix slots take the r9 cohort's FIRST names in their
+    original order — the deferral rule is cohort age + original order,
+    auditable from the lists alone."""
     names = _loaded_names()
-    start = 1 + len(NEW_R12) + len(CHANGED_R12) + len(STALE_R8)
+    start = 1 + len(CHANGED) + len(UNGRADED_REWRITES)
     assert names[start : start + len(R9_IN_PREFIX)] == R9_IN_PREFIX
     assert start + len(R9_IN_PREFIX) == PREFIX
 
@@ -206,23 +144,18 @@ def test_deferred_r9_leads_the_post_prefix_queue():
     assert _loaded_names()[PREFIX : PREFIX + len(DEFERRED_R9)] == DEFERRED_R9
 
 
-def test_prefix_is_exactly_the_round12_verification_set():
+def test_prefix_is_exactly_the_verification_set():
     prefix = set(_loaded_names()[:PREFIX])
     for label, group in (
         ("flagship", {"q_topk_similar_items"}),
-        ("new-r12", NEW_R12),
-        ("changed-r12", CHANGED_R12),
-        ("stale-r8", STALE_R8),
+        ("changed", CHANGED),
+        ("ungraded-rewrites", UNGRADED_REWRITES),
         ("r9-cohort", set(R9_IN_PREFIX)),
     ):
         assert group <= prefix, f"{label} outside prefix: {sorted(group - prefix)}"
     # The prefix is exactly these sets — no slot wasted on redundant variants.
     assert prefix == (
-        {"q_topk_similar_items"}
-        | NEW_R12
-        | CHANGED_R12
-        | STALE_R8
-        | set(R9_IN_PREFIX)
+        {"q_topk_similar_items"} | CHANGED | UNGRADED_REWRITES | set(R9_IN_PREFIX)
     )
 
 

@@ -262,6 +262,28 @@ def test_gemm_block_count_scales_with_rows():
     assert gemm_block_count(10, 32, floor=8) == 8
 
 
+def test_embedding_tiling_counts_rows_on_unknown_size(spark, smoke_dir, monkeypatch):
+    """An unreadable embeddings footer must size the GEMM tiles from the
+    relation's true row count, not fall back to floor tiling (at corpus
+    scale each floor tile would hold 2n/8 vectors)."""
+    from recsys_mapreduce_mrjob_spark.functions import blocking
+    from recsys_mapreduce_mrjob_spark.sources import readers
+
+    sizes = []
+    real = blocking.gemm_block_count
+
+    def spy(n_rows, *args, **kwargs):
+        sizes.append(n_rows)
+        return real(n_rows, *args, **kwargs)
+
+    monkeypatch.setattr(blocking, "gemm_block_count", spy)
+    monkeypatch.setattr(readers, "parquet_num_rows", lambda *_a: None)
+    registry.QUERIES["q_dedup_embedding"](spark, smoke_dir)
+    n = readers.load_table(spark, smoke_dir, "embeddings").count()
+    assert n > 0
+    assert sizes == [n]
+
+
 def test_lsh_ann_overlaps_exact_topk(spark, sf_dir):
     exact = [r.vec_id for r in registry.QUERIES["q_knn_cosine"](spark, sf_dir).collect()]
     approx = [
