@@ -135,8 +135,8 @@ def main() -> None:
         # parse, so the fetch contract stays symmetric) and the
         # substring-span dedup.  q_stream_ann_index_exec is deliberately
         # NOT benched: its wall is the streaming harness (chunk writes +
-        # 4 micro-batches), measured honestly by tools/bench_ann_ingest.py
-        # instead.
+        # 4 micro-batches), measured honestly by the ANN ingest rung
+        # instead (BASELINE.md, "Round-8 ANN ingest rung").
         "q_scan_csv_ratings",
         "q_scan_csv_quoted",
         "q_dedup_spans",
@@ -144,8 +144,9 @@ def main() -> None:
         # consumes the span report (Lee et al. layer end-to-end).  The
         # audit row shares its memoized islands (not separately benched);
         # the ANN compaction + outer-attribution queries are streaming-
-        # harness-bound and are measured honestly by
-        # tools/bench_ann_ingest.py --compact / the twin tests instead.
+        # harness-bound and are measured honestly by the ANN compaction
+        # rung (BASELINE.md, "Round-10 rework rungs") / the twin tests
+        # instead.
         "q_dedup_span_rewrite",
         # round 10, benched from birth: the batched ANN probe (32 query
         # vectors against the persisted index in ONE pruned scan — the
@@ -185,8 +186,8 @@ def main() -> None:
         # curation walk (the q_dedup_lsh_recall exclusion class).
         # q_stream_neardup_docs_exec is NOT benched either: like the
         # other foreachBatch execs its wall is the streaming harness;
-        # the per-batch cost claim is measured directly by
-        # tools/bench_state_ingest.py --neardup.
+        # the per-batch cost claim is measured directly by the near-dup
+        # ingest rung (BASELINE.md, "Round-11 flagship re-adjudication").
         "q_export_chunks",
         # round 12, benched from birth: the RELEASE capstone (curate →
         # decontaminate → redact PII → window cut → shuffled rank →
@@ -210,7 +211,8 @@ def main() -> None:
         # is NOT benched either: like the other foreachBatch execs its
         # wall is the streaming harness (chunk writes + 4 micro-batches);
         # the bucketed-state per-batch cost is what matters at scale and
-        # tools/bench_state_ingest.py measures that layout directly.
+        # BASELINE.md ("Round-10 rework rungs", bucketed incremental
+        # state) measures that layout directly.
     ]
     # BASELINE.md's round-5 re-measured DuckDB sf0.1 twins (seconds):
     # each exact query's twin is its CURRENT registered oracle SQL, timed

@@ -728,8 +728,8 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 8 was a bench-scale artifact).  Tile ≈ 2n/B vectors of d·8 bytes (+
     # ids); the parquet footer row count is a driver-side metadata read, no
     # Spark job.  An unreadable footer (None) costs one count of the
-    # relation instead — as in pairwise_stats_gemm — never floor tiling,
-    # whose tiles at corpus scale would hold 2n/8 vectors.  floor=8 keeps
+    # relation instead — never floor tiling, whose tiles at corpus scale
+    # would hold 2n/8 vectors.  floor=8 keeps
     # the measured-good local tiling; results are B-invariant (every
     # unordered pair lands in exactly one tile for any B — pinned at two Bs
     # in tests/test_scale_knobs.py).
@@ -1086,49 +1086,13 @@ def q_dedup_simhash_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def connected_components(
-    vertices: DataFrame, edges: DataFrame, max_iter: int = 10
-) -> DataFrame:
-    """Min-label propagation: connected components over (src, dst) edges.
-
-    Each round every vertex takes the min label among itself and its
-    neighbors — one join + one agg per round, converging in ≤ diameter
-    rounds (``max_iter`` bounds it; near-dup clusters are tiny-diameter).
-    The iterative-graph pattern: per-round work is two shuffles on the
-    vertex id, labels checkpoint-free because the frame is re-derived per
-    round from the previous (small) label relation, never from the growing
-    lineage of the big input.
-    """
-    sym = edges.select(
-        F.col("src").alias("a"), F.col("dst").alias("b")
-    ).unionByName(edges.select(F.col("dst").alias("a"), F.col("src").alias("b")))
-    labels = vertices.select("id", F.col("id").alias("label"))
-    for _ in range(max_iter):
-        neighbor_min = (
-            sym.join(labels, sym.b == labels.id)
-            .groupBy("a")
-            .agg(F.min("label").alias("nlabel"))
-        )
-        labels = (
-            labels.join(neighbor_min, labels.id == neighbor_min.a, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
-                ).alias("label"),
-            )
-        )
-        labels = labels.localCheckpoint(eager=True)  # cut the per-round lineage
-    return labels
-
-
 def connected_components_twostar(
     vertices: DataFrame, edges: DataFrame, max_rounds: int | None = None
 ) -> DataFrame:
-    """Alternating large-star/small-star connected components.
+    """Alternating large-star/small-star connected components — the
+    engine's one components algorithm.
 
-    The 100 TB-scale alternative to :func:`connected_components`:
-    min-label propagation needs one round per unit of graph DIAMETER
+    Min-label propagation needs one round per unit of graph DIAMETER
     (a 10 000-hop chain of near-identical crawl snapshots needs 10 000
     rounds), while the alternating two-star algorithm (Kiveris et al.,
     "Connected Components in MapReduce and Beyond", SoCC 2014) contracts
@@ -1144,12 +1108,11 @@ def connected_components_twostar(
 
     Both steps strictly shrink a potential function over edge targets,
     and the fixpoint is exactly the star graph (v → component-min for
-    every non-root v), so the final labels equal min-label propagation's
-    (pinned against it over random graphs and the real LSH pairs in
-    tests/test_scale_knobs.py).  Per-round cost is two hash shuffles on
-    the node id over the CURRENT edge set — which only ever shrinks
-    toward one edge per non-root node — with ``localCheckpoint`` cutting
-    the per-round lineage like the label-prop loop.
+    every non-root v), so the final labels are the component minima
+    (pinned against union-find in tests/test_scale_knobs.py).  Per-round
+    cost is two hash shuffles on the node id over the CURRENT edge set —
+    which only ever shrinks toward one edge per non-root node — with
+    ``localCheckpoint`` cutting the per-round lineage.
 
     Termination (ADVICE r5, test r12): the loop runs TO THE FIXPOINT —
     it stops exactly when the edge set IS a star forest, which is
@@ -1285,10 +1248,35 @@ def pair_component_labels(
     )
 
 
+def _component_clusters(
+    spark: SparkSession, sf_dir: str, pairs: DataFrame
+) -> DataFrame:
+    """Shared body of the components queries: two-star labels over every
+    document with the near-dup pairs as edges, then multi-doc clusters
+    only — ``(doc_id, component_id = min doc_id, component_size)``."""
+    edges = pairs.select(
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+    )
+    docs = load_table(spark, sf_dir, "documents").select(
+        F.col("doc_id").alias("id")
+    )
+    labels = connected_components_twostar(docs, edges)
+    sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("component_size"))
+    return (
+        labels.join(sizes, "label")
+        .where(F.col("component_size") > 1)
+        .select(
+            F.col("id").alias("doc_id"),
+            F.col("label").alias("component_id"),
+            "component_size",
+        )
+    )
+
+
 @register("q_dedup_components")  # rows-only: iterative graph algorithm
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate CLUSTERS: the transitive closure of the MinHash-LSH
-    pairs via min-label connected components — the step an LLM dedup
+    pairs via two-star connected components — the step an LLM dedup
     pipeline runs after pair generation, so that A≈B≈C collapses to one
     keeper even when A and C never collided in a band.  (LSH pairs, not
     the rare-shingle pairs: rare-shingle candidacy needs a df=2 shingle,
@@ -1296,45 +1284,14 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     banding finds every identical pair by construction.)  Output: every
     doc in a multi-doc component, its component id (= min doc_id, the
     keeper) and component size."""
-    pairs = q_dedup_near(spark, sf_dir)
-    edges = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("id")
-    )
-    labels = connected_components(docs, edges, max_iter=10)
-    sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("component_size"))
-    return (
-        labels.join(sizes, "label")
-        .where(F.col("component_size") > 1)
-        .select(
-            F.col("id").alias("doc_id"),
-            F.col("label").alias("component_id"),
-            "component_size",
-        )
-    )
-
-
-def _component_clusters(labels: DataFrame) -> DataFrame:
-    """Shared tail of the components queries: multi-doc clusters only."""
-    sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("component_size"))
-    return (
-        labels.join(sizes, "label")
-        .where(F.col("component_size") > 1)
-        .select(
-            F.col("id").alias("doc_id"),
-            F.col("label").alias("component_id"),
-            "component_size",
-        )
-    )
+    return _component_clusters(spark, sf_dir, q_dedup_near(spark, sf_dir))
 
 
 def component_walk_ctes(prefix: str = "") -> str:
     """The recursive-CTE reachability walk over ``near_pairs`` —
     ``{prefix}edges`` (symmetrized) → ``{prefix}walk`` (label = every id
     reachable from each seed) → ``{prefix}labels`` (min reachable id per
-    doc, i.e. exactly the min-label-propagation / two-star fixpoint).
+    doc, i.e. exactly the two-star fixpoint).
     One builder shared by the components oracle AND the corpus-curation
     oracle (code-review r6: the chain was duplicated verbatim under
     renamed CTEs, so a future walk fix could silently diverge the two).
@@ -1371,19 +1328,11 @@ def q_dedup_components_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-to-end — the oracle computes the identical pair set, then the
     component labels as a recursive-CTE reachability walk (label = min
     node id reachable; the symmetric edge set makes that exactly the
-    min-label-propagation fixpoint the Spark side converges to).  The
-    iterative engine algorithm and its cluster-scale shape are unchanged
-    from :func:`q_dedup_components`; what this adds is hash-level driver
+    two-star fixpoint the Spark side converges to, at any chain length).
+    What this adds over :func:`q_dedup_components` is hash-level oracle
     verification for the GRAPH stage of the dedup pipeline, which was
     previously rows-only by transitivity from its xxhash64 input."""
-    pairs = q_dedup_near_exact(spark, sf_dir)
-    edges = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("id")
-    )
-    return _component_clusters(connected_components(docs, edges, max_iter=10))
+    return _component_clusters(spark, sf_dir, q_dedup_near_exact(spark, sf_dir))
 
 
 @register("q_dedup_components_twostar", oracle=_COMPONENTS_EXACT_ORACLE)
@@ -1391,23 +1340,16 @@ def q_dedup_components_twostar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clusters computed by the ALTERNATING TWO-STAR algorithm
     (:func:`connected_components_twostar`) over the same portable-hash
     LSH pairs, graded against the same recursive-CTE reachability oracle
-    as :func:`q_dedup_components_exact` — both backends must land on the
-    identical (doc, component-min, size) relation.
+    as :func:`q_dedup_components_exact`.
 
-    Why it exists: min-label propagation is diameter-bounded, which is
-    fine for near-dup clusters (tiny diameters) but wrong as THE
-    components primitive at 100 TB, where a crawl's duplicate chains can
-    be arbitrarily long.  Two-star is the O(log² n)-round MapReduce-model
-    algorithm for that regime; registering it with a full oracle makes
-    the scale path driver-verified rather than an untested footnote."""
-    pairs = q_dedup_near_exact(spark, sf_dir)
-    edges = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("id")
-    )
-    return _component_clusters(connected_components_twostar(docs, edges))
+    Registered when the other components queries still ran min-label
+    propagation, which is diameter-bounded: a fixed 10-round budget
+    silently mislabels any duplicate chain longer than 10 hops, and a
+    crawl's chains at 100 TB can be arbitrarily long.  Two-star is the
+    O(log² n)-round MapReduce-model algorithm for that regime and is now
+    the one components algorithm, so this name computes exactly what
+    :func:`q_dedup_components_exact` does."""
+    return _component_clusters(spark, sf_dir, q_dedup_near_exact(spark, sf_dir))
 
 
 @register(

@@ -929,8 +929,9 @@ def q_knn_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Persisted-index directories, one per (SparkContext, sf_dir) — the index
 # build (a full assignment pass + partitioned write) runs ONCE per session
 # and every subsequent query is a pruned scan, which is the entire point
-# of an IVF index (VERDICT r6 #5: the winning shape from
-# tools/bench_ann_scale.py, registered as a declared query).
+# of an IVF index (VERDICT r6 #5: the winning shape from the ANN scale
+# rung, BASELINE.md "Notes for the 2× comparison", registered as a
+# declared query).
 _IVF_INDEX_DIRS: dict[tuple[str, str], str] = {}
 
 
@@ -962,9 +963,9 @@ def ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
 @register("q_knn_cosine_ivf_indexed", oracle=_IVF_ORACLE)
 def q_knn_cosine_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with a PERSISTED index — the production ANN query shape, and
-    the one that wins at scale (tools/bench_ann_scale.py, BASELINE.md
-    "ANN scale rung": flat ~0.6 s probe at 200k vectors while the exact
-    scan grows linearly; recall@10 = 1.00).
+    the one that wins at scale (BASELINE.md, "Notes for the 2×
+    comparison", ANN scale rung: flat ~0.6 s probe at 200k vectors
+    while the exact scan grows linearly; recall@10 = 1.00).
 
     `q_knn_cosine_ivf` recomputes the coarse-quantizer assignment per
     query — correct, but the assignment itself scans the corpus K-fold,
@@ -1051,7 +1052,8 @@ def batch_probe_ivf(
     cell — and a per-qid WindowGroupLimit takes top-10.  Index-row norms
     hoist once per row, probe norms once per probe; only the dot folds
     per (row, probe) pair.  Cost: ONE pruned index scan amortized over
-    all N probes (per-probe cost flat in N — tools/bench_ann_batch.py),
+    all N probes (per-probe cost flat in N — BASELINE.md, "Round-10
+    rework rungs", batched ANN probe rung),
     vs N scans for N single-probe queries."""
     from pyspark.sql import Window
 

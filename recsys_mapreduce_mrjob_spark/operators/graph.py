@@ -290,9 +290,10 @@ def _tri_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived the way the flagship derives its pair stats: below the
     GEMM/join crossover the pair space exists only inside the blocked
     sparse-Gram tile kernel with the ratings derivation fused in
-    (``pairwise_stats_gemm`` ``pre_aggregate`` — no 13.1M-row pair
-    exchange, the shuffle ships |ratings|·B narrow rows), above it the
-    all-JVM relational self-join (``item_cooccurrence``).  The two forms
+    (``pairwise_stats_gemm`` ``counts_only`` — no 13.1M-row pair
+    exchange, the shuffle ships |ratings|·B narrow rows), above it or on
+    an unreadable lineitem footer the all-JVM relational self-join
+    (``item_cooccurrence``).  The two forms
     are hash-equal (tests/test_scale_knobs.py pins the GEMM/join
     equivalence) and the edge list is pure integer counts, so the
     dispatch can never move a graded value.
@@ -311,16 +312,14 @@ def _tri_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         n = parquet_num_rows(sf_dir, "lineitem")
-        if n is not None and n >= _FLAGSHIP_JOIN_MIN_ROWS:
+        if n is None or n >= _FLAGSHIP_JOIN_MIN_ROWS:
             return item_cooccurrence(
                 _cached_ratings(spark, sf_dir), min_support=_TRI_MIN_SUPPORT
             ).select("item_x", "item_y")
-        n_blocks = gemm_block_count(n) if n is not None else None
         return pairwise_stats_gemm(
             raw_ratings(spark, sf_dir),
             min_support=_TRI_MIN_SUPPORT,
-            n_blocks=n_blocks,
-            pre_aggregate=True,
+            n_blocks=gemm_block_count(n),
             counts_only=True,  # edge list: no grams, no rating shuffle
         ).select("item_x", "item_y")
 

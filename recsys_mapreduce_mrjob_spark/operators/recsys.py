@@ -179,14 +179,26 @@ def gemm_block_count(n_rows: int, row_bytes: int = _GEMM_ROW_BYTES) -> int:
 
 def pairwise_stats_gemm(
     ratings: DataFrame,
-    min_support: int = 2,
-    n_blocks: int | None = None,
-    with_rater_counts: bool = False,
-    pre_aggregate: bool = False,
+    min_support: int,
+    n_blocks: int,
     counts_only: bool = False,
 ) -> DataFrame:
-    """Blocked-GEMM twin of :func:`pairwise_stats` — same output relation,
-    sparse-Gram execution (VERDICT r4 #2).
+    """Blocked-GEMM twin of :func:`pairwise_stats` plus per-item rater
+    counts — sparse-Gram execution with the ratings derivation fused in
+    (VERDICT r4 #2).
+
+    Input: RAW ``(user_id, item_id, rating)`` rows before the
+    (user, item) aggregation — ``rating`` holds integer-valued
+    quantities and a (user, item) key may repeat (:func:`raw_ratings`).
+    Each tile first reduces them to ``round(avg(qty), 6)``, so the plan
+    has NO (user, item) aggregation exchange at all (scan → broadcast
+    join → one tile exchange → kernel).  Duplicates of a (user, item)
+    key share the item, hence the block, hence the tile, so the
+    tile-local aggregate is exact.  Rounding is exact decimal HALF_UP via
+    integer arithmetic — ``(2·Σq·10⁶ + cnt) // (2·cnt)`` — bit-identical
+    to Spark/DuckDB ``round(double, 6)`` because Σq is an exact int64
+    (the kernel asserts quantity integrality loudly rather than risk a
+    silent 1-ulp drift from float rounding).
 
     All five sufficient statistics are Gram products of the user×item
     rating matrix R and its 0/1 mask M: n = MᵀM, Σxy = RᵀR, Σx = RᵀM,
@@ -199,7 +211,7 @@ def pairwise_stats_gemm(
 
     Tiling is the ``q_dedup_embedding`` scheme (dedup.py:260): items hash
     into B blocks; each unordered block pair (bi ≤ bj) is one
-    ``applyInPandas`` group holding both blocks' full rating columns, so
+    ``applyInArrow`` group holding both blocks' full rating columns, so
     every item pair lands in exactly one tile with ALL its co-raters —
     per-pair sums are complete tile-locally and ``min_support`` prunes
     in-kernel.  The container has no scipy, so the kernel is the sparse
@@ -213,44 +225,26 @@ def pairwise_stats_gemm(
     already absorbs, and the equivalence test pins hash-equality).
 
     B is the task-size knob: per-tile bytes ≈ 2·|ratings|·rowbytes/B and
-    tile count B(B+1)/2 should comfortably exceed the executor-core count.
-    ``n_blocks=None`` derives it from the relation size
-    (:func:`gemm_block_count` — one cheap count on the cached relation);
-    measured at sf0.1: B=4 1.54 s vs B=8 2.46 s vs B=16 4.33 s vs the
-    relational join's 3.33 s, because the replicate shuffle is O(n·B).
+    tile count B(B+1)/2 should comfortably exceed the executor-core count
+    (:func:`gemm_block_count` derives it from a row count); measured at
+    sf0.1: B=4 1.54 s vs B=8 2.46 s vs B=16 4.33 s vs the relational
+    join's 3.33 s, because the replicate shuffle is O(n·B).
 
-    ``with_rater_counts=True`` additionally emits per-pair ``nx``/``ny``
-    (distinct raters of item_x / item_y).  Blocks partition items and a
-    tile holds BOTH blocks' complete rating columns, so the per-item
-    rater count is exact tile-locally — this folds what is otherwise a
-    separate ratings scan plus two downstream joins
-    (:func:`item_rater_counts`) into the same kernel pass for free.
+    Output: ``item_x, item_y, n, sxy, sx, sy, sxx, syy, nx, ny`` —
+    ``nx``/``ny`` are the distinct raters of item_x / item_y.  Blocks
+    partition items and a tile holds BOTH blocks' complete rating
+    columns, so the per-item rater count is exact tile-locally — this
+    folds what is otherwise a separate ratings scan plus two downstream
+    joins (:func:`item_rater_counts`) into the same kernel pass.
 
     ``counts_only=True`` emits just ``(item_x, item_y, n)`` — the
     co-occurrence EDGE relation (graph.py's triangle input) — skipping
-    every rating gather and all five gram ``bincount`` passes over the
-    event space, and (under ``pre_aggregate``) the decimal-rounding
-    arithmetic: the count needs (user, item)-uniqueness, never the
-    value.  Counts are integers, so the form is bit-equal to the
-    relational ``item_cooccurrence`` (pinned in
-    tests/test_scale_knobs.py) and to the full kernel's ``n`` column.
-
-    ``pre_aggregate=True`` fuses the ratings DERIVATION into the kernel
-    too: the input ``rating`` column then holds raw integer-valued
-    quantities with duplicate (user, item) rows, and each tile first
-    reduces them to ``round(avg(qty), 6)`` — so the plan has NO
-    (user, item) aggregation exchange at all (scan → broadcast join →
-    one tile exchange → kernel).  Duplicates of a (user, item) key share
-    the item, hence the block, hence the tile, so the tile-local
-    aggregate is exact.  Rounding is exact decimal HALF_UP via integer
-    arithmetic — ``(2·Σq·10⁶ + cnt) // (2·cnt)`` — bit-identical to
-    Spark/DuckDB ``round(double, 6)`` because Σq is an exact int64 (the
-    kernel asserts quantity integrality loudly rather than risk a silent
-    1-ulp drift from float rounding).
+    every rating gather, all five gram ``bincount`` passes over the event
+    space and the decimal-rounding arithmetic: the count needs
+    (user, item)-uniqueness, never the value.  Counts are integers, so
+    the form is bit-equal to the relational ``item_cooccurrence`` (pinned
+    in tests/test_scale_knobs.py) and to the full kernel's ``n`` column.
     """
-    if n_blocks is None:
-        n_blocks = gemm_block_count(ratings.count())
-
     # Side membership ships as ONE boolean (is_x) instead of the 8-byte
     # blk column — the replicate exchange is the plan's largest shuffle,
     # so row width matters.  The (bi, bj) tag stays TWO LONG columns:
@@ -287,23 +281,14 @@ def pairwise_stats_gemm(
         F.col("bp.is_x").alias("is_x"),
     )
 
-    if counts_only and with_rater_counts:
-        raise ValueError(
-            "counts_only and with_rater_counts are mutually exclusive"
+    out_dtypes = {"item_x": "int64", "item_y": "int64", "n": "int64"}
+    if not counts_only:
+        out_dtypes.update(
+            {
+                "sxy": "float64", "sx": "float64", "sy": "float64",
+                "sxx": "float64", "syy": "float64", "nx": "int64", "ny": "int64",
+            }
         )
-    if counts_only:
-        out_cols = ["item_x", "item_y", "n"]
-        out_dtypes = {"item_x": "int64", "item_y": "int64", "n": "int64"}
-    else:
-        out_cols = ["item_x", "item_y", "n", "sxy", "sx", "sy", "sxx", "syy"]
-        out_dtypes = {
-            "item_x": "int64", "item_y": "int64", "n": "int64",
-            "sxy": "float64", "sx": "float64", "sy": "float64",
-            "sxx": "float64", "syy": "float64",
-        }
-        if with_rater_counts:
-            out_cols += ["nx", "ny"]
-            out_dtypes.update({"nx": "int64", "ny": "int64"})
 
     def stats_tile(tbl):
         # Arrow-native group kernel (round 5: applyInArrow — the Arrow
@@ -314,7 +299,7 @@ def pairwise_stats_gemm(
 
         def empty():
             return pa.table(
-                {c: np.array([], dtype=out_dtypes[c]) for c in out_cols}
+                {c: np.array([], dtype=t) for c, t in out_dtypes.items()}
             )
 
         bi = int(tbl.column("bi")[0].as_py())
@@ -342,40 +327,37 @@ def pairwise_stats_gemm(
             return empty()
 
         def side(part):
+            # Raw rows → (user, item)-unique rows sorted by (user, item):
+            # within a user's run items are ascending, which is what lets
+            # the diagonal tile generate the strict upper triangle
+            # DIRECTLY (round 7) instead of expanding the full cross and
+            # masking half of it away.
             u = part[0].astype(np.int64, copy=False)
             i = part[1].astype(np.int64, copy=False)
-            v = None if counts_only else part[2].astype(np.float64, copy=False)
-            if pre_aggregate:
-                key = (u << np.int64(32)) | i
-                if counts_only:
-                    # Counts need (user, item)-uniqueness, never the
-                    # value: skip the inverse map, the weighted bincount,
-                    # and the decimal-rounding arithmetic entirely.
-                    uk = np.unique(key)
-                    return (uk >> np.int64(32), uk & np.int64(0xFFFFFFFF), None)
-                # Raw (user, item, qty) rows → round(avg(qty), 6) per key,
-                # exact HALF_UP in integer arithmetic (see docstring).
-                if not (v == np.floor(v)).all():
-                    raise ValueError(
-                        "pre_aggregate=True requires integer-valued "
-                        "quantities for exact decimal rounding"
-                    )
-                uk, inv = np.unique(key, return_inverse=True)
-                cnt = np.bincount(inv).astype(np.int64)
-                sq = np.rint(np.bincount(inv, weights=v)).astype(np.int64)
-                k6 = (2 * sq * np.int64(1_000_000) + cnt) // (2 * cnt)
-                return (
-                    uk >> np.int64(32),
-                    uk & np.int64(0xFFFFFFFF),
-                    k6.astype(np.float64) / 1e6,
+            key = (u << np.int64(32)) | i
+            if counts_only:
+                # Counts need (user, item)-uniqueness, never the value:
+                # skip the inverse map, the weighted bincount, and the
+                # decimal-rounding arithmetic entirely.
+                uk = np.unique(key)
+                return (uk >> np.int64(32), uk & np.int64(0xFFFFFFFF), None)
+            # round(avg(qty), 6) per key, exact HALF_UP in integer
+            # arithmetic (see docstring).
+            v = part[2].astype(np.float64, copy=False)
+            if not (v == np.floor(v)).all():
+                raise ValueError(
+                    "pairwise_stats_gemm requires integer-valued "
+                    "quantities for exact decimal rounding"
                 )
-            # Composite (user, item) sort — matching the pre_aggregate
-            # path's np.unique key order: within a user's run items are
-            # ascending, which is what lets the diagonal tile generate
-            # the strict upper triangle DIRECTLY (round 7) instead of
-            # expanding the full cross and masking half of it away.
-            order = np.argsort((u << np.int64(32)) | i, kind="stable")
-            return (u[order], i[order], None if counts_only else v[order])
+            uk, inv = np.unique(key, return_inverse=True)
+            cnt = np.bincount(inv).astype(np.int64)
+            sq = np.rint(np.bincount(inv, weights=v)).astype(np.int64)
+            k6 = (2 * sq * np.int64(1_000_000) + cnt) // (2 * cnt)
+            return (
+                uk >> np.int64(32),
+                uk & np.int64(0xFFFFFFFF),
+                k6.astype(np.float64) / 1e6,
+            )
 
         ux, ix, rx = side(left)
         uy, iy, ry = (ux, ix, rx) if bi == bj else side(right)
@@ -403,8 +385,9 @@ def pairwise_stats_gemm(
         #     division), and
         #   - the diagonal tile emits the strict upper triangle DIRECTLY
         #     (x-row r pairs only with the kx−1−r rows after it in the
-        #     same user run — item order ⟺ row order), halving its event
-        #     count and deleting the filter pass.
+        #     same user run — item order ⟺ row order, and the keys are
+        #     unique, so every emitted pair has item_x < item_y), halving
+        #     its event count and deleting the filter pass.
         def _x_rows(k):
             # Row indices of every x row of common users + position-in-run.
             cum = np.concatenate(([0], np.cumsum(k)[:-1]))
@@ -436,18 +419,6 @@ def pairwise_stats_gemm(
                 swap = ida > idb
                 ra, rb = np.where(swap, rb, ra), np.where(swap, ra, rb)
             ida, idb = np.minimum(ida, idb), np.maximum(ida, idb)
-        else:
-            # Diagonal guard (code-review r7): with UNIQUE (user, item)
-            # input the sorted run gives ida < idb by construction, but a
-            # duplicate rating row pairs an item with itself — the pre-
-            # rewrite kernel dropped those via its `ida < idb` filter, so
-            # keep that robustness for non-pre_aggregate callers (one
-            # vectorized compare; no-op on clean input).
-            keep = ida != idb
-            if not keep.all():
-                ida, idb = ida[keep], idb[keep]
-                if not counts_only:
-                    ra, rb = ra[keep], rb[keep]
         if ida.size == 0:
             return empty()
         codes = (ida << np.int64(32)) | idb
@@ -478,6 +449,15 @@ def pairwise_stats_gemm(
         }
         if counts_only:
             return pa.table(out)
+        # Both sides are (user, item)-unique, so rows-per-item IS the
+        # distinct-rater count; both blocks are complete in this tile.
+        uix, cix = np.unique(ix, return_counts=True)
+        uiy, ciy = np.unique(iy, return_counts=True)
+        all_ids = np.concatenate((uix, uiy))
+        all_cnt = np.concatenate((cix, ciy))
+        order = np.argsort(all_ids, kind="stable")
+        all_ids, all_cnt = all_ids[order], all_cnt[order]
+        raters = lambda ids: all_cnt[np.searchsorted(all_ids, ids)]
         out.update(
             {
                 "sxy": gram(ra * rb),
@@ -485,19 +465,10 @@ def pairwise_stats_gemm(
                 "sy": gram(rb),
                 "sxx": gram(ra * ra),
                 "syy": gram(rb * rb),
+                "nx": raters(item_x).astype(np.int64),
+                "ny": raters(item_y).astype(np.int64),
             }
         )
-        if with_rater_counts:
-            # Ratings are (user, item)-unique, so rows-per-item IS the
-            # distinct-rater count; both blocks are complete in this tile.
-            uix, cix = np.unique(ix, return_counts=True)
-            uiy, ciy = np.unique(iy, return_counts=True)
-            all_ids = np.concatenate((uix, uiy))
-            all_cnt = np.concatenate((cix, ciy))
-            order = np.argsort(all_ids, kind="stable")
-            all_ids, all_cnt = all_ids[order], all_cnt[order]
-            out["nx"] = all_cnt[np.searchsorted(all_ids, item_x)].astype(np.int64)
-            out["ny"] = all_cnt[np.searchsorted(all_ids, item_y)].astype(np.int64)
         return pa.table(out)
 
     if counts_only:
@@ -505,10 +476,8 @@ def pairwise_stats_gemm(
     else:
         schema = (
             "item_x long, item_y long, n long, sxy double, "
-            "sx double, sy double, sxx double, syy double"
+            "sx double, sy double, sxx double, syy double, nx long, ny long"
         )
-        if with_rater_counts:
-            schema += ", nx long, ny long"
     return replicated.groupBy("bi", "bj").applyInArrow(stats_tile, schema=schema)
 
 
@@ -517,7 +486,6 @@ def item_similarity(
     min_support: int = 2,
     impl: str = "join",
     n_blocks: int | None = None,
-    pre_aggregate: bool = False,
 ) -> DataFrame:
     """R7–R11: all five reference similarity metrics per ordered pair.
 
@@ -525,9 +493,11 @@ def item_similarity(
     (all metrics rounded to 6 — SURVEY.md §7.4).
 
     ``impl`` picks the pair-stage execution: ``"join"`` (relational
-    self-join + hash agg — the tested fallback) or ``"gemm"`` (blocked
-    sparse-Gram tiles, :func:`pairwise_stats_gemm`); both produce the same
-    relation (equivalence pinned in tests/test_scale_knobs.py).
+    self-join + hash agg over derived ratings — the tested fallback) or
+    ``"gemm"`` (blocked sparse-Gram tiles over RAW rating rows with the
+    derivation fused in, :func:`pairwise_stats_gemm`, ``n_blocks``
+    required); both produce the same relation (equivalence pinned in
+    tests/test_scale_knobs.py).
     """
     n = F.col("n").cast("double")
     corr = S.correlation(
@@ -537,13 +507,7 @@ def item_similarity(
         # The tile kernel emits nx/ny itself (blocks are item-complete),
         # so the similarity math is a pure projection — no rater joins,
         # no second scan of the ratings relation.
-        joined = pairwise_stats_gemm(
-            ratings,
-            min_support,
-            n_blocks=n_blocks,
-            with_rater_counts=True,
-            pre_aggregate=pre_aggregate,
-        )
+        joined = pairwise_stats_gemm(ratings, min_support, n_blocks)
     else:
         stats = pairwise_stats(ratings, min_support)
         raters = item_rater_counts(ratings, assume_unique=True)
@@ -580,7 +544,6 @@ def topk_similar_items(
     k: int = 10,
     impl: str = "join",
     n_blocks: int | None = None,
-    pre_aggregate: bool = False,
 ) -> DataFrame:
     """R13+R14: per-item top-K neighbors by correlation.
 
@@ -591,9 +554,7 @@ def topk_similar_items(
     directly; ordering uses the ROUNDED metrics plus unique tie-breaks so
     the selected set is deterministic across engines (SURVEY.md §7.4).
     """
-    sims = item_similarity(
-        ratings, impl=impl, n_blocks=n_blocks, pre_aggregate=pre_aggregate
-    )
+    sims = item_similarity(ratings, impl=impl, n_blocks=n_blocks)
     w = Window.partitionBy("item_x").orderBy(
         F.desc("corr"), F.desc("cos"), F.asc("item_y")
     )
@@ -902,9 +863,8 @@ def q_topk_similar_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Below ``_FLAGSHIP_JOIN_MIN_ROWS`` the pair stage runs as blocked
     sparse-Gram tiles with the ratings derivation AND the rater counts
-    fused into the kernel (:func:`pairwise_stats_gemm`
-    ``pre_aggregate``/``with_rater_counts``, VERDICT r4 #2): scan →
-    broadcast orders join → one tile exchange → Arrow kernel →
+    fused into the kernel (:func:`pairwise_stats_gemm`, VERDICT r4 #2):
+    scan → broadcast orders join → one tile exchange → Arrow kernel →
     similarity projection → top-K window.  Above it, the all-JVM
     relational self-join form (the same plan ``q_pairwise_stats``
     registers, equivalence-pinned by tests/test_scale_knobs.py).
@@ -921,31 +881,30 @@ def q_topk_similar_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from the lineitem parquet footer row count (a driver-side
     metadata read, no Spark job — |ratings| ≤ |lineitem| and within
     ~0.2% of it at every tested SF); on a real cluster this is catalog
-    statistics.  Unreadable footer → GEMM with a relation-count-derived
-    tile count (the conservative small-scale choice)."""
+    statistics.  An unreadable footer (a directory-shaped dataset) counts
+    as large: the join arm, which wins above the crossover and never
+    sizes a tile from a guess."""
     from ..sources.readers import parquet_num_rows
 
     _n = parquet_num_rows(sf_dir, "lineitem")
-    if _n is not None and _n >= _FLAGSHIP_JOIN_MIN_ROWS:
+    if _n is None or _n >= _FLAGSHIP_JOIN_MIN_ROWS:
         return topk_similar_items(
             _cached_ratings(spark, sf_dir), k=10, impl="join"
         )
-    # None (unreadable footer) → pairwise_stats_gemm counts the relation.
-    n_blocks = gemm_block_count(_n) if _n is not None else None
     return topk_similar_items(
         raw_ratings(spark, sf_dir),
         k=10,
         impl="gemm",
-        n_blocks=n_blocks,
-        pre_aggregate=True,
+        n_blocks=gemm_block_count(_n),
     )
 
 
 def raw_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw (user_id, item_id, quantity) rows BEFORE the (user, item)
-    aggregation — the input whose derivation the ``pre_aggregate`` tile
-    kernel fuses in, so the plan has no aggregation exchange at all
-    (scan → broadcast orders join → tile exchange).  The bench-scale
+    aggregation — the input whose derivation the
+    :func:`pairwise_stats_gemm` tile kernel fuses in, so the plan has no
+    aggregation exchange at all (scan → broadcast orders join → tile
+    exchange).  The bench-scale
     lineitem parquet plans 3 input splits, which would serialize the
     broadcast join + B-way replicate explode + tile shuffle write behind
     3 tasks — round-robin to core count first (a no-op on an

@@ -556,22 +556,18 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``q_dedup_components_twostar``).  Near-dup clusters are computed over
     the FULL corpus (dedup is independent of the quality gate, as in
     production pipelines: a low-quality copy still marks its twin as a
-    duplicate cluster member) and every component's min doc_id is the
-    keeper; the exact md5 window stays because docs too short to shingle
-    never enter the LSH pair space.
+    duplicate cluster member); the exact md5 window stays because docs
+    too short to shingle never enter the LSH pair space.
 
-    Keeper semantics, explicit (ADVICE r6): the keeper of a near-dup
-    component is its min doc_id over the FULL corpus, chosen BEFORE the
-    quality/lang/exact-dedup gates.  If that keeper was itself removed
-    by an upstream gate, the whole cluster is dropped — no gate-surviving
-    member is promoted to keeper.  That is deliberate: a near-dup cluster
-    whose canonical representative failed the quality bar is a cluster of
-    near-copies of a rejected document, and promoting a sibling would
-    re-admit content the gate rejected (the siblings differ from the
-    rejected keeper only by near-dup noise).  It also keeps keeper choice
-    independent of gate thresholds, so tightening the quality bar can
-    only shrink the corpus, never reshuffle which duplicate survives.
-    Both engines implement the same rule (oracle graded green).
+    Keeper semantics, explicit (the r8 rule, :func:`curated_docs`): the
+    keeper of a near-dup component is the min doc_id among its GATE
+    SURVIVORS — the members that passed the quality, language-ID and
+    exact-dedup gates — and every other survivor of the component is
+    dropped.  A component whose global-min doc failed a gate therefore
+    still contributes its smallest surviving member; only a component
+    with no survivor contributes nothing.  Both engines implement the
+    same rule (the oracle's ``near_keeper`` CTE takes ``min(id)`` over
+    ``near_surv``).
 
     At 100 TB the dedup shuffles
     partition on content-derived keys (uniform by construction, no skew),

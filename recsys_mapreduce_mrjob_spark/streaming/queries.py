@@ -377,18 +377,6 @@ def _ingest_ivf(spark: SparkSession, sf_dir: str, prefix: str) -> str:
     )
 
 
-def _probe_ivf_table(
-    spark: SparkSession, sf_dir: str, index_path: str
-) -> DataFrame:
-    """Path-taking thin wrapper over the ONE shared probe definition
-    (``operators.embeddings.probe_ivf`` — code-review r9 unified the
-    three copies of the rank block); kept here because the streamed
-    queries and tools/bench_ann_ingest.py address the index by PATH."""
-    from ..operators.embeddings import probe_ivf
-
-    return probe_ivf(spark, sf_dir, spark.read.parquet(index_path))
-
-
 @register("q_stream_ann_index_exec", oracle=_ANN_ORACLE)
 def q_stream_ann_index_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The persisted IVF ANN index maintained INCREMENTALLY off a vector
@@ -407,7 +395,10 @@ def q_stream_ann_index_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-10 — and because assignment is row-local and the quantizer is
     pinned at stream start, the streamed index answers the SAME exact
     oracle bit-identically."""
-    return _probe_ivf_table(spark, sf_dir, _ingest_ivf(spark, sf_dir, "spark_ann_ingest_"))
+    from ..operators.embeddings import probe_ivf
+
+    index_path = _ingest_ivf(spark, sf_dir, "spark_ann_ingest_")
+    return probe_ivf(spark, sf_dir, spark.read.parquet(index_path))
 
 
 @register("q_stream_ann_compact_exec", oracle=_ANN_ORACLE)
@@ -422,13 +413,15 @@ def q_stream_ann_compact_exec(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-pruned probe, answering the same exact oracle.  Closes
     VERDICT r8 "what's missing" #2: without this pass the probe scan
     reads one small file per (batch × probed cell) forever; with it,
-    probe wall is flat in batch count (tools/bench_ann_ingest.py
-    ``--compact`` rung) and the probe RESULT is bit-identical pre/post
-    (tests/test_ann_compaction.py)."""
+    probe wall is flat in batch count (BASELINE.md, "Round-10 rework
+    rungs", ANN compaction rung) and the probe RESULT is bit-identical
+    pre/post (tests/test_ann_compaction.py)."""
+    from ..operators.embeddings import probe_ivf
     from .twins import compact_ivf_index
 
     index_path = _ingest_ivf(spark, sf_dir, "spark_ann_compact_")
-    return _probe_ivf_table(spark, sf_dir, compact_ivf_index(spark, index_path))
+    compacted = compact_ivf_index(spark, index_path)
+    return probe_ivf(spark, sf_dir, spark.read.parquet(compacted))
 
 
 @register("q_stream_scd2_exec", oracle=_SCD2_ORACLE)

@@ -503,7 +503,7 @@ def _bucketed_fold(
       marker exists.  The current state is each bucket's newest complete
       version (:func:`bucket_latest_paths`, :func:`read_bucketed_state`),
       so per-batch work is O(touched buckets), not O(|state|)
-      (tools/bench_state_ingest.py; ``n_buckets=1`` reproduces the old
+      (BASELINE.md, "Round-10 rework rungs"; ``n_buckets=1`` reproduces the old
       full-rewrite shape), and older versions are never overwritten
       while being read.
     - **Replay guard.**  A batch reads versions strictly below its own
@@ -1595,8 +1595,9 @@ def band_state_reader(
     batch_id: int | None = None,
 ) -> DataFrame | None:
     """The accumulated band-state relation a batch's probe joins — the
-    ONE read definition (code-review r12: the probe-isolation bench
-    tool re-implemented this inline, which is exactly the drift the
+    ONE read definition (code-review r12: a probe-isolation measurement,
+    BASELINE.md "Round-12 near-dup probe isolation", once re-implemented
+    this inline, which is exactly the drift the
     ``band_probe_candidates`` factoring exists to prevent): append-only
     ``v{n}`` versions (strictly below ``batch_id`` when given — the
     replay guard) unioned with, when :func:`compact_neardup_bands` has
@@ -1980,7 +1981,8 @@ def compact_neardup_bands(
       lakehouse).
 
     Choose ``n_buckets`` so a bucket holds ~0.5–2k rows at the current
-    corpus (the bench_state_ingest sizing rule); the count is recorded
+    corpus (the bucketed-state sizing rule, BASELINE.md "Round-10 rework
+    rungs"); the count is recorded
     in ``v-1/_bucket_layout`` and probes read it from there, so
     RE-compacting with a different count is always safe.  Returns the
     compacted dir path."""

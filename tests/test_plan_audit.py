@@ -114,6 +114,18 @@ def test_flagship_is_single_pass_gemm_pipeline(spark, sf_dir):
     assert "SortMergeJoin" not in plan, plan
 
 
+def test_flagship_takes_join_arm_on_unknown_size(spark, sf_dir, monkeypatch):
+    """An unreadable lineitem footer (None: a directory-shaped dataset)
+    must not size Arrow tiles from a guess: the flagship takes the
+    relational join arm, the one that wins above the measured
+    crossover, so its plan has no Arrow kernel."""
+    from recsys_mapreduce_mrjob_spark.sources import readers
+
+    monkeypatch.setattr(readers, "parquet_num_rows", lambda *_a: None)
+    plan = _plan(spark, sf_dir, "q_topk_similar_items")
+    assert "FlatMapGroupsInArrow" not in plan, plan
+
+
 def test_ratings_matrix_reads_from_cache(spark, sf_dir):
     """The shared derived-ratings relation (consumed by the I-family
     diagnostics) stays memo-persisted so fan-out consumers reuse one

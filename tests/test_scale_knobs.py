@@ -156,15 +156,18 @@ def test_blocked_gemm_dedup_matches_allpairs_sf01(spark):
 
 
 def test_pairwise_gemm_matches_join_and_is_block_invariant(spark, sf_dir):
-    """The blocked sparse-Gram pair stage (round 5) must reproduce the
-    relational self-join's relation exactly in keys/counts and to float
-    precision in the sums, at TWO block counts (results are B-invariant:
-    every unordered pair lands in exactly one tile for any B), with the
-    in-kernel rater counts equal to :func:`item_rater_counts`."""
+    """The blocked sparse-Gram pair stage (round 5), fed RAW rating rows
+    and aggregating them in-tile, must reproduce the relational
+    self-join's relation over the derived ratings exactly in keys/counts
+    and to float precision in the sums, at TWO block counts (results are
+    B-invariant: every unordered pair lands in exactly one tile for any
+    B), with the in-kernel rater counts equal to
+    :func:`item_rater_counts`."""
     from recsys_mapreduce_mrjob_spark.operators.recsys import (
         _cached_ratings,
         item_rater_counts,
         pairwise_stats_gemm,
+        raw_ratings,
     )
 
     r = _cached_ratings(spark, sf_dir)
@@ -172,10 +175,9 @@ def test_pairwise_gemm_matches_join_and_is_block_invariant(spark, sf_dir):
         (x.item_x, x.item_y): x for x in pairwise_stats(r, 2).collect()
     }
     raters = {x.item_id: x.n_raters for x in item_rater_counts(r).collect()}
+    raw = raw_ratings(spark, sf_dir)
     for nb in (4, 7):
-        got = pairwise_stats_gemm(
-            r, 2, n_blocks=nb, with_rater_counts=True
-        ).collect()
+        got = pairwise_stats_gemm(raw, 2, n_blocks=nb).collect()
         assert len(got) == len(base), (nb, len(got), len(base))
         for g in got:
             b = base[(g.item_x, g.item_y)]
@@ -188,11 +190,7 @@ def test_pairwise_gemm_matches_join_and_is_block_invariant(spark, sf_dir):
 def test_counts_only_gemm_matches_join(spark, sf_dir):
     """The counts_only kernel form (round 10: no rating column in the
     replicate shuffle, no gram bincounts) must emit exactly the
-    relational co-occurrence relation, on BOTH its input shapes — the
-    fused pre_aggregate raw path and the pre-aggregated ratings path —
-    and refuse the with_rater_counts combination."""
-    import pytest as _pytest
-
+    relational co-occurrence relation from the raw rating rows."""
     from recsys_mapreduce_mrjob_spark.operators.recsys import (
         _cached_ratings,
         item_cooccurrence,
@@ -207,24 +205,10 @@ def test_counts_only_gemm_matches_join(spark, sf_dir):
     fused = {
         (r.item_x, r.item_y): r.n
         for r in pairwise_stats_gemm(
-            raw_ratings(spark, sf_dir), 3, pre_aggregate=True, counts_only=True
+            raw_ratings(spark, sf_dir), 3, n_blocks=5, counts_only=True
         ).collect()
     }
     assert fused == expected
-    plain = {
-        (r.item_x, r.item_y): r.n
-        for r in pairwise_stats_gemm(
-            _cached_ratings(spark, sf_dir), 3, counts_only=True
-        ).collect()
-    }
-    assert plain == expected
-    with _pytest.raises(ValueError, match="mutually exclusive"):
-        pairwise_stats_gemm(
-            _cached_ratings(spark, sf_dir),
-            3,
-            counts_only=True,
-            with_rater_counts=True,
-        )
 
 
 def test_flagship_fused_matches_relational(spark, sf_dir):
@@ -468,11 +452,10 @@ def _union_find_labels(n_vertices, edges):
 )
 def test_twostar_components_match_union_find(spark, n, edges):
     """connected_components_twostar converges to the exact union-find
-    labels within its fixed alternation budget — including on a path
-    graph whose diameter far exceeds the round count, the case where
-    plain min-label propagation would still be mid-flight."""
+    labels — including on a path graph whose diameter far exceeds the
+    round count, the case where min-label propagation with a fixed round
+    budget would still be mid-flight."""
     from recsys_mapreduce_mrjob_spark.operators.dedup import (
-        connected_components,
         connected_components_twostar,
     )
 
@@ -488,15 +471,6 @@ def test_twostar_components_match_union_find(spark, n, edges):
         for r in connected_components_twostar(vertices, edges_df).collect()
     }
     assert got == expected
-    # on small-diameter graphs both backends agree (path graph excluded:
-    # label-prop's 10 rounds can't close a 39-hop chain — that gap is the
-    # point of two-star)
-    if n != 40:
-        lp = {
-            r.id: r.label
-            for r in connected_components(vertices, edges_df, max_iter=10).collect()
-        }
-        assert lp == expected
 
 
 def test_twostar_runs_to_fixpoint_on_long_path(spark):
@@ -518,6 +492,31 @@ def test_twostar_runs_to_fixpoint_on_long_path(spark):
     labels = connected_components_twostar(vertices, edges).collect()
     assert len(labels) == n
     assert all(r.label == 0 for r in labels)
+
+
+def test_components_exact_labels_a_chain_longer_than_ten_hops(
+    spark, tmp_path, monkeypatch
+):
+    """A near-duplicate chain of 15 documents (14 hops) is ONE component
+    whose id is its minimum doc_id.  Min-label propagation with a fixed
+    10-round budget stopped short of the far end and silently handed the
+    tail documents other component ids; the two-star fixpoint has no
+    hop budget."""
+    from pyspark.sql import functions as F
+
+    from recsys_mapreduce_mrjob_spark.operators import dedup
+
+    n = 15
+    spark.range(n).select(F.col("id").alias("doc_id")).write.parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
+    )
+    monkeypatch.setattr(dedup, "q_dedup_near_exact", lambda _s, _d: chain)
+    got = dedup.q_dedup_components_exact(spark, str(tmp_path)).collect()
+    assert sorted(r.doc_id for r in got) == list(range(n))
+    assert {(r.component_id, r.component_size) for r in got} == {(0, n)}
 
 
 def test_twostar_exhausted_cap_raises_not_silent(spark):
@@ -1177,11 +1176,11 @@ def test_memo_unpersist_releases_storage(spark, smoke_dir):
 
 
 def test_pairwise_gemm_drops_self_pairs_on_duplicate_input(spark):
-    """Diagonal guard (code-review r7): a duplicate (user, item) rating
-    row must NOT surface as an item_x == item_y self-pair — the pre-
-    rewrite kernel filtered those via its `ida < idb` pass, and the
-    direct-triangle rewrite has to keep that robustness for callers that
-    skip the pre-aggregation step."""
+    """A duplicate (user, item) rating row must NOT surface as an
+    item_x == item_y self-pair (code-review r7): the kernel reduces raw
+    rows to one averaged rating per (user, item) before it enumerates
+    pairs, so the diagonal tile's strict upper triangle never pairs an
+    item with itself."""
     from recsys_mapreduce_mrjob_spark.operators.recsys import pairwise_stats_gemm
 
     r = spark.createDataFrame(
@@ -1198,6 +1197,10 @@ def test_pairwise_gemm_drops_self_pairs_on_duplicate_input(spark):
     assert got, "expected cross-item pairs"
     assert all(g.item_x != g.item_y for g in got), got
     assert all(g.item_x < g.item_y for g in got), got
+    # user 1's two item-10 rows average to 3.5 before pairing
+    (g,) = got
+    assert (g.item_x, g.item_y, g.n, g.nx, g.ny) == (10, 20, 2, 2, 2), g
+    assert (g.sx, g.sy, g.sxy) == (5.5, 6.0, 3.5 * 5.0 + 2.0 * 1.0), g
 
 
 def test_two_phase_rank_matches_sequential_rank_property(spark):

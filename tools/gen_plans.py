@@ -195,7 +195,7 @@ ENTRIES = [
         "q_graph_triangles",
         "Degree-oriented triangle counting (round 10): the edge list "
         "derives through the flagship's blocked sparse-Gram tile kernel "
-        "(pairwise_stats_gemm pre_aggregate, size-dispatched — the pair "
+        "(pairwise_stats_gemm counts_only, size-dispatched — the pair "
         "space never exists as a shuffle) and memo-persists; degrees "
         "come from ONE explode scan of it and the node-sized degree "
         "relation BROADCASTS into the orientation (no edge-keyed "
