@@ -1248,19 +1248,27 @@ def pair_component_labels(
     )
 
 
-def _component_clusters(
-    spark: SparkSession, sf_dir: str, pairs: DataFrame
-) -> DataFrame:
-    """Shared body of the components queries: two-star labels over every
-    document with the near-dup pairs as edges, then multi-doc clusters
-    only — ``(doc_id, component_id = min doc_id, component_size)``."""
-    edges = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+def near_exact_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(id, label) two-star component labels over the portable-hash
+    near-dup pairs (:func:`q_dedup_near_exact`) — ONE fixpoint per
+    ``clearCache`` epoch shared by the curation ladder's keeper choice
+    (``text.curated_docs``) and both exact components queries.  The
+    two-star loop runs driver-side jobs EAGERLY at construction, so the
+    pair-endpoint-sized labels are memoized on their own (memo lifetime:
+    caching.py)."""
+    return memo_persist(
+        spark,
+        "near_exact_labels",
+        sf_dir,
+        lambda: pair_component_labels(q_dedup_near_exact(spark, sf_dir)),
     )
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("id")
-    )
-    labels = connected_components_twostar(docs, edges)
+
+
+def _component_clusters(labels: DataFrame) -> DataFrame:
+    """Shared body of the components queries: from (id, label) over the
+    pair endpoints, multi-doc clusters only — ``(doc_id, component_id =
+    min doc_id, component_size)``.  A doc in no pair is a singleton
+    component, so labeling the endpoints alone loses no output row."""
     sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("component_size"))
     return (
         labels.join(sizes, "label")
@@ -1284,7 +1292,7 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     banding finds every identical pair by construction.)  Output: every
     doc in a multi-doc component, its component id (= min doc_id, the
     keeper) and component size."""
-    return _component_clusters(spark, sf_dir, q_dedup_near(spark, sf_dir))
+    return _component_clusters(pair_component_labels(q_dedup_near(spark, sf_dir)))
 
 
 def component_walk_ctes(prefix: str = "") -> str:
@@ -1331,8 +1339,9 @@ def q_dedup_components_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-star fixpoint the Spark side converges to, at any chain length).
     What this adds over :func:`q_dedup_components` is hash-level oracle
     verification for the GRAPH stage of the dedup pipeline, which was
-    previously rows-only by transitivity from its xxhash64 input."""
-    return _component_clusters(spark, sf_dir, q_dedup_near_exact(spark, sf_dir))
+    previously rows-only by transitivity from its xxhash64 input.  The
+    labels are the epoch's shared :func:`near_exact_labels`."""
+    return _component_clusters(near_exact_labels(spark, sf_dir))
 
 
 @register("q_dedup_components_twostar", oracle=_COMPONENTS_EXACT_ORACLE)
@@ -1347,9 +1356,10 @@ def q_dedup_components_twostar(spark: SparkSession, sf_dir: str) -> DataFrame:
     silently mislabels any duplicate chain longer than 10 hops, and a
     crawl's chains at 100 TB can be arbitrarily long.  Two-star is the
     O(log² n)-round MapReduce-model algorithm for that regime and is now
-    the one components algorithm, so this name computes exactly what
-    :func:`q_dedup_components_exact` does."""
-    return _component_clusters(spark, sf_dir, q_dedup_near_exact(spark, sf_dir))
+    the one components algorithm, so this name is
+    :func:`q_dedup_components_exact` (one fixpoint per epoch serves both
+    names and the curation ladder)."""
+    return q_dedup_components_exact(spark, sf_dir)
 
 
 @register(

@@ -511,21 +511,23 @@ def two_phase_rank(
     order key).  The data relation never crosses one partition; the
     only unpartitioned window touches one row per bucket.  The base
     relation broadcast assumes |partitions| × |buckets| stays
-    metadata-sized (both callers keep buckets ≤ 256 and partitions at
-    none / languages); a caller with a high-cardinality partition key
-    should pass ``broadcast_base=False`` and let the join shuffle
-    (code-review r10: the hint used to be hard-coded, so the documented
-    escape hatch did not actually exist).
+    metadata-sized (all three callers keep buckets ≤ 256, with
+    partitions at none, sources or languages: q_global_shuffle,
+    q_sample_source_cap, q_text_ccnet_buckets); a caller with a
+    high-cardinality partition key should pass ``broadcast_base=False``
+    and let the join shuffle (code-review r10: the hint used to be
+    hard-coded, so the documented escape hatch did not actually exist).
 
     NOTE: ``df`` fans into TWO lazy branches here (the within-bucket
     window and the bucket-counts aggregate) — a caller whose input is
     expensive and unpersisted pays its evaluation twice (ADVICE r7).
     q_global_shuffle memoizes its hashed input for exactly this reason;
-    the other callers either memoize the expensive relation UPSTREAM of
-    the cheap hash projection (q_pack_shuffled: tokenized_per_doc) or
-    feed a projection cheap enough that double evaluation is the right
-    trade (q_text_ccnet_buckets).  Weigh the input's cost before
-    copying either shape.
+    q_text_ccnet_buckets memoizes the expensive scored relation UPSTREAM
+    of its cheap bucket projection, and q_sample_source_cap feeds a
+    documents projection cheap enough that double evaluation is the
+    right trade.  Weigh the input's cost before copying either shape.
+    (The shuffled export family ranks through the fused
+    :func:`two_phase_rank_offsets` instead.)
     """
     _guard_rank_columns(df, ("__r_in", "__n", "__base", rank_col), "two_phase_rank")
     w_in = Window.partitionBy(*partition_cols, bucket_col).orderBy(*order_cols)
@@ -557,16 +559,14 @@ def two_phase_rank_offsets(
     bucket_col: str,
     order_cols: list,
     rank_col: str = "rnk",
-    weight_col: str = "n_tokens",
-    offset_col: str = "start_offset",
 ) -> DataFrame:
     """FUSED Blelloch pass (round 12): global ``row_number`` AND the
-    exclusive prefix sum of ``weight_col``, both in rank order, from ONE
-    bucket-parallel scan — bit-identical to :func:`two_phase_rank`
-    (no partition cols) followed by
+    exclusive prefix sum of ``n_tokens`` (as ``start_offset``), both in
+    rank order, from ONE bucket-parallel scan — bit-identical to
+    :func:`two_phase_rank` (no partition cols) followed by
     :func:`..operators.text.distributed_prefix_sum` keyed on the rank,
     because the rank order IS the (bucket, order_cols) order (the
-    coarser-bucket precondition), so summing ``weight_col`` along that
+    coarser-bucket precondition), so summing ``n_tokens`` along that
     order inside the SAME per-bucket window and offsetting by per-bucket
     totals yields exactly the prefix sum the second scan recomputed.
 
@@ -585,16 +585,17 @@ def two_phase_rank_offsets(
     """
     _guard_rank_columns(
         df,
-        ("__r_in", "__c_in", "__n", "__t", "__nbase", "__tbase", rank_col, offset_col),
+        ("__r_in", "__c_in", "__n", "__t", "__nbase", "__tbase", rank_col,
+         "start_offset"),
         "two_phase_rank_offsets",
     )
     w_in = Window.partitionBy(bucket_col).orderBy(*order_cols)
     w_cum = w_in.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     within = df.withColumn(
         "__r_in", F.row_number().over(w_in).cast("long")
-    ).withColumn("__c_in", F.sum(weight_col).over(w_cum))
+    ).withColumn("__c_in", F.sum("n_tokens").over(w_cum))
     totals = df.groupBy(bucket_col).agg(
-        F.count(F.lit(1)).alias("__n"), F.sum(weight_col).alias("__t")
+        F.count(F.lit(1)).alias("__n"), F.sum("n_tokens").alias("__t")
     )
     w_b = (
         Window.orderBy(bucket_col)
@@ -613,8 +614,8 @@ def two_phase_rank_offsets(
         within.join(F.broadcast(base), bucket_col)
         .withColumn(rank_col, F.col("__nbase") + F.col("__r_in"))
         .withColumn(
-            offset_col,
-            F.col("__tbase") + F.col("__c_in") - F.col(weight_col),
+            "start_offset",
+            F.col("__tbase") + F.col("__c_in") - F.col("n_tokens"),
         )
         .drop("__r_in", "__c_in", "__nbase", "__tbase")
     )

@@ -12,6 +12,8 @@ any other groupBy.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -432,7 +434,7 @@ def curated_docs(
     the old rule dropped an entire cluster whenever its global-min
     keeper had already failed an upstream gate.  Plan and oracle changed
     together, so the graded hash moved with the semantic."""
-    from .dedup import pair_component_labels, q_dedup_near_exact
+    from .dedup import near_exact_labels
 
     def build_scored() -> DataFrame:
         # md5(text) is PROJECTED before the keep-one window (round 12,
@@ -483,20 +485,10 @@ def curated_docs(
             spark, "curation_survivors", sf_dir, build_survivors
         )
         # Vertices = pair ENDPOINTS only (code-review r6, shared helper
-        # r10): a doc in no pair is trivially its own component keeper,
-        # so labeling the full corpus paid a corpus-sized scan + join
-        # just to discard every label==id row.
-        #
-        # The two-star loop runs driver-side jobs EAGERLY at construction,
-        # so the labels are memoized on their own (pair-endpoint-sized):
-        # the fixpoint runs once per clearCache epoch (memo lifetime:
-        # caching.py).
-        labels = memo_persist(
-            spark,
-            "curation_labels",
-            sf_dir,
-            lambda: pair_component_labels(q_dedup_near_exact(spark, sf_dir)),
-        )
+        # r10): a doc in no pair is trivially its own component keeper.
+        # The labels are the epoch's one two-star fixpoint, shared with
+        # the exact components queries.
+        labels = near_exact_labels(spark, sf_dir)
         # Keeper = min SURVIVING doc_id per cluster.  All three relations
         # here are pair-endpoint-sized, not corpus-sized.
         lab_surv = labels.join(
@@ -1327,6 +1319,36 @@ from .sampling import _SHARD_DOCS as _EXPORT_SHARD_DOCS  # noqa: E402
 from .sampling import _SHUFFLE_SEED as _PACK_SHUFFLE_SEED  # noqa: E402
 
 
+def _shuffle_placed(
+    spark: SparkSession,
+    sf_dir: str,
+    memo_name: str,
+    key: str,
+    build: Callable[[], DataFrame],
+) -> DataFrame:
+    """The placement half of the shuffled export tail — ONE definition
+    for q_pack_shuffled and the four export capstones: ``build()``'s rows
+    (unique ``key``, ``n_tokens``, …) get the seeded shuffle key and are
+    memoized as ``memo_name``; the fused bucket-parallel pass
+    (:func:`..operators.sampling.two_phase_rank_offsets`) then adds the
+    dense ``shuffle_rank`` and the exclusive token ``start_offset`` in
+    that order.  The memo pins one evaluation of the row builder: the
+    fused pass reads its input twice (the per-bucket window and the
+    bucket totals), and exchange reuse is not relied on (code-review
+    r7)."""
+    from .sampling import seeded_shuffle_key, two_phase_rank_offsets
+
+    hashed = memo_persist(
+        spark, memo_name, sf_dir, lambda: seeded_shuffle_key(build(), key=key)
+    )
+    return two_phase_rank_offsets(
+        hashed,
+        bucket_col="bkt",
+        order_cols=[F.col("h"), F.col(key)],
+        rank_col="shuffle_rank",
+    ).drop("h", "bkt")
+
+
 @register(
     "q_pack_shuffled",
     oracle=f"""
@@ -1377,27 +1399,15 @@ def q_pack_shuffled(spark: SparkSession, sf_dir: str) -> DataFrame:
     One tokenize scan (the memo-shared ``tokenized_per_doc``) feeds
     rank, offsets, and totals alike.
     """
-    from .sampling import (
-        seeded_shuffle_key,
-        tokenized_per_doc,
-        two_phase_rank_offsets,
+    from .sampling import tokenized_per_doc
+
+    placed = _shuffle_placed(
+        spark,
+        sf_dir,
+        "pack_shuffled_hashed",
+        "doc_id",
+        lambda: tokenized_per_doc(spark, sf_dir).select("doc_id", "n_tokens"),
     )
-
-    def build_hashed() -> DataFrame:
-        per_doc = tokenized_per_doc(spark, sf_dir).select("doc_id", "n_tokens")
-        return seeded_shuffle_key(per_doc)
-
-    # Memoized: the fused rank+offset scan reads its input twice (the
-    # per-bucket window and the bucket totals); the memo pins one
-    # evaluation of the tokenize scan instead of relying on exchange
-    # reuse (code-review r7).  Docs-sized relation: (doc_id, n_tokens).
-    hashed = memo_persist(spark, "pack_shuffled_hashed", sf_dir, build_hashed)
-    placed = two_phase_rank_offsets(
-        hashed,
-        bucket_col="bkt",
-        order_cols=[F.col("h"), F.col("doc_id")],
-        rank_col="shuffle_rank",
-    ).drop("h", "bkt")
     return placed.select(
         "doc_id",
         "shuffle_rank",
@@ -1987,41 +1997,75 @@ def q_text_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Tail of the export oracle.  Only THIS fragment passes through .format()
-# — _CURATION_CTES is concatenated in afterwards, never formatted, so a
-# future bounded-repeat regex in the curation chain (like the {2,} the
-# PII_RULES already use) can't crash the assembly or silently corrupt the
-# oracle (ADVICE r7; the hazard _pii_oracle's comment documents).
-_EXPORT_ORACLE_TAIL = """,
+# The shuffle → pack → manifest tail every export oracle ends in — the
+# twin of _shuffle_placed + _shard_manifest.  Only THIS fragment is
+# formatted (an f-string over its own arguments): each caller's CTE chain
+# (_CURATION_CTES, curated_rw, ch_*, rl_*) is concatenated in front of it
+# and never passes through .format(), so a bounded-repeat regex in a
+# chain (like the {2,} the PII_RULES already use) can't crash the
+# assembly or silently corrupt the oracle (ADVICE r7; the hazard
+# _pii_oracle's comment documents).
+def _export_oracle_tail(src: str, key: str, shard_rows: int, counts: str) -> str:
+    """``exp_ranked`` (one global seeded-hash ``row_number`` over the
+    unique ``key`` of ``src``), ``exp_placed`` (the exclusive running
+    token sum in that order), then the per-shard SELECT: ``shard``, the
+    caller's ``counts`` aggregate SQL, and the [first_block, last_block]
+    span.  ``src`` must carry ``key`` and ``n_tokens``."""
+    return f""",
 exp_ranked AS (
-    SELECT doc_id, n_tokens,
+    SELECT *,
            CAST(row_number() OVER (
-               ORDER BY md5(concat('{seed}:', CAST(doc_id AS VARCHAR))),
-                        doc_id
+               ORDER BY md5(concat('{_PACK_SHUFFLE_SEED}:',
+                                   CAST({key} AS VARCHAR))), {key}
            ) AS BIGINT) AS r
-    FROM curated
+    FROM {src}
 ),
 exp_placed AS (
-    SELECT doc_id, n_tokens, r,
+    SELECT *,
            CAST(sum(n_tokens) OVER (ORDER BY r ROWS UNBOUNDED PRECEDING)
                 - n_tokens AS BIGINT) AS off
     FROM exp_ranked
 )
-SELECT (r - 1) // {shard} AS shard,
-       count(*) AS n_docs,
-       CAST(sum(n_tokens) AS BIGINT) AS shard_tokens,
-       min(off) // {block} AS first_block,
-       max(off + n_tokens - 1) // {block} AS last_block
+SELECT (r - 1) // {shard_rows} AS shard,
+       {counts},
+       min(off) // {_PACK_BLOCK_TOKENS} AS first_block,
+       max(off + n_tokens - 1) // {_PACK_BLOCK_TOKENS} AS last_block
 FROM exp_placed
 GROUP BY shard
-""".format(
-    seed=_PACK_SHUFFLE_SEED, shard=_EXPORT_SHARD_DOCS, block=_PACK_BLOCK_TOKENS
+"""
+
+
+def _shard_manifest(placed: DataFrame, shard_rows: int, *counts: Column) -> DataFrame:
+    """The manifest half of the export tail over a :func:`_shuffle_placed`
+    relation: ``shard = (shuffle_rank - 1) div shard_rows``, the caller's
+    count aggregates, then the [first_block, last_block] span of packed
+    blocks each shard covers.  Twin: :func:`_export_oracle_tail`."""
+    return (
+        placed.withColumn("shard", F.expr(f"(shuffle_rank - 1) div {shard_rows}"))
+        .groupBy("shard")
+        .agg(
+            *counts,
+            F.expr(f"min(start_offset) div {_PACK_BLOCK_TOKENS}").alias(
+                "first_block"
+            ),
+            F.expr(
+                f"max(start_offset + n_tokens - 1) div {_PACK_BLOCK_TOKENS}"
+            ).alias("last_block"),
+        )
+    )
+
+
+# Per-shard counts of the two doc-level exports.
+_EXPORT_DOC_COUNTS = (
+    "count(*) AS n_docs, CAST(sum(n_tokens) AS BIGINT) AS shard_tokens"
 )
 
 
 @register(
     "q_export_manifest",
-    oracle="\nWITH RECURSIVE " + _CURATION_CTES + _EXPORT_ORACLE_TAIL,
+    oracle="\nWITH RECURSIVE "
+    + _CURATION_CTES
+    + _export_oracle_tail("curated", "doc_id", _EXPORT_SHARD_DOCS, _EXPORT_DOC_COUNTS),
 )
 def q_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The END-TO-END training-set export, as one declared query: curate
@@ -2046,79 +2090,30 @@ def q_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest aggregate is shards-sized.  One memo-shared curated
     relation serves this query and the per-lang accounting alike.
     """
-    from .sampling import seeded_shuffle_key, two_phase_rank_offsets
-
-    def build_hashed() -> DataFrame:
-        curated = curated_docs(spark, sf_dir, truncate=True).select(
+    placed = _shuffle_placed(
+        spark,
+        sf_dir,
+        "export_hashed",
+        "doc_id",
+        lambda: curated_docs(spark, sf_dir, truncate=True).select(
             "doc_id", "n_tokens"
-        )
-        return seeded_shuffle_key(curated)
-
-    # Memoized (same fan-out rationale as q_pack_shuffled): the fused
-    # rank+offset scan reads its input twice (window + bucket totals).
-    hashed = memo_persist(spark, "export_hashed", sf_dir, build_hashed)
-    placed = two_phase_rank_offsets(
-        hashed,
-        bucket_col="bkt",
-        order_cols=[F.col("h"), F.col("doc_id")],
-        rank_col="shuffle_rank",
-    ).drop("h", "bkt")
-    return (
-        placed.withColumn(
-            "shard",
-            F.expr(f"(shuffle_rank - 1) div {_EXPORT_SHARD_DOCS}"),
-        )
-        .groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").alias("shard_tokens"),
-            F.expr(f"min(start_offset) div {_PACK_BLOCK_TOKENS}").alias(
-                "first_block"
-            ),
-            F.expr(
-                f"max(start_offset + n_tokens - 1) div {_PACK_BLOCK_TOKENS}"
-            ).alias("last_block"),
-        )
+        ),
     )
-
-
-# Rewritten-export oracle tail: the identical shuffle→pack→manifest
-# algebra over `curated_rw` (post-span-removal token counts).  Same
-# .format() confinement rationale as _EXPORT_ORACLE_TAIL.
-_EXPORT_RW_ORACLE_TAIL = """,
-rwexp_ranked AS (
-    SELECT doc_id, n_tokens,
-           CAST(row_number() OVER (
-               ORDER BY md5(concat('{seed}:', CAST(doc_id AS VARCHAR))),
-                        doc_id
-           ) AS BIGINT) AS r
-    FROM curated_rw
-),
-rwexp_placed AS (
-    SELECT doc_id, n_tokens, r,
-           CAST(sum(n_tokens) OVER (ORDER BY r ROWS UNBOUNDED PRECEDING)
-                - n_tokens AS BIGINT) AS off
-    FROM rwexp_ranked
-)
-SELECT (r - 1) // {shard} AS shard,
-       count(*) AS n_docs,
-       CAST(sum(n_tokens) AS BIGINT) AS shard_tokens,
-       min(off) // {block} AS first_block,
-       max(off + n_tokens - 1) // {block} AS last_block
-FROM rwexp_placed
-GROUP BY shard
-""".format(
-    seed=_PACK_SHUFFLE_SEED, shard=_EXPORT_SHARD_DOCS, block=_PACK_BLOCK_TOKENS
-)
+    return _shard_manifest(
+        placed,
+        _EXPORT_SHARD_DOCS,
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_tokens").alias("shard_tokens"),
+    )
 
 
 def _export_rw_oracle() -> str:
     """Assemble the rewritten-export oracle: curation chain + span
     report + interval merge + per-doc removal, all CONCATENATED (never
     .format()ed across fragments — the export-oracle lesson, code-review
-    r8).  The span CTEs nest inside `spans AS (WITH ...)`, so their
-    internal names (kept, islands, per_doc) shadow the curation chain's
-    locally and cannot collide."""
+    r8); only the shared tail formats itself.  The span CTEs nest inside
+    `spans AS (WITH ...)`, so their internal names (kept, islands,
+    per_doc) shadow the curation chain's locally and cannot collide."""
     from .dedup import _SPAN_IV_CTES, _SPANS_ORACLE
 
     return (
@@ -2141,7 +2136,9 @@ curated_rw AS (
                AS n_tokens
     FROM curated c LEFT JOIN rw_removed r USING (doc_id)
 )"""
-        + _EXPORT_RW_ORACLE_TAIL
+        + _export_oracle_tail(
+            "curated_rw", "doc_id", _EXPORT_SHARD_DOCS, _EXPORT_DOC_COUNTS
+        )
     )
 
 
@@ -2165,9 +2162,8 @@ def q_export_manifest_rewritten(spark: SparkSession, sf_dir: str) -> DataFrame:
     `q_dedup_span_rewrite`/`_audit`, so grading all three costs one span
     computation."""
     from .dedup import _span_merged
-    from .sampling import seeded_shuffle_key, two_phase_rank_offsets
 
-    def build_hashed() -> DataFrame:
+    def build() -> DataFrame:
         curated = curated_docs(spark, sf_dir, truncate=True).select(
             "doc_id", "n_tokens"
         )
@@ -2178,38 +2174,20 @@ def q_export_manifest_rewritten(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("e") - F.col("s") + 1).alias("tokens_removed")
             )
         )
-        cur_rw = curated.join(removed, "doc_id", "left").select(
+        return curated.join(removed, "doc_id", "left").select(
             "doc_id",
             (
                 F.col("n_tokens")
                 - F.coalesce(F.col("tokens_removed"), F.lit(0))
             ).alias("n_tokens"),
         )
-        return seeded_shuffle_key(cur_rw)
 
-    hashed = memo_persist(spark, "export_hashed_rw", sf_dir, build_hashed)
-    placed = two_phase_rank_offsets(
-        hashed,
-        bucket_col="bkt",
-        order_cols=[F.col("h"), F.col("doc_id")],
-        rank_col="shuffle_rank",
-    ).drop("h", "bkt")
-    return (
-        placed.withColumn(
-            "shard",
-            F.expr(f"(shuffle_rank - 1) div {_EXPORT_SHARD_DOCS}"),
-        )
-        .groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens").alias("shard_tokens"),
-            F.expr(f"min(start_offset) div {_PACK_BLOCK_TOKENS}").alias(
-                "first_block"
-            ),
-            F.expr(
-                f"max(start_offset + n_tokens - 1) div {_PACK_BLOCK_TOKENS}"
-            ).alias("last_block"),
-        )
+    placed = _shuffle_placed(spark, sf_dir, "export_hashed_rw", "doc_id", build)
+    return _shard_manifest(
+        placed,
+        _EXPORT_SHARD_DOCS,
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_tokens").alias("shard_tokens"),
     )
 
 
@@ -2619,7 +2597,9 @@ def chunk_cid(doc_id: Column, chunk_id: Column) -> Column:
         )
     )
 
-_EXPORT_CHUNKS_ORACLE_TAIL = """,
+# The chunk cut of the curated corpus ahead of the shared export tail —
+# an f-string, never .format() (the _export_oracle_tail rule).
+_EXPORT_CHUNKS_ORACLE_TAIL = f""",
 ch_dt AS (
     SELECT d.doc_id, string_split(d.text, ' ') AS t
     FROM documents d JOIN curated USING (doc_id)
@@ -2627,10 +2607,10 @@ ch_dt AS (
 ch AS (
     SELECT doc_id,
            unnest(list_transform(
-               generate_series(0, (len(t) - 1) // {s}),
+               generate_series(0, (len(t) - 1) // {_CHUNK_S}),
                i -> struct_pack(
                    chunk_id := i,
-                   n := len(t[i * {s} + 1 : i * {s} + {w}])
+                   n := len(t[i * {_CHUNK_S} + 1 : i * {_CHUNK_S} + {_CHUNK_W}])
                )
            )) AS e
     FROM ch_dt WHERE len(t) > 0
@@ -2638,37 +2618,14 @@ ch AS (
 chunks AS (
     SELECT doc_id,
            CAST(e.n AS BIGINT) AS n_tokens,
-           doc_id * {mult} + e.chunk_id AS cid
+           doc_id * {_CHUNK_CID_MULT} + e.chunk_id AS cid
     FROM ch
-),
-chexp_ranked AS (
-    SELECT doc_id, n_tokens, cid,
-           CAST(row_number() OVER (
-               ORDER BY md5(concat('{seed}:', CAST(cid AS VARCHAR))), cid
-           ) AS BIGINT) AS r
-    FROM chunks
-),
-chexp_placed AS (
-    SELECT doc_id, n_tokens, r,
-           CAST(sum(n_tokens) OVER (ORDER BY r ROWS UNBOUNDED PRECEDING)
-                - n_tokens AS BIGINT) AS off
-    FROM chexp_ranked
-)
-SELECT (r - 1) // {shard} AS shard,
-       count(*) AS n_chunks,
-       count(DISTINCT doc_id) AS n_docs,
-       CAST(sum(n_tokens) AS BIGINT) AS shard_tokens,
-       min(off) // {block} AS first_block,
-       max(off + n_tokens - 1) // {block} AS last_block
-FROM chexp_placed
-GROUP BY shard
-""".format(
-    s=_CHUNK_S,
-    w=_CHUNK_W,
-    mult=_CHUNK_CID_MULT,
-    seed=_PACK_SHUFFLE_SEED,
-    shard=_EXPORT_SHARD_CHUNKS,
-    block=_PACK_BLOCK_TOKENS,
+)""" + _export_oracle_tail(
+    "chunks",
+    "cid",
+    _EXPORT_SHARD_CHUNKS,
+    "count(*) AS n_chunks, count(DISTINCT doc_id) AS n_docs, "
+    "CAST(sum(n_tokens) AS BIGINT) AS shard_tokens",
 )
 
 
@@ -2701,44 +2658,23 @@ def q_export_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket-parallel scans (no single-reducer window), the manifest
     aggregate is shards-sized; the only new relation is chunk-sized
     (≈ tokens/{s} rows per doc)."""
-    from .sampling import seeded_shuffle_key, two_phase_rank_offsets
 
-    def build_hashed() -> DataFrame:
+    def build() -> DataFrame:
         curated = curated_docs(spark, sf_dir, truncate=True).select("doc_id")
         docs = load_table(spark, sf_dir, "documents").join(curated, "doc_id")
-        chunks = chunk_exploded(docs).select(
+        return chunk_exploded(docs).select(
             "doc_id",
             F.size("ct").cast("long").alias("n_tokens"),
             chunk_cid(F.col("doc_id"), F.col("chunk_id")).alias("cid"),
         )
-        return seeded_shuffle_key(chunks, key="cid")
 
-    # Same memo rationale as q_export_manifest: the fused scan reads its
-    # input twice (window + bucket totals).
-    hashed = memo_persist(spark, "export_hashed_chunks", sf_dir, build_hashed)
-    placed = two_phase_rank_offsets(
-        hashed,
-        bucket_col="bkt",
-        order_cols=[F.col("h"), F.col("cid")],
-        rank_col="shuffle_rank",
-    ).drop("h", "bkt")
-    return (
-        placed.withColumn(
-            "shard",
-            F.expr(f"(shuffle_rank - 1) div {_EXPORT_SHARD_CHUNKS}"),
-        )
-        .groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("n_chunks"),
-            F.countDistinct("doc_id").alias("n_docs"),
-            F.sum("n_tokens").alias("shard_tokens"),
-            F.expr(f"min(start_offset) div {_PACK_BLOCK_TOKENS}").alias(
-                "first_block"
-            ),
-            F.expr(
-                f"max(start_offset + n_tokens - 1) div {_PACK_BLOCK_TOKENS}"
-            ).alias("last_block"),
-        )
+    placed = _shuffle_placed(spark, sf_dir, "export_hashed_chunks", "cid", build)
+    return _shard_manifest(
+        placed,
+        _EXPORT_SHARD_CHUNKS,
+        F.count(F.lit(1)).alias("n_chunks"),
+        F.countDistinct("doc_id").alias("n_docs"),
+        F.sum("n_tokens").alias("shard_tokens"),
     )
 
 
@@ -2778,7 +2714,7 @@ if q_export_chunks.__doc__:  # absent under python -OO
 
 # f-string, NOT str.format: the redaction expression interpolated below
 # carries `{2,}`-style bounded-repeat braces that .format would eat
-# (the _EXPORT_ORACLE_TAIL comment documents the hazard) — f-string
+# (the _export_oracle_tail comment documents the hazard) — f-string
 # interpolation inserts values verbatim without re-scanning them.
 _EXPORT_RELEASE_ORACLE_TAIL = f""",
 {_contam_ctes("rl_")},
@@ -2813,31 +2749,14 @@ rl_chunks AS (
                x -> {" OR ".join(f"contains(x, '{tag}')" for _, _, tag in PII_RULES)}
            )) AS BIGINT) AS n_red_toks
     FROM rl_ch
-),
-rl_ranked AS (
-    SELECT doc_id, n_tokens, n_red_toks, cid,
-           CAST(row_number() OVER (
-               ORDER BY md5(concat('{_PACK_SHUFFLE_SEED}:',
-                                   CAST(cid AS VARCHAR))), cid
-           ) AS BIGINT) AS r
-    FROM rl_chunks
-),
-rl_placed AS (
-    SELECT doc_id, n_tokens, n_red_toks, r,
-           CAST(sum(n_tokens) OVER (ORDER BY r ROWS UNBOUNDED PRECEDING)
-                - n_tokens AS BIGINT) AS off
-    FROM rl_ranked
+)""" + _export_oracle_tail(
+    "rl_chunks",
+    "cid",
+    _EXPORT_SHARD_CHUNKS,
+    "count(*) AS n_chunks, count(DISTINCT doc_id) AS n_docs, "
+    "CAST(sum(n_tokens) AS BIGINT) AS shard_tokens, "
+    "CAST(sum(n_red_toks) AS BIGINT) AS redacted_tokens",
 )
-SELECT (r - 1) // {_EXPORT_SHARD_CHUNKS} AS shard,
-       count(*) AS n_chunks,
-       count(DISTINCT doc_id) AS n_docs,
-       CAST(sum(n_tokens) AS BIGINT) AS shard_tokens,
-       CAST(sum(n_red_toks) AS BIGINT) AS redacted_tokens,
-       min(off) // {_PACK_BLOCK_TOKENS} AS first_block,
-       max(off + n_tokens - 1) // {_PACK_BLOCK_TOKENS} AS last_block
-FROM rl_placed
-GROUP BY shard
-"""
 
 
 def _release_tag_hit(tok: Column) -> Column:
@@ -2866,9 +2785,8 @@ def release_manifest(
     ``redacted_tokens`` audit column.  Takes only the curated relation's
     ``doc_id`` column; everything else re-derives from the documents
     table, so both callers grade against the identical chained oracle."""
-    from .sampling import seeded_shuffle_key, two_phase_rank_offsets
 
-    def build_hashed() -> DataFrame:
+    def build() -> DataFrame:
         hits, _ = _contam_hits(spark, sf_dir)
         released = curated.select("doc_id").where(
             F.col("doc_id") >= _CONTAM_BENCH_MAX
@@ -2881,7 +2799,7 @@ def release_manifest(
         red = docs.select(
             "doc_id", pii_redact(_pii_inject_col()).alias("text")
         )
-        chunks = chunk_exploded(red).select(
+        return chunk_exploded(red).select(
             "doc_id",
             F.size("ct").cast("long").alias("n_tokens"),
             chunk_cid(F.col("doc_id"), F.col("chunk_id")).alias("cid"),
@@ -2889,35 +2807,15 @@ def release_manifest(
             .cast("long")
             .alias("n_red_toks"),
         )
-        return seeded_shuffle_key(chunks, key="cid")
 
-    # Same memo rationale as the other export capstones: the fused scan
-    # reads its input twice (window + bucket totals).
-    hashed = memo_persist(spark, memo_name, sf_dir, build_hashed)
-    placed = two_phase_rank_offsets(
-        hashed,
-        bucket_col="bkt",
-        order_cols=[F.col("h"), F.col("cid")],
-        rank_col="shuffle_rank",
-    ).drop("h", "bkt")
-    return (
-        placed.withColumn(
-            "shard",
-            F.expr(f"(shuffle_rank - 1) div {_EXPORT_SHARD_CHUNKS}"),
-        )
-        .groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("n_chunks"),
-            F.countDistinct("doc_id").alias("n_docs"),
-            F.sum("n_tokens").alias("shard_tokens"),
-            F.sum("n_red_toks").cast("long").alias("redacted_tokens"),
-            F.expr(f"min(start_offset) div {_PACK_BLOCK_TOKENS}").alias(
-                "first_block"
-            ),
-            F.expr(
-                f"max(start_offset + n_tokens - 1) div {_PACK_BLOCK_TOKENS}"
-            ).alias("last_block"),
-        )
+    placed = _shuffle_placed(spark, sf_dir, memo_name, "cid", build)
+    return _shard_manifest(
+        placed,
+        _EXPORT_SHARD_CHUNKS,
+        F.count(F.lit(1)).alias("n_chunks"),
+        F.countDistinct("doc_id").alias("n_docs"),
+        F.sum("n_tokens").alias("shard_tokens"),
+        F.sum("n_red_toks").cast("long").alias("redacted_tokens"),
     )
 
 

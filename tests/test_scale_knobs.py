@@ -519,6 +519,33 @@ def test_components_exact_labels_a_chain_longer_than_ten_hops(
     assert {(r.component_id, r.component_size) for r in got} == {(0, n)}
 
 
+def test_near_dup_fixpoint_runs_once_per_epoch(spark, smoke_dir, monkeypatch):
+    """The curation ladder and both exact components queries label the
+    same portable-hash pairs, so one clearCache epoch runs the two-star
+    fixpoint once for all three, and the next epoch runs it once again."""
+    from recsys_mapreduce_mrjob_spark.operators import dedup
+
+    calls = []
+    real = dedup.connected_components_twostar
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "connected_components_twostar", counted)
+    spark.catalog.clearCache()
+    for name in (
+        "q_corpus_curation",
+        "q_dedup_components_exact",
+        "q_dedup_components_twostar",
+    ):
+        registry.QUERIES[name](spark, smoke_dir).collect()
+    assert len(calls) == 1
+    spark.catalog.clearCache()
+    registry.QUERIES["q_dedup_components_twostar"](spark, smoke_dir).collect()
+    assert len(calls) == 2
+
+
 def test_twostar_exhausted_cap_raises_not_silent(spark):
     """The safety cap must RAISE when exhausted pre-fixpoint — never
     return non-converged labels (the r5 silent-wrong failure mode)."""

@@ -223,27 +223,40 @@ ENTRIES = [
         "no driver round-trip per probe.",
     ),
     (
+        "q_export_manifest",
+        "Doc-level export capstone: the memo-shared curated relation "
+        "(read through its lineage-truncating checkpoint) gets the "
+        "seeded shuffle key, then ONE fused bucket-parallel pass — one "
+        "data window PARTITIONED by the 256-way hash-prefix bucket "
+        "computes the rank and the running token sum together, and one "
+        "≤256-row bucket-totals window is broadcast back as each "
+        "bucket's (rank, offset) base — under a shards-sized manifest "
+        "aggregate.  The oracle's two chained global windows never "
+        "appear; no corpus-sized window runs unpartitioned.",
+    ),
+    (
         "q_export_manifest_rewritten",
         "Export capstone with the span-removal layer composed in "
         "(round 10): the curated relation LEFT-joins the span-report-"
         "sized per-doc removal measure (broadcast — report-sized, never "
-        "corpus-sized), then the same bucket-parallel two-phase rank + "
-        "rank-keyed prefix sum as q_export_manifest; every corpus-sized "
-        "window stays PARTITIONED and the only unpartitioned windows "
-        "run over <=256-row bucket metadata.",
+        "corpus-sized), then the same fused shuffle tail as "
+        "q_export_manifest: one data window PARTITIONED by the 256-way "
+        "hash-prefix bucket carries rank and running token sum "
+        "together, and the only unpartitioned window runs over the "
+        "≤256-row bucket-totals metadata, broadcast back.",
     ),
     (
         "q_export_chunks",
         "Chunk-level export (round 11): the window cut is scan-side — "
         "split + transform + explode inside the curated corpus's scan "
         "stage, ZERO exchanges added by chunking — and the downstream "
-        "is the capstone algebra: the chunk relation's seeded-hash "
-        "two_phase_rank (256 prefix buckets ranked in parallel, "
-        "metadata-sized offset window broadcast back) feeding the "
-        "rank-keyed distributed prefix sum; the only corpus-scale "
-        "exchanges are the rank/prefix bucket shuffles the base export "
-        "already pays.  The oracle's two global ORDER BY windows (the "
-        "single-reducer shape) never appear.",
+        "is the capstone algebra: the chunk relation's seeded-hash key "
+        "feeds the fused rank + offset pass (one data window PARTITIONED "
+        "by the 256 hash-prefix buckets, one ≤256-row metadata window "
+        "broadcast back); the only corpus-scale exchange it adds is that "
+        "bucket shuffle, the one the base export already pays.  The "
+        "oracle's two global ORDER BY windows (the single-reducer shape) "
+        "never appear.",
     ),
     (
         "q_corpus_curation_decon",
@@ -282,10 +295,10 @@ ENTRIES = [
         "scan-side split + transform + explode exactly as "
         "q_export_chunks, and the tag count is per-chunk array "
         "arithmetic in the same projection.  Downstream is the capstone "
-        "algebra unchanged: seeded-hash two_phase_rank over 256 prefix "
-        "buckets + rank-keyed distributed prefix sum; the only "
-        "corpus-scale exchanges are the rank/prefix bucket shuffles the "
-        "base export already pays — composing the two release gates "
+        "algebra unchanged: the fused rank + offset pass (one data "
+        "window PARTITIONED by the 256 hash-prefix buckets, one ≤256-row "
+        "metadata window broadcast back); its bucket shuffle is the one "
+        "the base export already pays — composing the two release gates "
         "adds ZERO new corpus-sized exchanges.",
     ),
     (
@@ -340,15 +353,15 @@ ENTRIES = [
     ),
     (
         "q_pack_shuffled",
-        "Shuffled-order packing (round 7): the export composition — "
-        "two_phase_rank's bucket-parallel permutation feeds "
-        "distributed_prefix_sum keyed on the dense rank (uniform range "
-        "buckets).  The oracle's two chained global windows never "
-        "appear: every corpus-sized window in this plan is PARTITIONED "
-        "(hash-prefix buckets, then rank-range buckets) and the only "
-        "unpartitioned windows run over ≤256-row metadata relations, "
-        "broadcast back.  One tokenize scan (the shared memo) feeds "
-        "rank, offsets, and totals.",
+        "Shuffled-order packing (round 7, fused round 12): the export "
+        "composition — one bucket-parallel pass computes the seeded "
+        "permutation's rank and the running token sum together.  The "
+        "oracle's two chained global windows never appear: the one "
+        "corpus-sized window in this plan is PARTITIONED by the 256 "
+        "hash-prefix buckets and the only unpartitioned window runs "
+        "over the ≤256-row bucket-totals metadata, broadcast back.  One "
+        "tokenize scan (the shared memo) feeds rank, offsets, and "
+        "totals.",
     ),
     (
         "q_pack_blocks",
