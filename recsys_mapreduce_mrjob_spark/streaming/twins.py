@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -241,12 +241,14 @@ def stateful_counter_stream(events: DataFrame) -> DataFrame:
     )
 
 
-# Key-hash bucket count for the versioned-state twins.  32 matches local
-# parallelism for the graded queries; the bench rung and a production
-# deployment raise it (thousands of buckets) so a micro-batch touches —
-# and therefore rewrites — only |batch keys| buckets of a billion-key
-# state, never the whole dimension (VERDICT r9 "what's missing" #1: the
-# IVF upsert's O(|batch|) discipline applied to folding state).
+# Key-hash bucket count for the versioned-state twins.  It fixes the
+# state's file layout only: the write runs on at most one task per core
+# whatever the count (:func:`_write_buckets`), so the two are independent.
+# The bench rung and a production deployment raise it (thousands of
+# buckets) so a micro-batch touches — and therefore rewrites — only
+# |batch keys| buckets of a billion-key state, never the whole dimension
+# (VERDICT r9 "what's missing" #1: the IVF upsert's O(|batch|) discipline
+# applied to folding state).
 _STATE_BUCKETS = 32
 
 
@@ -426,12 +428,15 @@ def _read_buckets(
     state_dir: str,
     batch_id: int,
     touched: set[int],
-    schema: str | None = None,
-) -> DataFrame | None:
+    schema: str | T.StructType,
+) -> DataFrame:
     """The state of the ``touched`` buckets as a batch's fold must see
     it: each bucket's newest complete version strictly below
-    ``batch_id`` (layout contract: :func:`_bucketed_fold`).  With no
-    such version, None — or an empty frame of ``schema`` when given.
+    ``batch_id`` (layout contract: :func:`_bucketed_fold`), read by its
+    known ``schema`` (DDL string or ``StructType``) so no job runs to
+    infer it.  With no such version the same read scans zero paths: an
+    empty frame planned on the JVM alone, where an empty
+    ``createDataFrame`` would start Python workers.
 
     The one write-path fail-fast: a state dir holding ANY complete
     pre-bucketing version (no ``bkt=`` subdirs) raises, whatever its
@@ -445,9 +450,7 @@ def _read_buckets(
             "migrate_state_to_bucketed into a fresh dir first"
         )
     paths = bucket_latest_paths(state_dir, below=batch_id, buckets=touched)
-    if paths:
-        return spark.read.parquet(*sorted(paths.values()))
-    return None if schema is None else spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(*sorted(paths.values()))
 
 
 def _write_buckets(
@@ -460,14 +463,18 @@ def _write_buckets(
 ) -> None:
     """Write ``state`` — the new rows of exactly the ``touched``
     buckets — as version ``{state_dir}/v{batch_id}``, one
-    ``bkt={pmod(xxhash64(key), n_buckets)}`` subdir per bucket.
-    Repartitioning ON the bucket key first lands each bucket in ~one
-    file: without it every write task emits a file per touched bucket
-    (tasks × buckets small files — measured 8× the whole-batch wall at
-    the bench rung), and the next read of the bucket opens them all.
-    The overwrite makes a replayed batch's rewrite idempotent."""
+    ``bkt={pmod(xxhash64(key), n_buckets)}`` subdir per bucket holding
+    one file, written by at most as many tasks as there are cores.
+    Hash-repartitioning ON the bucket key sends each bucket to exactly
+    one task, so each bucket gets one file: without it every write task
+    emits a file per touched bucket (tasks × buckets small files —
+    measured 8× the whole-batch wall at the bench rung), and the next
+    read of the bucket opens them all.  More tasks than cores only add
+    launches of tasks that each write one small file.  The overwrite
+    makes a replayed batch's rewrite idempotent."""
+    n_tasks = min(len(touched), state.sparkSession.sparkContext.defaultParallelism)
     state.withColumn("bkt", _bucket_expr(F.col(key), n_buckets)).repartition(
-        len(touched), "bkt"
+        n_tasks, "bkt"
     ).write.mode("overwrite").partitionBy("bkt").parquet(
         f"{state_dir}/v{batch_id}"
     )
@@ -482,10 +489,14 @@ def _bucketed_fold(
     fold,
 ) -> None:
     """Fold one micro-batch's partial ``batch`` (already reduced to one
-    row per ``key``) into the bucketed state: persist it, collect the
-    buckets its keys hash into, read those buckets' state, ``fold`` the
-    union of state and partial, and rewrite only the touched buckets.
-    An empty batch writes nothing.  ``fold`` must be associative and
+    row per ``key``) into the bucketed state: persist it under an
+    observation of the buckets its keys hash into, fill the cache with
+    one ``noop`` write (the same pass yields the touched set), read
+    those buckets' state by the partial's schema, ``fold`` the union of
+    state and partial, and rewrite only the touched buckets.  With no
+    state below the batch the fold runs over the cached partial alone,
+    which is already partitioned on the key.  An empty batch observes
+    an empty set and writes nothing.  ``fold`` must be associative and
     commutative over rows of the state schema — the partial is a fold
     of the raw batch and the result a fold of both.
 
@@ -516,14 +527,22 @@ def _bucketed_fold(
     - **No pre-bucketing state.**  A version with no ``bkt=`` subdirs
       holds the WHOLE state; readers accept a pure old-layout dir, but
       writers refuse it (:func:`_read_buckets`)."""
-    part = batch.withColumn("bkt", _bucket_expr(F.col(key), n_buckets)).persist()
+    seen = Observation()
+    part = (
+        batch.withColumn("bkt", _bucket_expr(F.col(key), n_buckets))
+        .observe(seen, F.collect_set("bkt").alias("touched"))
+        .persist()
+    )
     try:
-        touched = {r["bkt"] for r in part.select("bkt").distinct().collect()}
+        part.write.format("noop").mode("overwrite").save()
+        touched = set(seen.get["touched"])
         if not touched:
             return  # empty batch: every bucket keeps its version
         new = part.drop("bkt")
-        old = _read_buckets(part.sparkSession, state_dir, batch_id, touched)
-        merged = fold(new if old is None else old.unionByName(new))
+        old = _read_buckets(part.sparkSession, state_dir, batch_id, touched, new.schema)
+        # No state below the batch: fold the cached partial alone — it is
+        # already partitioned on the key, so no exchange is added.
+        merged = fold(old.unionByName(new) if old.inputFiles() else new)
         _write_buckets(merged, state_dir, batch_id, key, n_buckets, touched)
     finally:
         part.unpersist()
@@ -1655,7 +1674,7 @@ def band_probe_candidates(
     footprint is what lets Catalyst auto-broadcast the probe side)."""
     bands_old = band_state_reader(s, bands_new, bands_dir, batch_id)
     if bands_old is None:
-        bands_old = s.createDataFrame([], "doc_id long, band int, bsig string")
+        bands_old = s.read.schema("doc_id long, band int, bsig string").parquet()
     # Candidates: old×new on the band key (exactly-once pair
     # discovery — the old member landed in an earlier batch) plus
     # new×new within the batch; normalized to doc_a < doc_b.

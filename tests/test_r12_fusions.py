@@ -257,3 +257,66 @@ def test_twostar_star_forest_input_is_already_converged(spark):
     }
     assert labels == {0: 0, 1: 0, 2: 0, 3: 0,
                       10: 10, 11: 10, 20: 20, 21: 20}
+
+
+def test_doc_shard_manifest_spans_shards_like_oracle(spark, tmp_path):
+    """The doc-level shard arithmetic of the export tail at three shards:
+    ``_shard_manifest`` over ``_shuffle_placed`` equals the DuckDB tail
+    ``_export_oracle_tail`` on the same 2 500 ``(doc_id, n_tokens)`` rows,
+    so ``(shuffle_rank - 1) div 1000`` and a packed block that straddles
+    a shard boundary are checked below the scale where a curated corpus
+    fills more than one shard."""
+    import duckdb
+    import pyarrow as pa
+
+    from recsys_mapreduce_mrjob_spark.operators import text
+    from .parity import _rows_to_multiset
+
+    # 1-13 tokens per doc, so offsets depend on the seeded permutation.
+    rows = [(d * 3 + 1, 1 + (d * 7919) % 13) for d in range(2500)]
+    schema = "doc_id long, n_tokens long"
+    placed = text._shuffle_placed(
+        spark,
+        str(tmp_path),
+        "test_doc_shard_manifest",
+        "doc_id",
+        lambda: spark.createDataFrame(rows, schema),
+    )
+    got = text._shard_manifest(
+        placed,
+        text._EXPORT_SHARD_DOCS,
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_tokens").alias("shard_tokens"),
+    ).collect()
+
+    con = duckdb.connect()
+    try:
+        con.register(
+            "src_rows",
+            pa.table(
+                {
+                    "doc_id": pa.array([r[0] for r in rows], pa.int64()),
+                    "n_tokens": pa.array([r[1] for r in rows], pa.int64()),
+                }
+            ),
+        )
+        res = con.execute(
+            "WITH src AS (SELECT * FROM src_rows)"
+            + text._export_oracle_tail(
+                "src", "doc_id", text._EXPORT_SHARD_DOCS, text._EXPORT_DOC_COUNTS
+            )
+        )
+        d_cols = [d[0] for d in res.description]
+        want = res.fetchall()
+    finally:
+        con.close()
+
+    s_cols = list(got[0].asDict())
+    assert sorted(s_cols) == sorted(d_cols)
+    assert _rows_to_multiset(got, s_cols) == _rows_to_multiset(want, d_cols)
+    by_shard = sorted((r["shard"], r["first_block"], r["last_block"]) for r in got)
+    assert [s for s, _f, _l in by_shard] == [0, 1, 2]
+    assert any(
+        first == prev_last
+        for (_s, _f, prev_last), (_t, first, _l) in zip(by_shard, by_shard[1:])
+    ), by_shard

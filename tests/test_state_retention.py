@@ -36,6 +36,22 @@ def _versions(state_dir: str) -> list[int]:
     )
 
 
+def _assert_one_file_per_bucket(state_dir: str) -> None:
+    bucket_dirs = [
+        os.path.join(state_dir, v, b)
+        for v in os.listdir(state_dir)
+        if v.startswith("v")
+        for b in os.listdir(os.path.join(state_dir, v))
+        if b.startswith("bkt=")
+    ]
+    assert bucket_dirs, f"no bucket dirs under {state_dir}"
+    for d in bucket_dirs:
+        parts = [
+            f for f in os.listdir(d) if f.startswith("part-") and f.endswith(".parquet")
+        ]
+        assert len(parts) == 1, f"{d} holds {parts}"
+
+
 def _final_state(spark, state_dir: str) -> Counter:
     from recsys_mapreduce_mrjob_spark.streaming.twins import read_bucketed_state
 
@@ -292,6 +308,7 @@ def test_migrate_old_layout_then_resume_ingest(spark):
         stats(part_a).write.parquet(f"{old}/v5")
         migrate_state_to_bucketed(spark, old, new, key="item_id", n_buckets=8)
         assert os.path.isdir(f"{new}/v-1/bkt=0")
+        _assert_one_file_per_bucket(new)
         migrated = Counter(
             tuple(r) for r in read_bucketed_state(spark, new).collect()
         )
@@ -386,3 +403,72 @@ def test_writers_reject_pure_old_layout(spark, twin, tmp_path):
     assert [tuple(r) for r in spark.read.parquet(f"{state}/v0").collect()] == [
         (1, 10)
     ]
+
+
+def test_empty_state_read_is_a_jvm_scan_of_the_schema(spark, tmp_path):
+    """With no version below the batch, the state read is a zero-path
+    parquet scan of the given schema: it has the DDL's columns and types
+    and plans no Python-backed ``ExistingRDD`` scan, which would start
+    Python workers on a stream's first batch."""
+    from recsys_mapreduce_mrjob_spark.streaming.twins import _read_buckets
+
+    state = tmp_path / "state"
+    state.mkdir()
+    df = _read_buckets(
+        spark, str(state), 0, {0, 1}, "doc_id long, sh_set array<long>, n_sh int"
+    )
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema] == [
+        ("doc_id", "bigint"),
+        ("sh_set", "array<bigint>"),
+        ("n_sh", "int"),
+    ]
+    assert df.collect() == []
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan
+
+
+def test_fold_write_shape_and_schema_known_read(spark, smoke_dir, tmp_path, monkeypatch):
+    """The bucketed fold's per-batch job shape over a two-file
+    ``incremental_doc_dedup`` drain: every ``v*/bkt=*`` dir holds exactly
+    one parquet file; each version's write stage runs at most one task
+    per core, however many buckets the batch touched; and batch 1's
+    state read, which has batch 0's version to read, launches no
+    schema-inference job.  Jobs are attributed through job groups set
+    from ``on_batch`` (the fold) and around the state read."""
+    from recsys_mapreduce_mrjob_spark.streaming import twins
+
+    sc = spark.sparkContext
+    src, state = str(tmp_path / "docs"), str(tmp_path / "state")
+    twins.write_doc_chunks(spark, smoke_dir, src, n_chunks=2)
+    tag = f"write-shape-{tmp_path.name}"
+    current: dict[str, str] = {}
+
+    def on_batch(batch_id: int) -> None:
+        current["fold"] = f"{tag}-fold-{batch_id}"
+        sc.setJobGroup(current["fold"], current["fold"])
+
+    read_buckets = twins._read_buckets
+
+    def grouped_read(s, state_dir, batch_id, *rest):
+        sc.setJobGroup(f"{tag}-read-{batch_id}", "state read")
+        try:
+            return read_buckets(s, state_dir, batch_id, *rest)
+        finally:
+            sc.setJobGroup(current["fold"], current["fold"])
+
+    monkeypatch.setattr(twins, "_read_buckets", grouped_read)
+    twins.incremental_doc_dedup(spark, src, state, on_batch=on_batch)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+
+    _assert_one_file_per_bucket(state)
+    assert _versions(state) == [0, 1]
+    tracker = sc.statusTracker()
+    for batch_id in (0, 1):
+        jobs = tracker.getJobIdsForGroup(f"{tag}-fold-{batch_id}")
+        assert jobs, f"no jobs attributed to batch {batch_id}"
+        # The write is the fold's last action; its result stage is the
+        # last stage of that job.
+        write_stage = max(tracker.getJobInfo(max(jobs)).stageIds)
+        n_tasks = tracker.getStageInfo(write_stage).numTasks
+        assert n_tasks <= sc.defaultParallelism, (batch_id, n_tasks)
+    assert list(tracker.getJobIdsForGroup(f"{tag}-read-1")) == []
