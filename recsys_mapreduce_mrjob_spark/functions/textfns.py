@@ -32,17 +32,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def bpe_ish_token_count(text: Column) -> Column:
-    """Sub-word-ish token count: word chunks + digits + punctuation marks,
-    a BPE-flavored regex approximation for budget estimation."""
-    return F.size(
-        F.filter(
-            F.split(text, r"(?<=\W)|(?=\W)"),
-            lambda t: F.trim(t) != "",
-        )
-    )
-
-
 def lang_score(text: Column, lang: str) -> Column:
     """Fraction of this language's marker words present in the text."""
     toks = tokens(F.lower(text))

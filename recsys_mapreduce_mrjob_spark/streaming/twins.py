@@ -481,24 +481,31 @@ def _write_buckets(
 
 
 def _bucketed_fold(
-    batch: DataFrame,
+    keys: DataFrame,
     state_dir: str,
     batch_id: int,
     key: str,
     n_buckets: int,
-    fold,
+    schema: str | T.StructType,
+    step,
+    reads: DataFrame | None = None,
 ) -> None:
-    """Fold one micro-batch's partial ``batch`` (already reduced to one
-    row per ``key``) into the bucketed state: persist it under an
-    observation of the buckets its keys hash into, fill the cache with
-    one ``noop`` write (the same pass yields the touched set), read
-    those buckets' state by the partial's schema, ``fold`` the union of
-    state and partial, and rewrite only the touched buckets.  With no
-    state below the batch the fold runs over the cached partial alone,
-    which is already partitioned on the key.  An empty batch observes
-    an empty set and writes nothing.  ``fold`` must be associative and
-    commutative over rows of the state schema — the partial is a fold
-    of the raw batch and the result a fold of both.
+    """Fold one micro-batch into the bucketed state: persist the batch's
+    key frame ``keys``, and the ``reads`` frame of keys whose buckets the
+    step must see but not rewrite, under an observation of the buckets
+    their ``key`` column hashes into; fill the cache with one ``noop``
+    write (the same pass yields both bucket sets); read the state of
+    every touched bucket by its known ``schema``; and rewrite the
+    buckets of ``keys`` with what ``step(old, part)`` returns — ``old``
+    the touched buckets' state, ``part`` the cached frame.  Rows of
+    read-only buckets are dropped before the write.  A batch whose
+    ``keys`` are empty rewrites nothing and the step does not run.
+
+    A step returns EVERY row of each bucket it rewrites (``old`` holds
+    them all), the rows of ``keys`` among them, so every version this
+    writes has a ``bkt=`` dir; one without would pass for pre-bucketing
+    state in :func:`bucket_latest_paths`, and the next batch's
+    :func:`_read_buckets` would refuse it.
 
     The state-layout contract every bucketed twin in this module
     shares:
@@ -527,25 +534,55 @@ def _bucketed_fold(
     - **No pre-bucketing state.**  A version with no ``bkt=`` subdirs
       holds the WHOLE state; readers accept a pure old-layout dir, but
       writers refuse it (:func:`_read_buckets`)."""
+    bkt = _bucket_expr(F.col(key), n_buckets)
+    framed, rewritten = keys.withColumn("bkt", bkt), "bkt"
+    if reads is not None:
+        # A read-only key carries no bucket to rewrite.
+        framed = framed.withColumn("wbkt", F.col("bkt")).unionByName(
+            reads.withColumn("bkt", bkt), allowMissingColumns=True
+        )
+        rewritten = "wbkt"
     seen = Observation()
-    part = (
-        batch.withColumn("bkt", _bucket_expr(F.col(key), n_buckets))
-        .observe(seen, F.collect_set("bkt").alias("touched"))
-        .persist()
-    )
+    cached = framed.observe(
+        seen,
+        F.collect_set("bkt").alias("touched"),
+        F.collect_set(rewritten).alias("rewritten"),
+    ).persist()
     try:
-        part.write.format("noop").mode("overwrite").save()
-        touched = set(seen.get["touched"])
-        if not touched:
+        cached.write.format("noop").mode("overwrite").save()
+        got = seen.get
+        touched, writes = set(got["touched"]), set(got["rewritten"])
+        if not writes:
             return  # empty batch: every bucket keeps its version
-        new = part.drop("bkt")
-        old = _read_buckets(part.sparkSession, state_dir, batch_id, touched, new.schema)
-        # No state below the batch: fold the cached partial alone — it is
-        # already partitioned on the key, so no exchange is added.
-        merged = fold(old.unionByName(new) if old.inputFiles() else new)
-        _write_buckets(merged, state_dir, batch_id, key, n_buckets, touched)
+        old = _read_buckets(cached.sparkSession, state_dir, batch_id, touched, schema)
+        out = step(old, cached.drop("bkt", "wbkt"))
+        if writes != touched:
+            out = out.where(bkt.isin(sorted(writes)))
+        _write_buckets(out, state_dir, batch_id, key, n_buckets, writes)
     finally:
-        part.unpersist()
+        cached.unpersist()
+
+
+def _fold_partial(
+    partial: DataFrame,
+    state_dir: str,
+    batch_id: int,
+    key: str,
+    n_buckets: int,
+    fold,
+) -> None:
+    """:func:`_bucketed_fold` for a batch ``partial`` already reduced to
+    one row per ``key`` and a ``fold`` that is associative and
+    commutative over rows of the state schema — the partial is a fold
+    of the raw batch and the result a fold of both.  The state is read
+    by the partial's schema.  With no state below the batch the fold
+    runs over the cached partial alone, which is already partitioned on
+    the key, so no exchange is added."""
+
+    def step(old: DataFrame, part: DataFrame) -> DataFrame:
+        return fold(old.unionByName(part) if old.inputFiles() else part)
+
+    _bucketed_fold(partial, state_dir, batch_id, key, n_buckets, partial.schema, step)
 
 
 def incremental_item_stats(
@@ -594,7 +631,7 @@ def incremental_item_stats(
             .cast("decimal(38,6)")
             .alias("rating_sum"),
         )
-        _bucketed_fold(partial, state_dir, batch_id, "item_id", n_buckets, merge)
+        _fold_partial(partial, state_dir, batch_id, "item_id", n_buckets, merge)
 
     _claim_bucket_layout(state_dir, "item_id", n_buckets)
     _drain(
@@ -1216,7 +1253,7 @@ def incremental_doc_dedup(
                 "source",
             )
         )
-        _bucketed_fold(
+        _fold_partial(
             partial, state_dir, batch_id, "content_hash", n_buckets, keep_first
         )
 
@@ -1472,27 +1509,7 @@ def incremental_scd2(
     """
     from pyspark.sql import Window
 
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        ev = batch_df.where(F.col("user_id").isNotNull())
-        touched = {
-            r["b"]
-            for r in ev.select(
-                _bucket_expr(F.col("user_id"), n_buckets).alias("b")
-            )
-            .distinct()
-            .collect()
-        }
-        if not touched:
-            return  # empty batch: every bucket keeps its version
-        prev = _read_buckets(
-            s,
-            state_dir,
-            batch_id,
-            touched,
-            "user_id long, run_id long, status string, from_ts timestamp, "
-            "n_events long, valid_to_ts timestamp",
-        )
+    def step(prev: DataFrame, ev: DataFrame) -> DataFrame:
         w = Window.partitionBy("user_id").orderBy(F.asc("ts"), F.asc("event_id"))
         marked = ev.select(
             "user_id",
@@ -1588,12 +1605,23 @@ def incremental_scd2(
             F.col("open_n").alias("n_events"),
             F.lit(None).cast("timestamp").alias("valid_to_ts"),
         )
-        merged = (
+        return (
             prev_closed.unionByName(closed_open)
             .unionByName(untouched_open)
             .unionByName(new_rows.select(*prev_closed.columns))
         )
-        _write_buckets(merged, state_dir, batch_id, "user_id", n_buckets, touched)
+
+    def upsert(batch_df: DataFrame, batch_id: int) -> None:
+        _bucketed_fold(
+            batch_df.where(F.col("user_id").isNotNull()),
+            state_dir,
+            batch_id,
+            "user_id",
+            n_buckets,
+            "user_id long, run_id long, status string, from_ts timestamp, "
+            "n_events long, valid_to_ts timestamp",
+            step,
+        )
 
     _claim_bucket_layout(state_dir, "user_id", n_buckets)
     _drain(
@@ -1607,28 +1635,31 @@ def incremental_scd2(
     )
 
 
+# The one schema of the append-only band state (plain ``v{n}`` files and
+# the compacted ``v-1`` buckets alike), so no read of it infers one.
+_BAND_SCHEMA = "doc_id long, band int, bsig string"
+
+
 def band_state_reader(
     s: SparkSession,
     bands_new: DataFrame,
     bands_dir: str,
     batch_id: int | None = None,
-) -> DataFrame | None:
+) -> DataFrame:
     """The accumulated band-state relation a batch's probe joins — the
     ONE read definition (code-review r12: a probe-isolation measurement,
     BASELINE.md "Round-12 near-dup probe isolation", once re-implemented
     this inline, which is exactly the drift the
     ``band_probe_candidates`` factoring exists to prevent): append-only
     ``v{n}`` versions (strictly below ``batch_id`` when given — the
-    replay guard) unioned with, when :func:`compact_neardup_bands` has
+    replay guard) together with, when :func:`compact_neardup_bands` has
     run, ONLY the bsig-bucketed compacted subtrees ``bands_new``'s
-    signatures hash into (the compaction's whole point).  Returns None
-    when no state exists yet."""
+    signatures hash into (the compaction's whole point).  Read by the
+    band schema, so no job runs to infer it; with no state yet the same
+    read scans zero paths."""
     import os
 
-    plain_paths, compacted = band_state_paths(bands_dir, batch_id)
-    readers = []
-    if plain_paths:
-        readers.append(s.read.parquet(*plain_paths))
+    paths, compacted = band_state_paths(bands_dir, batch_id)
     if compacted is not None:
         comp_b = _compacted_band_buckets(compacted)
         touched = {
@@ -1639,21 +1670,14 @@ def band_state_reader(
             .distinct()
             .collect()
         }
-        comp_paths = [
+        # Each bucket dir is read as a leaf, so the compacted tree's
+        # ``bkt=`` partitioning never meets the plain versions.
+        paths += [
             p
             for b in sorted(touched)
             if os.path.isdir(p := os.path.join(compacted, f"bkt={b}"))
         ]
-        if comp_paths:
-            readers.append(
-                s.read.parquet(*comp_paths).select("doc_id", "band", "bsig")
-            )
-    if not readers:
-        return None
-    out = readers[0]
-    for r in readers[1:]:
-        out = out.unionByName(r)
-    return out
+    return s.read.schema(_BAND_SCHEMA).parquet(*paths)
 
 
 def band_probe_candidates(
@@ -1661,20 +1685,16 @@ def band_probe_candidates(
 ) -> DataFrame:
     """Near-dup candidate pairs for one micro-batch's band rows — the
     probe both the near-dup ingestion fold and the curation ingestion
-    fold run (factored round 12 so the two consumers can never drift on
-    discovery semantics): the batch's (band, bsig) rows equi-join the
-    accumulated band state (append-only ``v{n}`` versions strictly below
-    ``batch_id``, plus — when :func:`compact_neardup_bands` has run —
-    only the bsig-bucketed compacted subtrees this batch's signatures
-    hash into) UNION the new×new in-batch self-join, normalized to
+    fold run (through :func:`_probe_and_verify`, so the two consumers
+    can never drift on discovery semantics): the batch's (band, bsig)
+    rows equi-join the accumulated band state (:func:`band_state_reader`)
+    UNION the new×new in-batch self-join, normalized to
     ``doc_a < doc_b`` and deduplicated.  A pair is discovered EXACTLY
     ONCE, in the batch where its later-arriving member lands, for any
     chunking of the corpus.  ``bands_new`` must be persisted AND
     materialized by the caller (the InMemoryRelation's true batch-sized
     footprint is what lets Catalyst auto-broadcast the probe side)."""
     bands_old = band_state_reader(s, bands_new, bands_dir, batch_id)
-    if bands_old is None:
-        bands_old = s.read.schema("doc_id long, band int, bsig string").parquet()
     # Candidates: old×new on the band key (exactly-once pair
     # discovery — the old member landed in an earlier batch) plus
     # new×new within the batch; normalized to doc_a < doc_b.
@@ -1701,6 +1721,91 @@ def band_probe_candidates(
         F.col("nn.doc_id").alias("doc_b"),
     )
     return cand_on.unionByName(cand_nn).distinct()
+
+
+def _probe_and_verify(
+    sig: DataFrame,
+    new_ids: DataFrame,
+    sets_dir: str,
+    sets_schema: str,
+    bands_dir: str,
+    batch_id: int,
+    n_buckets: int,
+    finish,
+    rewrite_old: bool,
+) -> None:
+    """One micro-batch's near-pair discovery, shared by
+    :func:`incremental_neardup` and :func:`incremental_curation`: the
+    band rows of the batch's signatures ``sig`` are persisted and
+    materialized, then probe the band state under ``bands_dir``
+    (:func:`band_probe_candidates`).  ``new_ids`` key a
+    :func:`_bucketed_fold` over the doc_id-bucketed set state at
+    ``sets_dir`` (columns ``doc_id``, ``sh_set``, ``n_sh`` among
+    ``sets_schema``); the candidate endpoints not among them (old docs)
+    join that key frame when ``rewrite_old``, and are read only
+    otherwise.  The fold's step verifies the candidates by exact Jaccard
+    (``portable_verify_pairs``) against the batch's sets and the old
+    endpoints' state sets, appends the batch's band rows as
+    ``v{batch_id}`` (one file sorted by bsig, for row-group pruning and
+    a merge-shaped compaction), and returns ``finish(old, verified)``:
+    the twin's rows for the touched buckets of the set state, ``old``
+    their state and ``verified`` the batch's (doc_a, doc_b) near-pairs
+    (step contract: :func:`_bucketed_fold`)."""
+    from ..operators.dedup import portable_band_rows, portable_verify_pairs
+
+    bands_new = portable_band_rows(sig).persist()
+    try:
+        # Materialize the persisted band rows BEFORE building the probe
+        # join: an unmaterialized persist reports the default (huge)
+        # sizeInBytes, so Catalyst shuffle-joined the whole band history
+        # against 800 rows — the solo ladder measured the per-batch wall
+        # growing 10.5 → 23.3 s across 40k→160k docs on exactly that
+        # exchange.  Materialized, the InMemoryRelation reports its true
+        # batch-sized footprint and the probe auto-broadcasts (with the
+        # built-in fallback for a giant backfill batch that genuinely
+        # shouldn't broadcast — no manual size dispatch needed).
+        bands_new.count()
+        cand = band_probe_candidates(
+            sig.sparkSession, bands_new, bands_dir, batch_id
+        ).persist()
+        try:
+            # Old docs the verification touches: candidate endpoints not
+            # in this batch.
+            old_need = (
+                cand.select(F.col("doc_a").alias("doc_id"))
+                .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
+                .distinct()
+                .join(new_ids, "doc_id", "left_anti")
+            )
+
+            def step(old: DataFrame, _keys: DataFrame) -> DataFrame:
+                sets = sig.select("doc_id", "sh_set", "n_sh").unionByName(
+                    old.join(old_need, "doc_id", "left_semi").select(
+                        "doc_id", "sh_set", "n_sh"
+                    )
+                )
+                verified = portable_verify_pairs(cand, sets).select(
+                    "doc_a", "doc_b"
+                )
+                bands_new.sort("bsig").coalesce(1).write.mode(
+                    "overwrite"
+                ).parquet(f"{bands_dir}/v{batch_id}")
+                return finish(old, verified)
+
+            _bucketed_fold(
+                new_ids.unionByName(old_need) if rewrite_old else new_ids,
+                sets_dir,
+                batch_id,
+                "doc_id",
+                n_buckets,
+                sets_schema,
+                step,
+                reads=None if rewrite_old else old_need,
+            )
+        finally:
+            cand.unpersist()
+    finally:
+        bands_new.unpersist()
 
 
 def incremental_neardup(
@@ -1781,149 +1886,70 @@ def incremental_neardup(
     the batch pipeline) — a MinHash-estimate verification would shrink
     state to the 32-minhash vector at the price of approximate Jaccard.
     """
-    from ..operators.dedup import (
-        portable_band_rows,
-        portable_minhash_sig,
-        portable_verify_pairs,
-    )
+    from ..operators.dedup import portable_minhash_sig
 
     bands_dir = f"{state_dir}/bands"
     docs_dir = f"{state_dir}/docs"
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
         sig = portable_minhash_sig(batch_df.select("doc_id", "text")).persist()
-        # Every batch doc gets a docs-state row — docs too short to
-        # shingle have no signature but are still (trivially kept)
-        # corpus members the graded keeper set must contain.
-        docs_new = (
-            batch_df.select("doc_id", "lang", "source")
-            .join(sig.select("doc_id", "sh_set", "n_sh"), "doc_id", "left")
-            .select(
-                "doc_id",
-                "lang",
-                "source",
-                F.coalesce("sh_set", F.array().cast("array<long>")).alias(
-                    "sh_set"
-                ),
-                F.coalesce("n_sh", F.lit(0)).alias("n_sh"),
-            )
-            .persist()
-        )
-        bands_new = portable_band_rows(sig).persist()
-        try:
-            new_ids = docs_new.select("doc_id")
-            if docs_new.count() == 0:
-                return  # empty batch: every state version stands
-            # Materialize the persisted band rows BEFORE building the
-            # probe join: an unmaterialized persist reports the default
-            # (huge) sizeInBytes, so Catalyst shuffle-joined the whole
-            # band history against 800 rows — the solo ladder measured
-            # the per-batch wall growing 10.5 → 23.3 s across 40k→160k
-            # docs on exactly that exchange.  Materialized, the
-            # InMemoryRelation reports its true batch-sized footprint
-            # and the probe auto-broadcasts (with the built-in fallback
-            # for a giant backfill batch that genuinely shouldn't
-            # broadcast — no manual size dispatch needed).
-            bands_new.count()
-            cand = band_probe_candidates(
-                s, bands_new, bands_dir, batch_id
-            ).persist()
-            try:
-                # Old docs the verification (and the flag merge) touches:
-                # candidate endpoints not in this batch.
-                cand_ids = (
-                    cand.select(F.col("doc_a").alias("doc_id"))
-                    .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
-                    .distinct()
+
+        def flag(docs_old: DataFrame, verified: DataFrame) -> DataFrame:
+            # Every batch doc gets a docs-state row — docs too short to
+            # shingle have no signature but are still (trivially kept)
+            # corpus members the graded keeper set must contain.
+            docs_new = (
+                batch_df.select("doc_id", "lang", "source")
+                .join(sig.select("doc_id", "sh_set", "n_sh"), "doc_id", "left")
+                .select(
+                    "doc_id",
+                    "lang",
+                    "source",
+                    F.coalesce("sh_set", F.array().cast("array<long>")).alias(
+                        "sh_set"
+                    ),
+                    F.coalesce("n_sh", F.lit(0)).alias("n_sh"),
+                    F.lit(False).alias("dropped"),
                 )
-                old_need = cand_ids.join(new_ids, "doc_id", "left_anti")
-                touched_doc = {
-                    r["bkt"]
-                    for r in new_ids.unionByName(old_need)
-                    .select(
-                        _bucket_expr(F.col("doc_id"), n_buckets).alias("bkt")
-                    )
-                    .distinct()
-                    .collect()
-                }
-                docs_old = _read_buckets(
-                    s,
-                    docs_dir,
-                    batch_id,
-                    touched_doc,
-                    "doc_id long, lang string, source string, "
-                    "sh_set array<long>, n_sh int, dropped boolean",
-                ).persist()
-                try:
-                    sets = docs_new.select(
-                        "doc_id", "sh_set", "n_sh"
-                    ).unionByName(
-                        docs_old.join(old_need, "doc_id", "left_semi").select(
-                            "doc_id", "sh_set", "n_sh"
-                        )
-                    )
-                    dropped = (
-                        portable_verify_pairs(cand, sets)
-                        .select(F.col("doc_b").alias("doc_id"))
-                        .distinct()
-                        .withColumn("dp", F.lit(True))
-                        .persist()
-                    )
-                    try:
-                        new_flagged = docs_new.join(
-                            dropped, "doc_id", "left"
-                        ).select(
-                            "doc_id",
-                            "lang",
-                            "source",
-                            "sh_set",
-                            "n_sh",
-                            F.coalesce("dp", F.lit(False)).alias("dropped"),
-                        )
-                        # OR-fold the flag onto old rows of the touched
-                        # buckets (a new smaller-id near-dup flips an
-                        # already-kept old doc; already-dropped stays).
-                        old_flagged = docs_old.join(
-                            dropped, "doc_id", "left"
-                        ).select(
-                            "doc_id",
-                            "lang",
-                            "source",
-                            "sh_set",
-                            "n_sh",
-                            (
-                                F.col("dropped")
-                                | F.coalesce("dp", F.lit(False))
-                            ).alias("dropped"),
-                        )
-                        _write_buckets(
-                            old_flagged.unionByName(new_flagged),
-                            docs_dir,
-                            batch_id,
-                            "doc_id",
-                            n_buckets,
-                            touched_doc,
-                        )
-                        # Append-only band version: ONLY this batch's
-                        # rows, one file, sorted by bsig (row-group
-                        # stats + future compaction merge — see
-                        # docstring).  An all-shingle-less batch writes
-                        # an empty (schema-carrying) version — harmless
-                        # and keeps the version listing uniform.
-                        bands_new.sort("bsig").coalesce(1).write.mode(
-                            "overwrite"
-                        ).parquet(f"{bands_dir}/v{batch_id}")
-                    finally:
-                        dropped.unpersist()
-                finally:
-                    docs_old.unpersist()
-            finally:
-                cand.unpersist()
+            )
+            dropped = (
+                verified.select(F.col("doc_b").alias("doc_id"))
+                .distinct()
+                .withColumn("dp", F.lit(True))
+            )
+            # OR-fold the flag onto every row of the touched buckets (a
+            # new smaller-id near-dup flips an already-kept old doc;
+            # already-dropped stays).
+            return (
+                docs_old.unionByName(docs_new)
+                .join(dropped, "doc_id", "left")
+                .select(
+                    "doc_id",
+                    "lang",
+                    "source",
+                    "sh_set",
+                    "n_sh",
+                    (F.col("dropped") | F.coalesce("dp", F.lit(False))).alias(
+                        "dropped"
+                    ),
+                )
+            )
+
+        try:
+            _probe_and_verify(
+                sig,
+                batch_df.select("doc_id"),
+                docs_dir,
+                "doc_id long, lang string, source string, "
+                "sh_set array<long>, n_sh int, dropped boolean",
+                bands_dir,
+                batch_id,
+                n_buckets,
+                flag,
+                rewrite_old=True,
+            )
         finally:
             sig.unpersist()
-            docs_new.unpersist()
-            bands_new.unpersist()
 
     _claim_bucket_layout(docs_dir, "doc_id", n_buckets)
     _drain(
@@ -1947,7 +1973,7 @@ def band_state_paths(
     (:func:`compact_neardup_bands`), returned separately because it is
     bsig-bucketed (``bkt=`` subdirs) and mixing its partitioned layout
     into one multi-path read with plain files would fail partition
-    discovery — callers read its touched buckets individually."""
+    discovery — callers read its touched ``bkt=`` dirs as leaves."""
     versions = _complete_versions(bands_dir)
     plain = [p for v, p in versions if v >= 0 and (below is None or v < below)]
     compacted = next((p for v, p in versions if v == -1), None)
@@ -2164,11 +2190,7 @@ def incremental_curation(
     ``v{batch_id}`` idempotently.
     """
     from ..functions.textfns import lang_id, quality_score, token_count
-    from ..operators.dedup import (
-        portable_band_rows,
-        portable_minhash_sig,
-        portable_verify_pairs,
-    )
+    from ..operators.dedup import portable_minhash_sig
     from ..operators.text import _CURATION_QUALITY_MIN
 
     bands_dir = f"{state_dir}/bands"
@@ -2200,106 +2222,54 @@ def incremental_curation(
         )
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        s = batch_df.sparkSession
-        batch = batch_df.select("doc_id", "text").persist()
-        sig = portable_minhash_sig(batch).persist()
-        bands_new = portable_band_rows(sig).persist()
-        try:
-            if batch.count() == 0:
-                return  # empty batch: every state version stands
-            # Materialize before building the probe join (see
-            # band_probe_candidates: the true batch-sized footprint is
-            # what lets the probe auto-broadcast).
-            bands_new.count()
-            cand = band_probe_candidates(
-                s, bands_new, bands_dir, batch_id
-            ).persist()
-            try:
-                new_ids = batch.select("doc_id")
-                cand_ids = (
-                    cand.select(F.col("doc_a").alias("doc_id"))
-                    .unionByName(cand.select(F.col("doc_b").alias("doc_id")))
-                    .distinct()
-                )
-                old_need = cand_ids.join(new_ids, "doc_id", "left_anti")
-                sets_new = sig.select("doc_id", "sh_set", "n_sh")
-                bkt = _bucket_expr(F.col("doc_id"), n_buckets)
-                write_bkts = {
-                    r["bkt"]
-                    for r in sets_new.select(bkt.alias("bkt")).distinct().collect()
-                }
-                read_bkts = {
-                    r["bkt"]
-                    for r in old_need.select(bkt.alias("bkt")).distinct().collect()
-                }
-                sets_old = _read_buckets(
-                    s,
-                    sets_dir,
-                    batch_id,
-                    write_bkts | read_bkts,
-                    "doc_id long, sh_set array<long>, n_sh int",
-                ).persist()
-                try:
-                    verify_sets = sets_new.unionByName(
-                        sets_old.join(old_need, "doc_id", "left_semi")
-                    )
-                    verified = portable_verify_pairs(cand, verify_sets).select(
-                        "doc_a", "doc_b"
-                    )
-                    # Append-only pair + band versions: one file each,
-                    # exactly this batch's rows (an empty verified set
-                    # still writes a schema-carrying file — uniform
-                    # version listing).
-                    verified.coalesce(1).write.mode("overwrite").parquet(
-                        f"{pairs_dir}/v{batch_id}"
-                    )
-                    bands_new.sort("bsig").coalesce(1).write.mode(
-                        "overwrite"
-                    ).parquet(f"{bands_dir}/v{batch_id}")
-                    # Shingle-set merge: only buckets receiving NEW rows
-                    # are rewritten (rows are immutable — the verify-only
-                    # buckets above were read, not dirtied).
-                    if write_bkts:
-                        _write_buckets(
-                            sets_old.where(
-                                bkt.isin([int(b) for b in write_bkts])
-                            ).unionByName(sets_new),
-                            sets_dir,
-                            batch_id,
-                            "doc_id",
-                            n_buckets,
-                            write_bkts,
-                        )
-                finally:
-                    sets_old.unpersist()
-            finally:
-                cand.unpersist()
-            # Gate + exact-dedup fold (independent of the pair state;
-            # runs last so a crash mid-batch leaves at most idempotently
-            # rewritable versions behind).  No gate survivors: kept
-            # state stands.
-            gated = batch.select(
-                "doc_id",
-                F.md5(F.col("text").cast("binary")).alias("content_hash"),
-                (quality_score(F.col("text")) + F.lit(0.0)).alias("quality"),
-                lang_id(F.col("text")).alias("lang_pred"),
-                token_count(F.col("text")).cast("long").alias("n_tokens"),
-            ).where(
-                (F.col("quality") >= _CURATION_QUALITY_MIN)
-                & (F.col("lang_pred") != "und")
+        sig = portable_minhash_sig(batch_df.select("doc_id", "text")).persist()
+        sets_new = sig.select("doc_id", "sh_set", "n_sh")
+
+        def append_pairs(sets_old: DataFrame, verified: DataFrame) -> DataFrame:
+            # Append-only pair version: one file, exactly this batch's
+            # rows (an empty verified set still writes a schema-carrying
+            # file — uniform version listing).
+            verified.coalesce(1).write.mode("overwrite").parquet(
+                f"{pairs_dir}/v{batch_id}"
             )
-            _bucketed_fold(
-                keep_min(gated),
-                kept_dir,
+            return sets_old.unionByName(sets_new)
+
+        try:
+            # Keyed by the batch's SIGNED docs: only the buckets receiving
+            # their set rows are rewritten (rows are immutable — the
+            # verify-only buckets are read, not dirtied), and a batch with
+            # none (every doc too short to shingle) writes no set, band or
+            # pair version at all.
+            _probe_and_verify(
+                sig,
+                sets_new.select("doc_id"),
+                sets_dir,
+                "doc_id long, sh_set array<long>, n_sh int",
+                bands_dir,
                 batch_id,
-                "content_hash",
                 n_buckets,
-                keep_min,
+                append_pairs,
+                rewrite_old=False,
             )
         finally:
-            batch.unpersist()
             sig.unpersist()
-            bands_new.unpersist()
+        # Gate + exact-dedup fold (independent of the pair state; runs
+        # last so a crash mid-batch leaves at most idempotently
+        # rewritable versions behind).  No gate survivors: kept state
+        # stands.
+        gated = batch_df.select(
+            "doc_id",
+            F.md5(F.col("text").cast("binary")).alias("content_hash"),
+            (quality_score(F.col("text")) + F.lit(0.0)).alias("quality"),
+            lang_id(F.col("text")).alias("lang_pred"),
+            token_count(F.col("text")).cast("long").alias("n_tokens"),
+        ).where(
+            (F.col("quality") >= _CURATION_QUALITY_MIN)
+            & (F.col("lang_pred") != "und")
+        )
+        _fold_partial(
+            keep_min(gated), kept_dir, batch_id, "content_hash", n_buckets, keep_min
+        )
 
     _claim_bucket_layout(sets_dir, "doc_id", n_buckets)
     _claim_bucket_layout(kept_dir, "content_hash", n_buckets)
@@ -2620,7 +2590,8 @@ def incremental_semantic_dedup(
                     )
                     screen = screen | c
                 vstate = (
-                    s.read.parquet(*versions)
+                    s.read.schema(batch_cells.schema)
+                    .parquet(*versions)
                     .where(screen)
                     .select(
                         "vec_id",

@@ -472,3 +472,75 @@ def test_fold_write_shape_and_schema_known_read(spark, smoke_dir, tmp_path, monk
         n_tasks = tracker.getStageInfo(write_stage).numTasks
         assert n_tasks <= sc.defaultParallelism, (batch_id, n_tasks)
     assert list(tracker.getJobIdsForGroup(f"{tag}-read-1")) == []
+
+
+@pytest.mark.parametrize(
+    "twin,bucketed",
+    [
+        ("incremental_neardup", ("docs",)),
+        ("incremental_curation", ("shsets", "kept")),
+    ],
+)
+def test_probe_and_verify_fold_shape(spark, smoke_dir, tmp_path, monkeypatch, twin, bucketed):
+    """The fold shape of the two probe-and-verify twins over a two-file
+    drain: every ``v*/bkt=*`` dir of their bucketed state holds one
+    parquet file; each bucket write stage runs at most one task per
+    core; and batch 1's bucket read and band-state read, which both
+    have batch 0's versions to read, launch no schema-inference job.
+    Jobs are attributed through job groups set from ``on_batch`` and
+    around each wrapped helper call."""
+    from recsys_mapreduce_mrjob_spark.streaming import twins
+
+    sc = spark.sparkContext
+    src, state = str(tmp_path / "docs"), str(tmp_path / "state")
+    twins.write_doc_chunks(spark, smoke_dir, src, n_chunks=2)
+    tag = f"pv-shape-{tmp_path.name}"
+    current: dict[str, str] = {}
+
+    def on_batch(batch_id: int) -> None:
+        current["fold"] = f"{tag}-fold-{batch_id}"
+        sc.setJobGroup(current["fold"], current["fold"])
+
+    def grouped(name: str, fn, group_of):
+        def call(*args):
+            sc.setJobGroup(group_of(*args), name)
+            try:
+                return fn(*args)
+            finally:
+                sc.setJobGroup(current["fold"], current["fold"])
+
+        monkeypatch.setattr(twins, name, call)
+
+    grouped(
+        "_read_buckets",
+        twins._read_buckets,
+        lambda s, state_dir, batch_id, *rest: f"{tag}-read-{batch_id}",
+    )
+    grouped(
+        "band_state_reader",
+        twins.band_state_reader,
+        lambda s, bands_new, bands_dir, batch_id: f"{tag}-bands-{batch_id}",
+    )
+    grouped(
+        "_write_buckets",
+        twins._write_buckets,
+        lambda state, state_dir, batch_id, *rest: (
+            f"{tag}-write-{os.path.basename(state_dir)}-{batch_id}"
+        ),
+    )
+    getattr(twins, twin)(spark, src, state, on_batch=on_batch)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+
+    tracker = sc.statusTracker()
+    for sub in bucketed:
+        _assert_one_file_per_bucket(f"{state}/{sub}")
+        assert _versions(f"{state}/{sub}") == [0, 1], sub
+        for batch_id in (0, 1):
+            jobs = tracker.getJobIdsForGroup(f"{tag}-write-{sub}-{batch_id}")
+            assert jobs, f"no {sub} write attributed to batch {batch_id}"
+            # The write's result stage is the last stage of its last job.
+            write_stage = max(tracker.getJobInfo(max(jobs)).stageIds)
+            n_tasks = tracker.getStageInfo(write_stage).numTasks
+            assert n_tasks <= sc.defaultParallelism, (sub, batch_id, n_tasks)
+    assert list(tracker.getJobIdsForGroup(f"{tag}-read-1")) == []
+    assert list(tracker.getJobIdsForGroup(f"{tag}-bands-1")) == []

@@ -676,11 +676,29 @@ def _doc_feed(spark, sf_dir):
     )
 
 
+def _event_feed(spark, sf_dir):
+    return load_events(spark, sf_dir).select(
+        "event_id", "ts", "user_id", "event_type", "value", "props"
+    )
+
+
+def _write_chunks(src, chunks):
+    """Each chunk as one file, stamped so they drain in list order."""
+    from recsys_mapreduce_mrjob_spark.streaming import twins
+
+    seen: set = set()
+    for k, chunk in enumerate(chunks):
+        chunk.coalesce(1).write.mode("append").parquet(src)
+        twins._stamp_new_chunk_files(src, seen, 1_700_000_000 + k)
+    assert len(seen) == len(chunks), "every chunk must be one file"
+
+
 @pytest.mark.parametrize(
     "twin,feed,key",
     [
         ("incremental_doc_dedup", _doc_feed, "doc_id"),
         ("incremental_item_stats", lambda s, d: derive_ratings(s, d), "item_id"),
+        ("incremental_scd2", _event_feed, "user_id"),
     ],
 )
 def test_empty_micro_batch_is_a_no_op(spark, smoke_dir, tmp_path, twin, feed, key):
@@ -693,15 +711,8 @@ def test_empty_micro_batch_is_a_no_op(spark, smoke_dir, tmp_path, twin, feed, ke
     rows = feed(spark, smoke_dir)
     halves = [rows.where(F.col(key) % 2 == k) for k in (0, 1)]
 
-    def write_chunks(src, chunks):
-        seen: set = set()
-        for k, chunk in enumerate(chunks):
-            chunk.coalesce(1).write.mode("append").parquet(src)
-            twins._stamp_new_chunk_files(src, seen, 1_700_000_000 + k)
-        assert len(seen) == len(chunks), "every chunk must be one file"
-
     src3, st3 = str(tmp_path / "src3"), str(tmp_path / "state3")
-    write_chunks(src3, [halves[0], rows.limit(0), halves[1]])
+    _write_chunks(src3, [halves[0], rows.limit(0), halves[1]])
     seen: list[int] = []
     getattr(twins, twin)(spark, src3, st3, on_batch=seen.append)
     assert seen == [0, 1, 2]
@@ -709,11 +720,54 @@ def test_empty_micro_batch_is_a_no_op(spark, smoke_dir, tmp_path, twin, feed, ke
     assert not os.path.exists(f"{st3}/v1"), "empty batch wrote a version"
 
     src2, st2 = str(tmp_path / "src2"), str(tmp_path / "state2")
-    write_chunks(src2, halves)
+    _write_chunks(src2, halves)
     getattr(twins, twin)(spark, src2, st2)
     assert _multiset(twins.read_bucketed_state(spark, st3)) == _multiset(
         twins.read_bucketed_state(spark, st2)
     )
+
+
+@pytest.mark.parametrize(
+    "twin,subdirs",
+    [
+        ("incremental_neardup", ("docs", "bands")),
+        ("incremental_curation", ("bands", "pairs", "shsets", "kept")),
+    ],
+)
+def test_empty_micro_batch_writes_no_near_dup_state(
+    spark, smoke_dir, tmp_path, twin, subdirs
+):
+    """The empty-batch rule for the two probe-and-verify twins: a
+    zero-row chunk between two non-empty ones writes no ``v1`` under any
+    of their state subdirs, and the end state equals the drain without
+    that chunk."""
+    from recsys_mapreduce_mrjob_spark.streaming import twins
+
+    def end_state(state_dir: str) -> Counter:
+        if twin == "incremental_neardup":
+            docs = twins.read_bucketed_state(spark, f"{state_dir}/docs")
+            return _multiset(docs.drop("sh_set"))
+        return _multiset(twins.read_curated_state(spark, state_dir))
+
+    rows = _doc_feed(spark, smoke_dir)
+    halves = [rows.where(F.col("doc_id") % 2 == k) for k in (0, 1)]
+
+    src3, st3 = str(tmp_path / "src3"), str(tmp_path / "state3")
+    _write_chunks(src3, [halves[0], rows.limit(0), halves[1]])
+    seen: list[int] = []
+    getattr(twins, twin)(spark, src3, st3, on_batch=seen.append)
+    assert seen == [0, 1, 2]
+    for sub in subdirs:
+        assert os.path.isdir(f"{st3}/{sub}/v0") and os.path.isdir(
+            f"{st3}/{sub}/v2"
+        ), sub
+        assert not os.path.exists(f"{st3}/{sub}/v1"), f"empty batch wrote {sub}/v1"
+
+    src2, st2 = str(tmp_path / "src2"), str(tmp_path / "state2")
+    _write_chunks(src2, halves)
+    getattr(twins, twin)(spark, src2, st2)
+    assert end_state(st3) == end_state(st2)
+    assert sum(end_state(st2).values()) > 0
 
 
 def test_semantic_dedup_tolerates_zero_and_null_embeddings(spark, smoke_dir, tmp_path):
