@@ -328,6 +328,106 @@ def _claim_bucket_layout(state_dir: str, key: str, n_buckets: int) -> None:
         )
 
 
+def _committed(state_dir: str, ids) -> list[int]:
+    """The ``ids`` (ascending) that ``{state_dir}/_checkpoint/commits``
+    lists — the checkpoint :func:`_drain` pins.  With no readable
+    commits log, every id but the newest: ``foreachBatch`` runs batches
+    in order, so at most the newest can be written but uncommitted.
+
+    A compaction merges only these.  Structured Streaming replays an
+    uncommitted id on resume, and the upsert's overwrite of that id's
+    output is its idempotence mechanism, so merged rows must never live
+    under a replayable id."""
+    import os
+
+    ids = sorted(ids)
+    try:
+        names = os.listdir(os.path.join(state_dir, "_checkpoint", "commits"))
+    except OSError:
+        return ids[:-1]
+    done = {int(f) for f in names if f.isdigit()}
+    return [i for i in ids if i in done]
+
+
+# Written into a compaction's staging tree LAST, after every file of it:
+# a staging tree holding it is whole and may be published.
+_COMPACT_PUBLISH_READY = "_COMPACT_PUBLISH_READY"
+
+
+def _swap_compact(target: str, write) -> bool:
+    """The one crash-safe compaction protocol: replace the tree
+    ``target`` with the one ``write(staging)`` builds, where a crash at
+    any point leaves a readable ``target`` or one the next call
+    restores.  Run it in a maintenance window (ingest stopped): the swap
+    momentarily renames ``target`` away, which a concurrent upsert must
+    not race.
+
+      1. Recovery.  With ``target`` missing, a prior call died between
+         the two renames of step 3: roll FORWARD to a
+         ``{target}.compact_staging`` that holds
+         ``_COMPACT_PUBLISH_READY`` (Spark's ``_SUCCESS`` is not enough
+         once a writer adds files after its Spark write), otherwise BACK
+         to ``{target}.displaced``.  Then any leftover staging or
+         displaced tree is dropped: a retried compaction never trusts a
+         partial artifact, it recomputes.
+      2. ``write(staging)`` builds the new tree, or returns False when
+         there is nothing to merge (then nothing else happens).
+      3. The marker is written, ``target → displaced`` and
+         ``staging → target`` are renamed (each atomic; the only window
+         without ``target`` is between them, which step 1 repairs), the
+         marker is removed from the published tree and the displaced
+         tree deleted.
+
+    At production scale this is a lakehouse table-maintenance job
+    (OPTIMIZE / rewrite_data_files).  Returns whether it published."""
+    import os
+    import shutil
+
+    staging, displaced = f"{target}.compact_staging", f"{target}.displaced"
+    if not os.path.exists(target):
+        if os.path.exists(os.path.join(staging, _COMPACT_PUBLISH_READY)):
+            os.rename(staging, target)
+            os.remove(os.path.join(target, _COMPACT_PUBLISH_READY))
+        elif os.path.exists(displaced):
+            os.rename(displaced, target)
+    shutil.rmtree(staging, ignore_errors=True)
+    shutil.rmtree(displaced, ignore_errors=True)
+    if not write(staging):
+        return False
+    with open(os.path.join(staging, _COMPACT_PUBLISH_READY), "w"):
+        pass
+    if os.path.exists(target):
+        os.rename(target, displaced)
+    os.rename(staging, target)
+    os.remove(os.path.join(target, _COMPACT_PUBLISH_READY))
+    shutil.rmtree(displaced, ignore_errors=True)
+    return True
+
+
+def _read_log(spark: SparkSession, schema: str | T.StructType, paths) -> DataFrame:
+    """The one read of an append-only log's ``v{id}`` versions (bands,
+    pairs, vectors) and compacted leaves: by the ``schema`` its writer
+    fixed (DDL string or ``StructType``), so no job runs to infer it.
+    With no paths the same read scans nothing: an empty frame planned on
+    the JVM alone."""
+    return spark.read.schema(schema).parquet(*paths)
+
+
+def _bucket_leaves(tree: str, buckets=None) -> list[str]:
+    """The ``bkt=`` dirs of a compacted bucketed tree, ascending by
+    bucket, only those in ``buckets`` when given.  Read as leaves, so the
+    tree's ``bkt`` partitioning never meets the plain versions in one
+    read."""
+    import os
+
+    found = sorted(int(d[4:]) for d in os.listdir(tree) if d.startswith("bkt="))
+    return [
+        os.path.join(tree, f"bkt={b}")
+        for b in found
+        if buckets is None or b in buckets
+    ]
+
+
 def bucket_latest_paths(
     state_dir: str,
     below: int | None = None,
@@ -1330,9 +1430,7 @@ def incremental_ivf_index(
     return index_path
 
 
-def compact_ivf_index(
-    spark: SparkSession, index_path: str, checkpoint_dir: str | None = None
-) -> str:
+def compact_ivf_index(spark: SparkSession, index_path: str) -> str:
     """Compact the incrementally-maintained IVF index: merge the
     COMMITTED ``batch={id}/cid={k}`` subtrees into ONE consolidated
     subtree ``batch=-1/cid={k}``, one file per cell (VERDICT r8 "what's
@@ -1350,119 +1448,60 @@ def compact_ivf_index(
       a root-level ``cid=`` layout poisons the table for the next
       micro-batch (CONFLICTING_PARTITION_COLUMN_NAMES;
       ``test_ingest_resumes_after_compaction``).
-    - **Only COMMITTED batches merge, into the RESERVED id −1.**  A
-      foreachBatch subtree can exist on disk for a batch whose
-      checkpoint commit never landed (crash between the write and the
-      commit); Structured Streaming REPLAYS that id on resume and the
-      upsert's ``mode("overwrite")`` of ``batch={id}`` is the very
-      idempotence mechanism — so consolidated data must never live
-      under a replayable id (code-review r9: collapsing into the max
-      DATA id would let the replay erase the whole index).  Committed
-      ids never replay, −1 is outside foreachBatch's id space entirely,
-      and uncommitted subtrees are carried into the new tree VERBATIM
-      for the replay to overwrite.  Committed = the integer entries of
-      ``{checkpoint_dir}/commits`` (default: the ``_checkpoint`` sibling
-      ``incremental_ivf_index`` pins); with no readable commits log the
-      newest data id is conservatively treated as uncommitted.
+    - **Only COMMITTED batches merge, into the RESERVED id −1**
+      (:func:`_committed`, reading the ``_checkpoint`` sibling
+      ``incremental_ivf_index`` pins; collapsing into the max DATA id
+      would let a replay erase the whole index).  A prior
+      ``batch=-1`` always re-merges, and possibly-uncommitted subtrees
+      are carried into the new tree VERBATIM for the resume replay to
+      overwrite in place.
 
-    Run compaction in a maintenance window (stream stopped): the swap
-    below momentarily renames the table away, which a concurrent upsert
-    must not race.
-
-    Crash-safe write-then-atomic-swap, the versioned-state discipline:
-
-      1. recovery preamble — if ``index_path`` is MISSING, a prior
-         compaction died mid-swap: roll FORWARD (staging carries the
-         ``_COMPACT_PUBLISH_READY`` marker, written LAST — Spark's own
-         ``_SUCCESS`` is not enough once staging also receives verbatim
-         copies after the write) or BACK (the displaced old tree is
-         still whole) — both restore a readable index first;
-      2. any stale staging/displaced tree is deleted and the staging
-         tree rebuilt from scratch (idempotence by recomputation: a
-         retried compaction never trusts a partial artifact);
-      3. swap: ``index → index.displaced``, ``staging → index`` (each
-         rename atomic; the only unreadable window is between them,
-         which step 1 repairs), then drop the displaced tree.
-
-    At production scale this is the lakehouse table-maintenance job
-    (OPTIMIZE / rewrite_data_files) gated on the commit log; the file
-    protocol here is the same idea on bare parquet directories.
+    The staged write and the swap are :func:`_swap_compact`; with no
+    index and nothing to recover it raises ``FileNotFoundError``.
     Returns ``index_path``."""
     import os
     import shutil
 
-    staging = f"{index_path}.compact_staging"
-    displaced = f"{index_path}.displaced"
-    marker = "_COMPACT_PUBLISH_READY"
-    if not os.path.exists(index_path):
-        if os.path.exists(os.path.join(staging, marker)):
-            os.rename(staging, index_path)  # roll forward
-            os.remove(os.path.join(index_path, marker))
-        elif os.path.exists(displaced):
-            os.rename(displaced, index_path)  # roll back
-        else:
+    def write(staging: str) -> bool:
+        if not os.path.exists(index_path):
             raise FileNotFoundError(
                 f"compact_ivf_index: no index at {index_path!r} and no "
                 "recoverable staging/displaced tree"
             )
-    shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(displaced, ignore_errors=True)
-
-    on_disk = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(index_path)
-        if d.startswith("batch=") and d.split("=", 1)[1].lstrip("-").isdigit()
-    )
-    if checkpoint_dir is None:
-        checkpoint_dir = os.path.join(os.path.dirname(index_path), "_checkpoint")
-    committed: set[int] | None = None
-    commits_dir = os.path.join(checkpoint_dir, "commits")
-    if os.path.isdir(commits_dir):
-        committed = {
-            int(f) for f in os.listdir(commits_dir) if f.lstrip("-").isdigit()
-        }
-    nonneg = [b for b in on_disk if b >= 0]
-    if committed is not None:
-        mergeable = [b for b in nonneg if b in committed]
-    else:
-        # No commits log: at most ONE written-but-uncommitted subtree can
-        # exist (foreachBatch is sequential) and it is the newest — leave
-        # it out conservatively.
-        mergeable = nonneg[:-1]
-    if -1 in on_disk:  # prior compaction output: always re-mergeable
-        mergeable = [-1] + mergeable
-    untouched = [b for b in on_disk if b not in set(mergeable)]
-    if not mergeable:
-        return index_path  # nothing safely mergeable — no-op
-
-    index = spark.read.parquet(index_path)
-    data_cols = [c for c in index.columns if c not in ("batch", "cid")]
-    # repartition on cid → each cell's rows land in one task, so the
-    # partitionBy write emits ONE consolidated file per cid directory
-    # (all under the reserved batch=-1 subtree).
-    (
-        index.where(F.col("batch").isin(mergeable))
-        .select(*data_cols, F.lit(-1).alias("batch"), "cid")
-        .repartition(F.col("cid"))
-        .write.mode("overwrite")
-        .partitionBy("batch", "cid")
-        .parquet(staging)
-    )
-    # Possibly-uncommitted subtrees ride along VERBATIM — the resume
-    # replay overwrites them in place inside the new tree.
-    for b in untouched:
-        shutil.copytree(
-            os.path.join(index_path, f"batch={b}"),
-            os.path.join(staging, f"batch={b}"),
+        on_disk = sorted(
+            int(d.split("=", 1)[1])
+            for d in os.listdir(index_path)
+            if d.startswith("batch=") and d.split("=", 1)[1].lstrip("-").isdigit()
         )
-    with open(os.path.join(staging, marker), "w") as fh:
-        fh.write("")
-    os.rename(index_path, displaced)
-    os.rename(staging, index_path)
-    # Same hygiene as compact_neardup_bands (ADVICE r11): the publish
-    # marker is staging recovery metadata, not published state.
-    os.remove(os.path.join(index_path, marker))
-    shutil.rmtree(displaced, ignore_errors=True)
+        mergeable = _committed(
+            os.path.dirname(index_path), [b for b in on_disk if b >= 0]
+        )
+        if -1 in on_disk:  # prior compaction output: always re-mergeable
+            mergeable = [-1] + mergeable
+        if not mergeable:
+            return False
+        index = spark.read.parquet(index_path)
+        data_cols = [c for c in index.columns if c not in ("batch", "cid")]
+        # repartition on cid → each cell's rows land in one task, so the
+        # partitionBy write emits ONE consolidated file per cid directory
+        # (all under the reserved batch=-1 subtree).
+        (
+            index.where(F.col("batch").isin(mergeable))
+            .select(*data_cols, F.lit(-1).alias("batch"), "cid")
+            .repartition(F.col("cid"))
+            .write.mode("overwrite")
+            .partitionBy("batch", "cid")
+            .parquet(staging)
+        )
+        for b in on_disk:
+            if b not in mergeable:
+                shutil.copytree(
+                    os.path.join(index_path, f"batch={b}"),
+                    os.path.join(staging, f"batch={b}"),
+                )
+        return True
+
+    _swap_compact(index_path, write)
     return index_path
 
 
@@ -1635,14 +1674,17 @@ def incremental_scd2(
     )
 
 
-# The one schema of the append-only band state (plain ``v{n}`` files and
-# the compacted ``v-1`` buckets alike), so no read of it infers one.
+# The schemas of the append-only logs (plain ``v{n}`` files and the
+# compacted ``v-1`` alike), so no read of them infers one: the band
+# state, curation's pair log and the semantic fold's pair log.
 _BAND_SCHEMA = "doc_id long, band int, bsig string"
+_DOC_PAIRS = "doc_a long, doc_b long"
+_VEC_PAIRS = "vec_a long, vec_b long"
 
 
 def band_state_reader(
     s: SparkSession,
-    bands_new: DataFrame,
+    buckets,
     bands_dir: str,
     batch_id: int | None = None,
 ) -> DataFrame:
@@ -1653,48 +1695,30 @@ def band_state_reader(
     ``band_probe_candidates`` factoring exists to prevent): append-only
     ``v{n}`` versions (strictly below ``batch_id`` when given — the
     replay guard) together with, when :func:`compact_neardup_bands` has
-    run, ONLY the bsig-bucketed compacted subtrees ``bands_new``'s
-    signatures hash into (the compaction's whole point).  Read by the
-    band schema, so no job runs to infer it; with no state yet the same
-    read scans zero paths."""
-    import os
-
+    run, ONLY the compacted ``bkt=`` subtrees among ``buckets`` — the
+    ones the batch's signatures hash into (the compaction's whole
+    point; :func:`_probe_and_verify` observes them while it materializes
+    the batch's band rows).  Read by the band schema
+    (:func:`_read_log`), so no job runs."""
     paths, compacted = band_state_paths(bands_dir, batch_id)
     if compacted is not None:
-        comp_b = _compacted_band_buckets(compacted)
-        touched = {
-            r["b"]
-            for r in bands_new.select(
-                _bucket_expr(F.col("bsig"), comp_b).alias("b")
-            )
-            .distinct()
-            .collect()
-        }
-        # Each bucket dir is read as a leaf, so the compacted tree's
-        # ``bkt=`` partitioning never meets the plain versions.
-        paths += [
-            p
-            for b in sorted(touched)
-            if os.path.isdir(p := os.path.join(compacted, f"bkt={b}"))
-        ]
-    return s.read.schema(_BAND_SCHEMA).parquet(*paths)
+        paths += _bucket_leaves(compacted, buckets)
+    return _read_log(s, _BAND_SCHEMA, paths)
 
 
-def band_probe_candidates(
-    s: SparkSession, bands_new: DataFrame, bands_dir: str, batch_id: int
-) -> DataFrame:
+def band_probe_candidates(bands_new: DataFrame, bands_old: DataFrame) -> DataFrame:
     """Near-dup candidate pairs for one micro-batch's band rows — the
     probe both the near-dup ingestion fold and the curation ingestion
     fold run (through :func:`_probe_and_verify`, so the two consumers
     can never drift on discovery semantics): the batch's (band, bsig)
-    rows equi-join the accumulated band state (:func:`band_state_reader`)
-    UNION the new×new in-batch self-join, normalized to
-    ``doc_a < doc_b`` and deduplicated.  A pair is discovered EXACTLY
-    ONCE, in the batch where its later-arriving member lands, for any
-    chunking of the corpus.  ``bands_new`` must be persisted AND
-    materialized by the caller (the InMemoryRelation's true batch-sized
-    footprint is what lets Catalyst auto-broadcast the probe side)."""
-    bands_old = band_state_reader(s, bands_new, bands_dir, batch_id)
+    rows equi-join the accumulated band state ``bands_old``
+    (:func:`band_state_reader`) UNION the new×new in-batch self-join,
+    normalized to ``doc_a < doc_b`` and deduplicated.  A pair is
+    discovered EXACTLY ONCE, in the batch where its later-arriving
+    member lands, for any chunking of the corpus.  ``bands_new`` must be
+    persisted AND materialized by the caller (the InMemoryRelation's
+    true batch-sized footprint is what lets Catalyst auto-broadcast the
+    probe side)."""
     # Candidates: old×new on the band key (exactly-once pair
     # discovery — the old member landed in an earlier batch) plus
     # new×new within the batch; normalized to doc_a < doc_b.
@@ -1737,8 +1761,10 @@ def _probe_and_verify(
     """One micro-batch's near-pair discovery, shared by
     :func:`incremental_neardup` and :func:`incremental_curation`: the
     band rows of the batch's signatures ``sig`` are persisted and
-    materialized, then probe the band state under ``bands_dir``
-    (:func:`band_probe_candidates`).  ``new_ids`` key a
+    materialized by one ``noop`` write, which also observes the
+    compacted band buckets they hash into, then probe the band state
+    under ``bands_dir`` (:func:`band_state_reader`,
+    :func:`band_probe_candidates`).  ``new_ids`` key a
     :func:`_bucketed_fold` over the doc_id-bucketed set state at
     ``sets_dir`` (columns ``doc_id``, ``sh_set``, ``n_sh`` among
     ``sets_schema``); the candidate endpoints not among them (old docs)
@@ -1753,7 +1779,17 @@ def _probe_and_verify(
     (step contract: :func:`_bucketed_fold`)."""
     from ..operators.dedup import portable_band_rows, portable_verify_pairs
 
-    bands_new = portable_band_rows(sig).persist()
+    seen = Observation()
+    bands_new = (
+        portable_band_rows(sig)
+        .observe(
+            seen,
+            F.collect_set(
+                _bucket_expr(F.col("bsig"), _compacted_band_buckets(bands_dir))
+            ).alias("bkt"),
+        )
+        .persist()
+    )
     try:
         # Materialize the persisted band rows BEFORE building the probe
         # join: an unmaterialized persist reports the default (huge)
@@ -1764,10 +1800,11 @@ def _probe_and_verify(
         # batch-sized footprint and the probe auto-broadcasts (with the
         # built-in fallback for a giant backfill batch that genuinely
         # shouldn't broadcast — no manual size dispatch needed).
-        bands_new.count()
-        cand = band_probe_candidates(
-            sig.sparkSession, bands_new, bands_dir, batch_id
-        ).persist()
+        bands_new.write.format("noop").mode("overwrite").save()
+        bands_old = band_state_reader(
+            sig.sparkSession, set(seen.get["bkt"]), bands_dir, batch_id
+        )
+        cand = band_probe_candidates(bands_new, bands_old).persist()
         try:
             # Old docs the verification touches: candidate endpoints not
             # in this batch.
@@ -1980,136 +2017,77 @@ def band_state_paths(
     return plain, compacted
 
 
-def _compacted_band_buckets(compacted_dir: str) -> int:
-    """The bucket count a compacted band tree was written with — read
-    from its ``_bucket_layout`` marker (every probe must hash with the
-    WRITER's count or pruning reads the wrong buckets)."""
+def _compacted_band_buckets(bands_dir: str) -> int:
+    """The bucket count the compacted band tree ``{bands_dir}/v-1`` was
+    written with, from its ``_bucket_layout`` marker (every probe must
+    hash with the WRITER's count or pruning reads the wrong buckets);
+    1 when there is no compacted tree."""
     import json
     import os
 
-    with open(os.path.join(compacted_dir, "_bucket_layout")) as fh:
-        return int(json.load(fh)["n_buckets"])
+    try:
+        with open(os.path.join(bands_dir, "v-1", "_bucket_layout")) as fh:
+            return int(json.load(fh)["n_buckets"])
+    except FileNotFoundError:
+        return 1
 
 
 def compact_neardup_bands(
-    spark: SparkSession,
-    state_dir: str,
-    checkpoint_dir: str | None = None,
-    n_buckets: int = 256,
-) -> str:
+    spark: SparkSession, state_dir: str, n_buckets: int = 256
+) -> str | None:
     """Compact the near-dup fold's append-only band state: merge the
-    COMMITTED ``v{id}`` append files into the reserved ``v-1``,
-    partitioned by ``bkt = pmod(xxhash64(bsig), n_buckets)`` with one
-    file per bucket — the 100 TB pruning path
-    :func:`incremental_neardup`'s docstring promises: after compaction a
-    probe reads only the buckets its ~8·batch signatures hash into
-    (O(batch·bucket_size)) plus the small uncompacted tail, instead of
-    scanning the whole band history.  The ``compact_ivf_index``
-    discipline throughout:
-
-    - **Only COMMITTED versions merge into the RESERVED id −1.**  A
-      ``v{id}`` can be complete-but-uncommitted (crash between the
-      write and the checkpoint commit); Structured Streaming replays
-      that id and the upsert's overwrite of ``v{id}`` is the idempotence
-      mechanism — consolidated rows must never live under a replayable
-      id.  Committed = the integer entries of ``{checkpoint}/commits``;
-      with no readable log the newest version is conservatively left
-      out.  A prior ``v-1`` always re-merges.
-    - **Crash-safe write-then-atomic-swap** with a roll-forward marker
-      (recovery preamble below), then the merged plain versions are
-      deleted.  A crash BETWEEN the ``v-1`` publish and the deletions
-      leaves duplicate band rows (``v-1`` ∪ merged ``v{id}``) — benign:
-      the probe's candidate set is ``distinct`` and the next compaction
-      re-merges with ``.distinct()``, healing the state.
-    - **Maintenance window**: run with the ingest stopped, like every
-      table-maintenance job (OPTIMIZE / rewrite_data_files on a
-      lakehouse).
+    COMMITTED ``v{id}`` append files (:func:`_committed`) and any prior
+    ``v-1`` into the reserved ``v-1``, partitioned by ``bkt =
+    pmod(xxhash64(bsig), n_buckets)`` with one file per bucket — the
+    100 TB pruning path :func:`incremental_neardup`'s docstring
+    promises: after compaction a probe reads only the buckets its
+    ~8·batch signatures hash into (O(batch·bucket_size)) plus the small
+    uncompacted tail, instead of scanning the whole band history.  The
+    staged write and the swap are :func:`_swap_compact`; the merged
+    versions are deleted after it publishes.  A crash between the
+    publish and those deletions leaves their rows in both ``v-1`` and
+    ``v{id}`` — benign: the probe's candidate set is ``distinct`` and
+    the next compaction re-merges with ``.distinct()``.
 
     Choose ``n_buckets`` so a bucket holds ~0.5–2k rows at the current
     corpus (the bucketed-state sizing rule, BASELINE.md "Round-10 rework
     rungs"); the count is recorded
     in ``v-1/_bucket_layout`` and probes read it from there, so
     RE-compacting with a different count is always safe.  Returns the
-    compacted dir path."""
-    import json
+    compacted dir path, or None when no ``v-1`` exists."""
     import os
     import shutil
 
     bands_dir = f"{state_dir}/bands"
     target = os.path.join(bands_dir, "v-1")
-    staging = f"{target}.compact_staging"
-    marker = "_COMPACT_PUBLISH_READY"
-    # Recovery preamble: a prior compaction that died mid-swap left
-    # either a publish-ready staging (roll FORWARD) or a displaced old
-    # tree (roll BACK — v-1 is only ever REPLACED, never absent unless a
-    # swap was interrupted).
-    displaced = f"{target}.displaced"
-    if not os.path.exists(target):
-        if os.path.exists(os.path.join(staging, marker)):
-            os.rename(staging, target)
-            # The marker is staging-tree recovery metadata; published
-            # state carries only _SUCCESS + _bucket_layout (ADVICE r11).
-            os.remove(os.path.join(target, marker))
-        elif os.path.exists(displaced):
-            os.rename(displaced, target)
-    shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(displaced, ignore_errors=True)
+    versions = dict(_complete_versions(bands_dir))
+    sources = [
+        versions[v] for v in _committed(state_dir, [v for v in versions if v >= 0])
+    ]
 
-    plain, compacted = band_state_paths(bands_dir)
-    if checkpoint_dir is None:
-        checkpoint_dir = f"{state_dir}/_checkpoint"
-    committed: set[int] | None = None
-    commits_dir = os.path.join(checkpoint_dir, "commits")
-    if os.path.isdir(commits_dir):
-        committed = {
-            int(f) for f in os.listdir(commits_dir) if f.lstrip("-").isdigit()
-        }
-    ids = sorted(int(os.path.basename(p)[1:]) for p in plain)
-    if committed is not None:
-        mergeable = [v for v in ids if v in committed]
-    else:
-        mergeable = ids[:-1]  # newest may be uncommitted: leave it out
-    if not mergeable and compacted is None:
-        return target  # nothing to do
-    sources = [os.path.join(bands_dir, f"v{v}") for v in mergeable]
-    readers = []
-    if sources:
-        readers.append(spark.read.parquet(*sources))
-    if compacted is not None:
-        readers.append(
-            spark.read.parquet(compacted).select("doc_id", "band", "bsig")
+    def write(staging: str) -> bool:
+        compacted = _bucket_leaves(target) if os.path.isdir(target) else []
+        if not sources and not compacted:
+            return False
+        # .distinct(): heals the duplicate rows a crash between publish
+        # and deletion can leave (docstring).
+        (
+            _read_log(spark, _BAND_SCHEMA, sources + compacted)
+            .distinct()
+            .withColumn("bkt", _bucket_expr(F.col("bsig"), n_buckets))
+            .repartition(F.col("bkt"))
+            .sortWithinPartitions("bsig")
+            .write.mode("overwrite")
+            .partitionBy("bkt")
+            .parquet(staging)
         )
-    merged = readers[0]
-    for r in readers[1:]:
-        merged = merged.unionByName(r)
-    # .distinct(): heals the duplicate-rows window a crash between
-    # publish and deletion can leave (docstring).
-    (
-        merged.distinct()
-        .withColumn("bkt", _bucket_expr(F.col("bsig"), n_buckets))
-        .repartition(F.col("bkt"))
-        .sortWithinPartitions("bsig")
-        .write.mode("overwrite")
-        .partitionBy("bkt")
-        .parquet(staging)
-    )
-    with open(os.path.join(staging, "_bucket_layout"), "w") as fh:
-        json.dump({"key": "bsig", "n_buckets": n_buckets}, fh)
-    with open(os.path.join(staging, marker), "w") as fh:
-        fh.write("")
-    if os.path.exists(target):
-        os.rename(target, displaced)
-    os.rename(staging, target)
-    # Drop the roll-forward marker from the published tree: it exists to
-    # mark a COMPLETE staging dir for crash recovery, and leaving it
-    # inside the live v-1 plants stale recovery metadata in published
-    # state (ADVICE r11).  Spark reads ignore underscore files, so this
-    # is hygiene, not correctness.
-    os.remove(os.path.join(target, marker))
-    shutil.rmtree(displaced, ignore_errors=True)
-    for p in sources:
-        shutil.rmtree(p, ignore_errors=True)
-    return target
+        _claim_bucket_layout(staging, "bsig", n_buckets)
+        return True
+
+    if _swap_compact(target, write):
+        for p in sources:
+            shutil.rmtree(p, ignore_errors=True)
+    return target if os.path.isdir(target) else None
 
 
 def incremental_curation(
@@ -2143,7 +2121,8 @@ def incremental_curation(
       :func:`band_probe_candidates`), so each batch appends one
       pair-sized file (:func:`compact_pair_log` is the file-count
       maintenance path — the log is never probed during ingest, so
-      compaction here is listing hygiene, not probe pruning).  The
+      compaction here is listing hygiene, not probe pruning).  Both
+      logs compact by the one protocol, :func:`_swap_compact`.  The
       pair relation is ≪ corpus-sized (BASELINE
       sf0.1: ~250 pairs off 60k docs), which is what makes keeping the
       EDGES — not per-doc drop flags — the right state for component
@@ -2304,8 +2283,7 @@ def read_curated_state(spark: SparkSession, state_dir: str) -> DataFrame | None:
     versions = [p for _, p in _complete_versions(f"{state_dir}/pairs")]
     if not versions:
         return surv
-    pairs = spark.read.parquet(*versions)
-    labels = pair_component_labels(pairs)
+    labels = pair_component_labels(_read_log(spark, _DOC_PAIRS, versions))
     lab_surv = labels.join(
         surv.select("doc_id"), labels["id"] == F.col("doc_id")
     ).select("id", "label")
@@ -2409,7 +2387,8 @@ def incremental_semantic_dedup(
     - ``pairs/``: verified cos ≥ 0.45 pairs (vec_a < vec_b), discovered
       EXACTLY ONCE each — old×new in the batch where the later vector
       lands (the probe), new×new in its own batch (the diagonal tile);
-      :func:`compact_pair_log` bounds the per-batch file accumulation.
+      :func:`compact_pair_log` bounds the per-batch file accumulation,
+      by the one compaction protocol (:func:`_swap_compact`).
 
     The probe is the batch GEMM discipline applied rectangularly: state
     vectors hash into ``n_blocks`` blocks, the (small) batch replicates
@@ -2550,7 +2529,7 @@ def incremental_semantic_dedup(
                 .groupBy("g")
                 .applyInArrow(
                     _semantic_pair_kernel("diag"),
-                    schema="vec_a long, vec_b long",
+                    schema=_VEC_PAIRS,
                 )
             )
             batch_cells = _cell_angle_cols(batch, cents)
@@ -2590,8 +2569,7 @@ def incremental_semantic_dedup(
                     )
                     screen = screen | c
                 vstate = (
-                    s.read.schema(batch_cells.schema)
-                    .parquet(*versions)
+                    _read_log(s, batch_cells.schema, versions)
                     .where(screen)
                     .select(
                         "vec_id",
@@ -2615,7 +2593,7 @@ def incremental_semantic_dedup(
                     .groupBy("blk")
                     .applyInArrow(
                         _semantic_pair_kernel("cross"),
-                        schema="vec_a long, vec_b long",
+                        schema=_VEC_PAIRS,
                     )
                 )
                 found = cross.unionByName(diag)
@@ -2654,8 +2632,9 @@ def read_semantic_state(spark: SparkSession, state_dir: str) -> DataFrame | None
     versions = [p for _, p in _complete_versions(f"{state_dir}/pairs")]
     if not versions:
         return None
-    pairs = spark.read.parquet(*versions)
-    labels = pair_component_labels(pairs, a="vec_a", b="vec_b")
+    labels = pair_component_labels(
+        _read_log(spark, _VEC_PAIRS, versions), a="vec_a", b="vec_b"
+    )
     keepers = labels.groupBy("label").agg(
         F.min("id").alias("keeper_vec_id"),
         F.count(F.lit(1)).cast("long").alias("cluster_size"),
@@ -2669,60 +2648,45 @@ def read_semantic_state(spark: SparkSession, state_dir: str) -> DataFrame | None
 
 def compact_pair_log(spark: SparkSession, pairs_dir: str) -> str | None:
     """Compact an append-only pair log (the ``pairs/`` state of the
-    curation and semantic ingestion folds) — merge the committed
-    per-batch ``v{n}`` versions plus any existing compacted ``v-1``
-    into ONE ``v-1`` file and delete the merged versions.  The log is
-    only READ at end-state time (never probed during ingest), so the
-    maintenance concern is file count, not probe pruning: a
-    long-running ingest accumulates one tiny file per batch, and this
-    rare amortized rewrite keeps the listing bounded — the same
-    lifecycle discipline as ``compact_neardup_bands``, minus the
-    bucketing (the whole log is pairs-sized).
-
-    Crash-safety (write-then-swap): the merge lands in a staging dir,
-    the live ``v-1`` is displaced, staging renamed in, then displaced +
-    merged sources are deleted.  A crash between the two renames leaves
-    no ``v-1`` but every source intact — the entry-point recovery
-    restores the displaced dir and re-runs.  Only versions carrying
-    ``_SUCCESS`` merge; a compacted-then-replayed batch (checkpoint
-    commit raced the compaction) rewrites its ``v{n}`` and briefly
-    duplicates its pairs across ``v-1`` and ``v{n}`` — harmless to
-    every consumer (duplicate EDGES change neither component labels
-    nor keeper election, and ``pair_component_labels`` deduplicates
-    endpoints) and healed by the ``.distinct()`` in the next merge.
-    Returns the compacted path, or None when there is nothing to do."""
+    curation and semantic ingestion folds) — merge the COMMITTED
+    per-batch ``v{n}`` versions (:func:`_committed`) and any prior
+    ``v-1`` into ONE ``v-1`` file and delete the merged versions after
+    the swap publishes (:func:`_swap_compact`).  An uncommitted version
+    stays verbatim for its replay to overwrite.  The log is only READ at
+    end-state time (never probed during ingest), so the maintenance
+    concern is file count, not probe pruning: a long-running ingest
+    accumulates one tiny file per batch, and this rare amortized rewrite
+    keeps the listing bounded — the same lifecycle as
+    :func:`compact_neardup_bands`, minus the bucketing (the whole log is
+    pairs-sized).  A crash between the publish and the deletions leaves
+    duplicate EDGES, which change neither component labels nor keeper
+    election and which the next merge's ``.distinct()`` drops.  The
+    semantic fold's state holds ``vecs/`` beside its log, which picks
+    the log's schema.  Returns the compacted path, or None when no
+    ``v-1`` exists."""
     import os
     import shutil
 
-    if not os.path.isdir(pairs_dir):
-        return None
-    staging = os.path.join(pairs_dir, "_compact_staging")
-    displaced = os.path.join(pairs_dir, "_compact_displaced")
+    state_dir = os.path.dirname(pairs_dir)
     target = os.path.join(pairs_dir, "v-1")
-    # Entry recovery: a crash between the two renames left the old
-    # compacted tree displaced and no live v-1 — restore it (sources
-    # were not yet deleted, so no pair is lost either way); any staging
-    # tree is a failed attempt, rebuilt below.
-    if os.path.isdir(displaced) and not os.path.isdir(target):
-        os.rename(displaced, target)
-    shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(displaced, ignore_errors=True)
-    sources = [p for v, p in _complete_versions(pairs_dir) if v >= 0]
-    has_target = os.path.isdir(target)
-    if not sources:
-        return target if has_target else None
-    readers = sources + ([target] if has_target else [])
-    (
-        spark.read.parquet(*readers)
-        .distinct()
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(staging)
+    versions = dict(_complete_versions(pairs_dir))
+    sources = [
+        versions[v] for v in _committed(state_dir, [v for v in versions if v >= 0])
+    ]
+    schema = (
+        _VEC_PAIRS if os.path.isdir(os.path.join(state_dir, "vecs")) else _DOC_PAIRS
     )
-    if has_target:
-        os.rename(target, displaced)
-    os.rename(staging, target)
-    shutil.rmtree(displaced, ignore_errors=True)
-    for p in sources:
-        shutil.rmtree(p, ignore_errors=True)
-    return target
+
+    def write(staging: str) -> bool:
+        if not sources:
+            return False
+        olds = [target] if os.path.isdir(target) else []
+        _read_log(spark, schema, sources + olds).distinct().coalesce(
+            1
+        ).write.mode("overwrite").parquet(staging)
+        return True
+
+    if _swap_compact(target, write):
+        for p in sources:
+            shutil.rmtree(p, ignore_errors=True)
+    return target if os.path.isdir(target) else None

@@ -519,7 +519,7 @@ def test_probe_and_verify_fold_shape(spark, smoke_dir, tmp_path, monkeypatch, tw
     grouped(
         "band_state_reader",
         twins.band_state_reader,
-        lambda s, bands_new, bands_dir, batch_id: f"{tag}-bands-{batch_id}",
+        lambda s, buckets, bands_dir, batch_id: f"{tag}-bands-{batch_id}",
     )
     grouped(
         "_write_buckets",
@@ -544,3 +544,43 @@ def test_probe_and_verify_fold_shape(spark, smoke_dir, tmp_path, monkeypatch, tw
             assert n_tasks <= sc.defaultParallelism, (sub, batch_id, n_tasks)
     assert list(tracker.getJobIdsForGroup(f"{tag}-read-1")) == []
     assert list(tracker.getJobIdsForGroup(f"{tag}-bands-1")) == []
+
+
+def test_band_read_after_compaction_runs_no_job(spark, smoke_dir, tmp_path, monkeypatch):
+    """A near-dup batch resumed after ``compact_neardup_bands`` learns the
+    compacted buckets its signatures hash into from the observation
+    taken while its band rows materialize, so the band-state read
+    launches no job.  Jobs are attributed through a job group set around
+    the wrapped ``band_state_reader``."""
+    from pyspark.sql import functions as F
+
+    from recsys_mapreduce_mrjob_spark.sources.readers import load_table
+    from recsys_mapreduce_mrjob_spark.streaming import twins
+
+    sc = spark.sparkContext
+    src, state = str(tmp_path / "docs"), str(tmp_path / "state")
+    docs = load_table(spark, smoke_dir, "documents").select(
+        "doc_id", "text", "lang", "source"
+    )
+    twins._write_keyed_chunks(docs.where(F.col("doc_id") % 2 == 0), "doc_id", src, 1)
+    twins.incremental_neardup(spark, src, state)
+    assert twins.compact_neardup_bands(spark, state, n_buckets=16) is not None
+    twins._write_keyed_chunks(docs.where(F.col("doc_id") % 2 == 1), "doc_id", src, 1)
+
+    tag = f"band-read-{tmp_path.name}"
+    band_state_reader = twins.band_state_reader
+    reads: list[int] = []
+
+    def grouped(*args):
+        reads.append(args[3])
+        sc.setJobGroup(f"{tag}-{args[3]}", "band state read")
+        try:
+            return band_state_reader(*args)
+        finally:
+            sc.setJobGroup(f"{tag}-rest", "rest")
+
+    monkeypatch.setattr(twins, "band_state_reader", grouped)
+    twins.incremental_neardup(spark, src, state)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert reads == [1]
+    assert list(sc.statusTracker().getJobIdsForGroup(f"{tag}-1")) == []

@@ -19,6 +19,7 @@ restarted from the same checkpoint:
 from __future__ import annotations
 
 import os
+import shutil
 import time
 from collections import Counter
 
@@ -833,3 +834,170 @@ def test_semantic_dedup_tolerates_zero_and_null_embeddings(spark, smoke_dir, tmp
                 (null_id, None),
             }
     assert drops[0] == drops[1] and sum(drops[1].values()) > 0
+
+
+@pytest.fixture(scope="module")
+def curation_drain(spark, smoke_dir, tmp_path_factory):
+    """A 2-chunk ``incremental_curation`` drain: its source dir, its state
+    dir (tests compact copies of it) and its curated multiset."""
+    from recsys_mapreduce_mrjob_spark.streaming.twins import (
+        incremental_curation,
+        read_curated_state,
+        write_doc_chunks,
+    )
+
+    base = tmp_path_factory.mktemp("curation_drain")
+    src, state = str(base / "src"), str(base / "state")
+    write_doc_chunks(spark, smoke_dir, src, n_chunks=2)
+    incremental_curation(spark, src, state)
+    return src, state, _multiset(read_curated_state(spark, state))
+
+
+def _compact_log(spark, state: str, log: str):
+    from recsys_mapreduce_mrjob_spark.streaming import twins
+
+    if log == "pairs":
+        return twins.compact_pair_log(spark, f"{state}/pairs")
+    return twins.compact_neardup_bands(spark, state, n_buckets=16)
+
+
+@pytest.mark.parametrize("log", ["pairs", "bands"])
+@pytest.mark.parametrize(
+    "crash", ["roll_forward", "roll_back", "stale_staging", "leftover_displaced"]
+)
+def test_log_compaction_recovers_from_swap_crash(
+    spark, curation_drain, tmp_path, log, crash
+):
+    """The four swap crash windows ``tests/test_ann_compaction.py`` pins
+    for the IVF index, for both append-only log compactors of a curation
+    state: a publish-ready staging with ``v-1`` renamed away rolls
+    forward; a partial staging with ``v-1`` renamed away rolls back; a
+    staging left beside a standing ``v-1`` (even a marked one) is
+    discarded; a displaced tree left after the swap is dropped.  Each
+    re-run ends with a complete ``v-1``, no leftovers and the curated
+    relation the drain had."""
+    from recsys_mapreduce_mrjob_spark.streaming.twins import read_curated_state
+
+    _, drained, expected = curation_drain
+    state = str(tmp_path / "state")
+    shutil.copytree(drained, state)
+    target = _compact_log(spark, state, log)
+    staging, displaced = f"{target}.compact_staging", f"{target}.displaced"
+    marker = f"{staging}/_COMPACT_PUBLISH_READY"
+    if crash == "roll_forward":
+        shutil.copytree(target, staging)
+        open(marker, "w").close()
+        os.rename(target, displaced)
+    elif crash == "roll_back":
+        os.makedirs(staging)
+        os.rename(target, displaced)
+    elif crash == "stale_staging":
+        os.makedirs(staging)
+        open(marker, "w").close()
+    else:
+        os.makedirs(displaced)
+        with open(f"{displaced}/leftover", "w") as fh:
+            fh.write("old tree remnant")
+    assert _compact_log(spark, state, log) == target
+    assert _multiset(read_curated_state(spark, state)) == expected
+    assert os.path.exists(f"{target}/_SUCCESS")
+    assert not os.path.exists(f"{target}/_COMPACT_PUBLISH_READY")
+    assert not os.path.exists(staging) and not os.path.exists(displaced)
+
+
+@pytest.mark.parametrize("log", ["pairs", "bands"])
+def test_log_compaction_keeps_uncommitted_version_for_replay(
+    spark, curation_drain, tmp_path, log
+):
+    """A log version whose checkpoint commit never landed is replayed on
+    resume, and the replay overwrites it: compaction merges only the
+    committed versions into ``v-1``, leaves the uncommitted ``v1``
+    verbatim, and the replay ends on the curated relation the drain
+    had."""
+    from recsys_mapreduce_mrjob_spark.streaming.twins import (
+        _version_of,
+        incremental_curation,
+        read_curated_state,
+    )
+
+    src, drained, expected = curation_drain
+    state = str(tmp_path / "state")
+    shutil.copytree(drained, state)
+    # Crash before batch 1 commits: neither the commit nor its checksum.
+    for name in ("1", ".1.crc"):
+        if os.path.exists(f"{state}/_checkpoint/commits/{name}"):
+            os.remove(f"{state}/_checkpoint/commits/{name}")
+    uncommitted = sorted(os.listdir(f"{state}/{log}/v1"))
+    assert _compact_log(spark, state, log) == f"{state}/{log}/v-1"
+    versions = sorted(
+        d for d in os.listdir(f"{state}/{log}") if _version_of(d) is not None
+    )
+    assert versions == ["v-1", "v1"]
+    assert sorted(os.listdir(f"{state}/{log}/v1")) == uncommitted
+    replayed: list[int] = []
+    incremental_curation(spark, src, state, on_batch=replayed.append)
+    assert replayed == [1]
+    assert _multiset(read_curated_state(spark, state)) == expected
+
+
+def test_log_compaction_of_uncommitted_state_returns_none(spark, smoke_dir, tmp_path):
+    """Both log compactors return the ``v-1`` path only when one exists: on
+    a state whose only version is uncommitted they merge nothing, return
+    None and write no ``v-1``."""
+    from recsys_mapreduce_mrjob_spark.streaming.twins import (
+        compact_neardup_bands,
+        compact_pair_log,
+        incremental_curation,
+        write_doc_chunks,
+    )
+
+    src, state = str(tmp_path / "src"), str(tmp_path / "state")
+    write_doc_chunks(spark, smoke_dir, src, n_chunks=1)
+    incremental_curation(spark, src, state)
+    os.remove(f"{state}/_checkpoint/commits/0")
+    assert compact_neardup_bands(spark, state) is None
+    assert compact_pair_log(spark, f"{state}/pairs") is None
+    for log in ("bands", "pairs"):
+        assert sorted(os.listdir(f"{state}/{log}")) == ["v0"], log
+
+
+def test_log_reads_launch_no_schema_inference_job(
+    spark, smoke_dir, tmp_path, monkeypatch
+):
+    """Every read of an append-only log goes through ``_read_log`` and
+    reads by its writer's schema: over a 2-chunk curation drain and a
+    2-chunk semantic drain, the two end-state reads and the band and
+    pair-log compactions, no job runs inside the read.  Jobs are
+    attributed through a job group set around the wrapped helper."""
+    from recsys_mapreduce_mrjob_spark.streaming import twins
+
+    sc = spark.sparkContext
+    tag = f"log-read-{tmp_path.name}"
+    read_log = twins._read_log
+    calls: list = []
+
+    def grouped(*args):
+        calls.append(args[2])
+        sc.setJobGroup(f"{tag}-log", "log read")
+        try:
+            return read_log(*args)
+        finally:
+            sc.setJobGroup(f"{tag}-rest", "rest")
+
+    monkeypatch.setattr(twins, "_read_log", grouped)
+    cur_src, cur = str(tmp_path / "docs"), str(tmp_path / "curation")
+    twins.write_doc_chunks(spark, smoke_dir, cur_src, n_chunks=2)
+    twins.incremental_curation(spark, cur_src, cur)
+    sem_src, sem = str(tmp_path / "vecs"), str(tmp_path / "semantic")
+    twins.write_embedding_chunks(spark, smoke_dir, sem_src, n_chunks=2)
+    twins.incremental_semantic_dedup(spark, sem_src, sem)
+    assert twins.read_curated_state(spark, cur) is not None
+    assert twins.read_semantic_state(spark, sem) is not None
+    assert twins.compact_neardup_bands(spark, cur, n_buckets=16) is not None
+    assert twins.compact_pair_log(spark, f"{cur}/pairs") is not None
+    assert twins.compact_pair_log(spark, f"{sem}/pairs") is not None
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    # Band state of both curation batches, batch 1's vector state, the
+    # two pair-log reads and the three compactions' sources.
+    assert len(calls) == 8, calls
+    assert list(sc.statusTracker().getJobIdsForGroup(f"{tag}-log")) == []
